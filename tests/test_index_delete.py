@@ -9,13 +9,10 @@ from pyspark.sql import functions as F
 
 from vectorsearch_applications_spark.operators.ann import (
     _assign,
-    ivf_index_compact,
-    ivf_index_delete,
     ivf_save_index,
     ivf_search_indexed,
 )
 from vectorsearch_applications_spark.operators.bm25 import (
-    bm25_index_compact,
     bm25_index_delete,
     bm25_save_index,
     bm25_search_indexed,
@@ -23,15 +20,15 @@ from vectorsearch_applications_spark.operators.bm25 import (
 from vectorsearch_applications_spark.operators.dedup import (
     minhash_bands,
     minhash_index_append,
-    minhash_index_compact,
-    minhash_index_delete,
     minhash_load_index,
     minhash_save_index,
     minhash_screen_batch,
-    simhash_index_compact,
-    simhash_index_delete,
     simhash_load_index,
     simhash_save_index,
+)
+from vectorsearch_applications_spark.sources.index_catalog import (
+    index_compact,
+    index_delete,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -66,10 +63,10 @@ def test_minhash_delete_equals_rebuild_and_compact(spark, tmp_path):
     )
 
     minhash_save_index(docs, root, "c")
-    n = minhash_index_delete(spark, root, "c", deleted)
+    n = index_delete(spark, root, "c", "minhash", deleted)
     assert n == deleted.count()
     # replay is a no-op
-    assert minhash_index_delete(spark, root, "c", deleted) == 0
+    assert index_delete(spark, root, "c", "minhash", deleted) == 0
 
     want = {
         (r["doc_a"], r["doc_b"])
@@ -95,7 +92,7 @@ def test_minhash_delete_equals_rebuild_and_compact(spark, tmp_path):
     live_before = {
         tuple(r) for r in minhash_load_index(spark, root, "c").collect()
     }
-    kept = minhash_index_compact(spark, root, "c")
+    kept = index_compact(spark, root, "c", "minhash")
     live_after = {
         tuple(r) for r in minhash_load_index(spark, root, "c").collect()
     }
@@ -107,7 +104,7 @@ def test_minhash_reappend_revives_deleted_doc(spark, tmp_path):
     docs = _docs(spark, 0, 100)
     minhash_save_index(docs, root, "c")
     victim = docs.filter(F.col("doc_id") == 7)
-    minhash_index_delete(spark, root, "c", victim.select("doc_id"))
+    index_delete(spark, root, "c", "minhash", victim.select("doc_id"))
     assert (
         minhash_load_index(spark, root, "c")
         .filter(F.col("doc_id") == 7)
@@ -131,11 +128,11 @@ def test_simhash_delete_and_compact(spark, tmp_path):
     docs = _docs(spark, 0, 120)
     simhash_save_index(docs, root, "c")
     deleted = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
-    assert simhash_index_delete(spark, root, "c", deleted) == deleted.count()
+    assert index_delete(spark, root, "c", "simhash", deleted) == deleted.count()
     live = simhash_load_index(spark, root, "c")
     assert live.filter(F.col("doc_id") % 3 == 0).count() == 0
     before = {tuple(r) for r in live.collect()}
-    simhash_index_compact(spark, root, "c")
+    index_compact(spark, root, "c", "simhash")
     after = {
         tuple(r) for r in simhash_load_index(spark, root, "c").collect()
     }
@@ -149,7 +146,7 @@ def test_ivf_delete_equals_fixed_codebook_reassign(spark, tmp_path):
     )
     ivf_save_index(emb, root, "e", n_centroids=8)
     deleted = emb.filter(F.col("vec_id") % 4 == 0).select("vec_id")
-    assert ivf_index_delete(spark, root, "e", deleted) == deleted.count()
+    assert index_delete(spark, root, "e", "ivf", deleted) == deleted.count()
 
     import os
 
@@ -180,7 +177,7 @@ def test_ivf_delete_equals_fixed_codebook_reassign(spark, tmp_path):
     hits = ivf_search_indexed(spark, root, "e", emb, q, k=10, nprobe=8)
     assert all(r["vec_id"] % 4 != 0 for r in hits.collect())
 
-    kept = ivf_index_compact(spark, root, "e")
+    kept = index_compact(spark, root, "e", "ivf")
     assert kept == len(want)
 
 
@@ -235,7 +232,7 @@ def test_bm25_delete_equals_rebuild_on_survivors(spark, tmp_path):
     assert abs(fc["avgdl"] - rc["avgdl"]) < 1e-9
 
     # compaction preserves search results and drops the tombstone join
-    bm25_index_compact(spark, root, "full")
+    index_compact(spark, root, "full", "bm25")
     assert res("full") == res("fresh")
 
 

@@ -762,6 +762,51 @@ def test_quantize_embeddings_codes_and_zero_vector(spark):
     assert rows[1]["codes"] == [0, 0, 0, 0] and rows[1]["scale"] == 0.0
 
 
+def test_quantized_dot_mixed_str_and_column_inputs(spark):
+    """Every mix of column names and Columns scores like the all-name
+    form: a name among Columns binds as a column, never a literal."""
+    import itertools
+
+    from vectorsearch_applications_spark.operators.quantize import (
+        quantized_dot,
+    )
+
+    df = spark.createDataFrame(
+        [([3, -2, 5], [1, 4, -1], 0.5, 0.25), ([0, 7, 1], [2, 2, 2], 0.1, 2.0)],
+        "dc array<int>, qc array<int>, ds double, qs double",
+    )
+    names = ("dc", "qc", "ds", "qs")
+    want = [r[0] for r in df.select(quantized_dot(*names)).collect()]
+    assert want == [0.5 * 0.25 * (3 - 8 - 5), 0.1 * 2.0 * (14 + 2)]
+    for mask in itertools.product((False, True), repeat=4):
+        args = [F.col(n) if m else n for n, m in zip(names, mask)]
+        got = [r[0] for r in df.select(quantized_dot(*args)).collect()]
+        assert got == want, mask
+
+
+def test_profile_columns_escapes_awkward_column_names(spark):
+    """Names with a backslash, a single quote or a space round-trip
+    through column_name with their stats intact."""
+    from vectorsearch_applications_spark.operators.profiling import (
+        profile_columns,
+    )
+
+    cols = ["back\\slash", "it's", "two words"]
+    df = spark.createDataFrame(
+        [(1, 10, None), (2, 10, 5), (None, 30, 5)],
+        ", ".join(f"`{c}` int" for c in cols),
+    )
+    got = {
+        r["column_name"]: tuple(r)[1:]
+        for r in profile_columns(df, cols).collect()
+    }
+    assert got == {
+        "back\\slash": (1, 2, "1", "2"),
+        "it's": (0, 2, "10", "30"),
+        "two words": (1, 1, "5", "5"),
+    }
+
+
 def test_quantized_search_recall_vs_exact(spark):
     """Int8 quantization must preserve cosine ranking almost perfectly:
     top-10 overlap with exact float kNN >= 0.8 averaged over queries."""

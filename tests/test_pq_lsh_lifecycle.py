@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 
 from vectorsearch_applications_spark.operators.lsh import (
     lsh_index_append,
-    lsh_index_compact,
-    lsh_index_delete,
     lsh_planes,
     lsh_save_index,
     lsh_search,
@@ -32,10 +30,12 @@ from vectorsearch_applications_spark.operators.pq import (
     pq_codebook,
     pq_encode,
     pq_index_append,
-    pq_index_compact,
-    pq_index_delete,
     pq_save_index,
     pq_search_indexed,
+)
+from vectorsearch_applications_spark.sources.index_catalog import (
+    index_compact,
+    index_delete,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -102,24 +102,24 @@ def test_lsh_delete_compact_revive(spark, tmp_path):
     deleted = full.filter(F.col("vec_id") % 5 == 0).select("vec_id")
 
     lsh_save_index(full, root, "c")
-    n = lsh_index_delete(spark, root, "c", deleted)
+    n = index_delete(spark, root, "c", "lsh", deleted)
     assert n == deleted.count()
     # replay is a no-op
-    assert lsh_index_delete(spark, root, "c", deleted) == 0
+    assert index_delete(spark, root, "c", "lsh", deleted) == 0
 
     want = lsh_search(survivors, _queries(spark), lsh_planes(4, 64), k=10)
     got = lsh_search_indexed(spark, root, "c", _queries(spark), k=10)
     assert _rows(got) == _rows(want)
 
     # compaction preserves the live view
-    kept = lsh_index_compact(spark, root, "c")
+    kept = index_compact(spark, root, "c", "lsh")
     assert kept == survivors.count()
     got2 = lsh_search_indexed(spark, root, "c", _queries(spark), k=10)
     assert _rows(got2) == _rows(want)
 
     # re-appending a deleted id revives it
     revived = full.filter(F.col("vec_id") == 0)
-    lsh_index_delete(spark, root, "c", revived.select("vec_id"))
+    index_delete(spark, root, "c", "lsh", revived.select("vec_id"))
     lsh_index_append(spark, root, "c", revived)
     got3 = lsh_search_indexed(spark, root, "c", _queries(spark), k=10)
     want3 = lsh_search(
@@ -201,16 +201,16 @@ def test_pq_delete_compact_revive(spark, tmp_path):
     deleted = full.filter(F.col("vec_id") % 5 == 0).select("vec_id")
 
     pq_save_index(full, root, "c")
-    n = pq_index_delete(spark, root, "c", deleted)
+    n = index_delete(spark, root, "c", "pq", deleted)
     assert n == deleted.count()
-    assert pq_index_delete(spark, root, "c", deleted) == 0
+    assert index_delete(spark, root, "c", "pq", deleted) == 0
 
     cb = pq_codebook(full)
     want = pq_adc_search(pq_encode(survivors, cb), cb, _queries(spark), k=10)
     got = pq_search_indexed(spark, root, "c", _queries(spark), k=10)
     assert _rows(got) == _rows(want)
 
-    kept = pq_index_compact(spark, root, "c")
+    kept = index_compact(spark, root, "c", "pq")
     assert kept == survivors.count()
     assert _rows(
         pq_search_indexed(spark, root, "c", _queries(spark), k=10)
@@ -218,7 +218,7 @@ def test_pq_delete_compact_revive(spark, tmp_path):
 
     # revival: re-append one deleted id; it scores again (frozen codebook)
     revived = full.filter(F.col("vec_id") == 0)
-    pq_index_delete(spark, root, "c", revived.select("vec_id"))
+    index_delete(spark, root, "c", "pq", revived.select("vec_id"))
     pq_index_append(spark, root, "c", revived)
     want3 = pq_adc_search(
         pq_encode(survivors.unionByName(revived), cb),
@@ -242,7 +242,7 @@ def test_lsh_revive_changed_vector_no_stale_rows(spark, tmp_path):
     full = _emb(spark)
     lsh_save_index(full, root, "c")
     victim = full.filter(F.col("vec_id") == 0)
-    lsh_index_delete(spark, root, "c", victim.select("vec_id"))
+    index_delete(spark, root, "c", "lsh", victim.select("vec_id"))
     changed = victim.withColumn(
         "embedding", F.transform("embedding", lambda x: -x)
     )
@@ -268,7 +268,7 @@ def test_pq_revive_changed_vector_no_stale_codes(spark, tmp_path):
     full = _emb(spark)
     pq_save_index(full, root, "c")
     victim = full.filter(F.col("vec_id") == 0)
-    pq_index_delete(spark, root, "c", victim.select("vec_id"))
+    index_delete(spark, root, "c", "pq", victim.select("vec_id"))
     changed = victim.withColumn(
         "embedding", F.transform("embedding", lambda x: -x)
     )
@@ -332,11 +332,7 @@ def test_ivf_index_append_matches_frozen_centroid_rebuild(spark, tmp_path):
 
     # changed-content revival: no stale assignment row survives
     victim = full.filter(F.col("vec_id") == 0)
-    from vectorsearch_applications_spark.operators.ann import (
-        ivf_index_delete,
-    )
-
-    ivf_index_delete(spark, root, "c", victim.select("vec_id"))
+    index_delete(spark, root, "c", "ivf", victim.select("vec_id"))
     changed = victim.withColumn(
         "embedding", F.transform("embedding", lambda x: -x)
     )
@@ -487,8 +483,9 @@ def test_index_inventory_reports_families_and_tombstone_debt(
     lsh_save_index(emb, root, "vecs")
     pq_save_index(emb, root, "vecs")
     bm25_save_index(docs, root, "docs")
-    lsh_index_delete(
-        spark, root, "vecs", emb.filter(F.col("vec_id") < 10).select("vec_id")
+    index_delete(
+        spark, root, "vecs", "lsh",
+        emb.filter(F.col("vec_id") < 10).select("vec_id"),
     )
 
     inv = {
@@ -504,7 +501,7 @@ def test_index_inventory_reports_families_and_tombstone_debt(
     assert inv[("vecs", "pq")]["rows"] == inv[("vecs", "pq")]["live_rows"]
 
     # compaction clears the debt
-    lsh_index_compact(spark, root, "vecs")
+    index_compact(spark, root, "vecs", "lsh")
     inv2 = {
         (r["collection"], r["family"]): r
         for r in index_inventory(spark, root).collect()
@@ -586,7 +583,7 @@ def test_tombstone_clear_is_the_undelete_verb(spark, tmp_path):
     full = _emb(spark)
     lsh_save_index(full, root, "c")
     oops = full.filter(F.col("vec_id") < 20).select("vec_id")
-    lsh_index_delete(spark, root, "c", oops)
+    index_delete(spark, root, "c", "lsh", oops)
     buckets, _ = lsh_load_index(spark, root, "c")
     assert buckets.filter(F.col("vec_id") < 20).count() == 0
 
@@ -657,8 +654,9 @@ def test_ivfpq_indexed_live_view_skips_deleted(spark, tmp_path):
     probe = _queries(spark).filter(F.col("query_id") == 0)
     before = ivfpq_search_indexed(spark, root, "c", probe, k=5, nprobe=4)
     assert before.filter(F.col("vec_id") == 0).count() == 1
-    pq_index_delete(
-        spark, root, "c", full.filter(F.col("vec_id") == 0).select("vec_id")
+    index_delete(
+        spark, root, "c", "pq",
+        full.filter(F.col("vec_id") == 0).select("vec_id"),
     )
     after = ivfpq_search_indexed(spark, root, "c", probe, k=5, nprobe=4)
     assert after.filter(F.col("vec_id") == 0).count() == 0
@@ -687,7 +685,7 @@ def test_index_inventory_counts_small_file_debt(spark, tmp_path):
         )
     grown = index_inventory(spark, root).collect()[0]["n_files"]
     assert grown > base
-    lsh_index_compact(spark, root, "v")
+    index_compact(spark, root, "v", "lsh")
     compacted = index_inventory(spark, root).collect()[0]["n_files"]
     assert compacted < grown
 

@@ -14,12 +14,14 @@ from vectorsearch_applications_spark.operators.ann import (
 )
 from vectorsearch_applications_spark.operators.dedup import (
     semantic_index_append,
-    semantic_index_compact,
-    semantic_index_delete,
     semantic_load_centroids,
     semantic_load_index,
     semantic_save_index,
     semantic_screen_batch,
+)
+from vectorsearch_applications_spark.sources.index_catalog import (
+    index_compact,
+    index_delete,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -107,9 +109,9 @@ def test_semantic_delete_compact_revive(spark, tmp_path):
     semantic_save_index(emb, cents, root, "vecs")
 
     victim = emb.filter(F.col("vec_id") == 2).select("vec_id")
-    assert semantic_index_delete(spark, root, "vecs", victim) == 1
+    assert index_delete(spark, root, "vecs", "semantic", victim) == 1
     # replay-idempotent
-    assert semantic_index_delete(spark, root, "vecs", victim) == 0
+    assert index_delete(spark, root, "vecs", "semantic", victim) == 0
     live = semantic_load_index(spark, root, "vecs")
     assert live.filter(F.col("vec_id") == 2).count() == 0
     # a deleted vector stops producing evidence IMMEDIATELY: screen a
@@ -131,7 +133,7 @@ def test_semantic_delete_compact_revive(spark, tmp_path):
         == 1
     )
     # compaction folds the tombstone into a physical rewrite
-    kept = semantic_index_compact(spark, root, "vecs")
+    kept = index_compact(spark, root, "vecs", "semantic")
     assert kept == semantic_load_index(spark, root, "vecs").count()
     assert (
         semantic_load_index(spark, root, "vecs")
@@ -148,7 +150,7 @@ def test_semantic_revive_changed_vector_no_stale_rows(spark, tmp_path):
     semantic_save_index(emb, cents, root, "vecs")
 
     victim = emb.filter(F.col("vec_id") == 4).select("vec_id")
-    semantic_index_delete(spark, root, "vecs", victim)
+    index_delete(spark, root, "vecs", "semantic", victim)
     # re-ingest id 4 with DIFFERENT content (another vector's embedding)
     changed = (
         _emb(spark)
@@ -192,8 +194,9 @@ def test_semantic_family_in_index_inventory(spark, tmp_path):
     cents = _centroids(_emb(spark))
     root = str(tmp_path)
     semantic_save_index(emb, cents, root, "vecs")
-    semantic_index_delete(
-        spark, root, "vecs", emb.filter(F.col("vec_id") == 0).select("vec_id")
+    index_delete(
+        spark, root, "vecs", "semantic",
+        emb.filter(F.col("vec_id") == 0).select("vec_id"),
     )
     inv = {
         r["family"]: r for r in index_inventory(spark, root).collect()
@@ -327,8 +330,9 @@ def test_semantic_live_view_prunes_centroid_partitions(spark, tmp_path):
     semantic_save_index(emb.filter(F.col("vec_id") < 200), cents, root, "c")
     # a standing tombstone makes the live view a real anti-join — the
     # pruning claim must survive the wrapper, not just a bare scan
-    semantic_index_delete(
-        spark, root, "c", emb.filter(F.col("vec_id") == 0).select("vec_id")
+    index_delete(
+        spark, root, "c", "semantic",
+        emb.filter(F.col("vec_id") == 0).select("vec_id"),
     )
     pruned = semantic_load_index(spark, root, "c").filter(
         F.col("centroid_id").isin([1, 3])

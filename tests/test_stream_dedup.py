@@ -335,10 +335,12 @@ def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
         assign_nearest_centroid,
     )
     from vectorsearch_applications_spark.operators.dedup import (
-        semantic_index_delete,
         semantic_load_centroids,
         semantic_load_index,
         semantic_save_index,
+    )
+    from vectorsearch_applications_spark.sources.index_catalog import (
+        index_delete,
     )
     from vectorsearch_applications_spark.streaming.dedup import (
         stream_semantic_screen,
@@ -376,8 +378,9 @@ def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
         ).collect()
     }
     # tombstoning vec 2 removes its collisions from the live view
-    semantic_index_delete(
-        spark, root, "c", standing.filter(F.col("vec_id") == 2).select("vec_id")
+    index_delete(
+        spark, root, "c", "semantic",
+        standing.filter(F.col("vec_id") == 2).select("vec_id"),
     )
     after = {
         (r["new_vec_id"], r["standing_vec_id"])

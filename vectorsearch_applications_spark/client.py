@@ -35,14 +35,16 @@ from .operators.bm25 import bm25_search_multifield
 from .operators.hybrid import hybrid_search as _fuse
 from .operators.knn import knn_search
 from .sources import collections as _coll
+from .sources import index_catalog as _idx
+from .sources.io import one_slice_df
 
 _EMBED_DIM = 16
 
-# Every persisted index family the facade can build next to a collection
-# (<root>/<name>__<family>). The staleness protocol below covers all of
-# them: a mutated collection flags its indexes on disk so implicit reuse
-# falls back to in-plan scoring until the index is repaired or rebuilt.
-_INDEX_FAMILIES = ("bm25", "ivf", "pq", "lsh", "minhash", "simhash", "semantic")
+# the text index's sidecar naming the (id_col, text_col) view it covers
+_TEXT_META = "_facade_meta.json"
+# what a facade probe reads inside an index directory when it needs
+# more than the directory: the text sidecar, the IVFADC coarse centroids
+_PROBE_ENTRY = {"bm25": _TEXT_META, "ivfpq": "centroids"}
 
 
 def exact_match(prop: str, value) -> Column:
@@ -127,26 +129,28 @@ class SparkSearchClient:
     #
     # Session caches invalidate in memory, but the ON-DISK indexes a
     # mutated collection leaves behind stay authoritative to implicit
-    # reuse (keyword_search's text-index probe, _ann_search's isdir
-    # checks) — so an unfiltered search after a MERGE could return
-    # pre-mutation postings, including deleted docs (r10 advice,
-    # medium). Every mutating verb therefore flags the collection's
-    # index directories with a ``_stale.json`` marker; implicit reuse
-    # skips flagged indexes (falling back to in-plan scoring, which is
-    # always correct), and the marker clears only when the index is
-    # repaired (the documented batch_index_data → append_to_*_index
-    # flow) or rebuilt (build_*_index).
+    # reuse (the _fresh_index probes) — so an unfiltered search after a
+    # MERGE could return pre-mutation postings, including deleted docs
+    # (r10 advice, medium). Every mutating verb therefore flags every
+    # family's index directory (sources/index_catalog.FAMILIES) with a
+    # ``_stale.json`` marker; implicit reuse skips flagged indexes
+    # (falling back to in-plan scoring, which is always correct), and
+    # the marker clears only when the index is repaired (the documented
+    # batch_index_data → append_to_*_index flow) or rebuilt
+    # (build_*_index).
 
-    def _index_dir(self, name: str, family: str) -> str:
-        return os.path.join(self.root, f"{name}__{family}")
+    def _index_dir(self, name: str, suffix: str) -> str:
+        return _idx.index_dir(self.root, name, suffix)
+
+    def _stale_path(self, name: str, suffix: str) -> str:
+        return os.path.join(self._index_dir(name, suffix), "_stale.json")
 
     def _mark_indexes_stale(self, name: str, verb: str) -> None:
         import json
 
-        for fam in _INDEX_FAMILIES:
-            d = self._index_dir(name, fam)
-            if os.path.isdir(d):
-                p = os.path.join(d, "_stale.json")
+        for fam in _idx.FAMILIES:
+            if os.path.isdir(self._index_dir(name, fam)):
+                p = self._stale_path(name, fam)
                 # never DOWNGRADE an existing flag: if a merge/rollback/
                 # recreate already flagged this index (append cannot
                 # repair those), a later batch_index_data must not
@@ -158,19 +162,34 @@ class SparkSearchClient:
                 with open(p, "w") as f:
                     json.dump({"verb": verb}, f)
 
-    def _stale_meta(self, name: str, family: str) -> dict | None:
+    def _stale_meta(self, name: str, suffix: str) -> dict | None:
         import json
 
-        p = os.path.join(self._index_dir(name, family), "_stale.json")
+        p = self._stale_path(name, suffix)
         if not os.path.isfile(p):
             return None
         with open(p) as f:
             return json.load(f)
 
-    def _clear_stale(self, name: str, family: str) -> None:
-        p = os.path.join(self._index_dir(name, family), "_stale.json")
+    def _clear_stale(self, name: str, suffix: str) -> None:
+        p = self._stale_path(name, suffix)
         if os.path.isfile(p):
             os.remove(p)
+
+    def _fresh_index(self, name: str, kind: str) -> bool:
+        """The one "fresh persisted index exists" rule every implicit
+        reuse shares (keyword arm, ANN backends, late-interaction prune,
+        stream_rag): the directory (and the entry the probe reads) exists
+        and no collection mutation has flagged it stale."""
+        suffix = _idx.family(kind).suffix
+        return (
+            os.path.exists(
+                os.path.join(
+                    self._index_dir(name, suffix), _PROBE_ENTRY.get(kind, "")
+                )
+            )
+            and self._stale_meta(name, suffix) is None
+        )
 
     def _check_append_repairs_stale(self, name: str, family: str) -> None:
         """Gate for the append verbs: an append REPAIRS an index flagged
@@ -188,12 +207,8 @@ class SparkSearchClient:
             )
 
     def _drop_index_dirs(self, name: str) -> None:
-        import shutil
-
-        for fam in _INDEX_FAMILIES:
-            d = self._index_dir(name, fam)
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
+        for fam in _idx.FAMILIES:
+            _idx.index_reset(self.root, name, fam)
 
     def create_collection(
         self,
@@ -307,9 +322,7 @@ class SparkSearchClient:
         # live data
         import json
 
-        pre = {
-            fam: self._stale_meta(name, fam) for fam in _INDEX_FAMILIES
-        }
+        pre = {fam: self._stale_meta(name, fam) for fam in _idx.FAMILIES}
         self._mark_indexes_stale(name, "recover")
         action = _coll.recover_collection(self.root, name)
         if action not in ("promoted_staging", "restored_old"):
@@ -320,9 +333,7 @@ class SparkSearchClient:
                     # put back the pre-existing marker verbatim — a
                     # repairable batch_index_data flag must not be
                     # upgraded by a recovery that touched nothing
-                    p = os.path.join(
-                        self._index_dir(name, fam), "_stale.json"
-                    )
+                    p = self._stale_path(name, fam)
                     if os.path.isdir(os.path.dirname(p)):
                         with open(p, "w") as f:
                             json.dump(meta, f)
@@ -386,11 +397,13 @@ class SparkSearchClient:
         session stats cache (unfiltered only — a filter predicate
         changes the corpus view, so filtered searches rebuild on the
         filtered frame). Output: (query_id, <id_col>, rank, score)."""
-        meta = self._text_index_meta(collection)
+        meta = (
+            self._text_index_meta(collection)
+            if filters is None and self._fresh_index(collection, "bm25")
+            else None
+        )
         if (
-            filters is None
-            and meta is not None
-            and self._stale_meta(collection, "bm25") is None
+            meta is not None
             and list(query_properties) == [meta["text_col"]]
             and id_col == meta["id_col"]
         ):
@@ -423,9 +436,7 @@ class SparkSearchClient:
     def _text_index_meta(self, collection: str) -> dict | None:
         import json
 
-        p = os.path.join(
-            self.root, f"{collection}__bm25", "_facade_meta.json"
-        )
+        p = os.path.join(self._index_dir(collection, "bm25"), _TEXT_META)
         if not os.path.isfile(p):
             return None
         with open(p) as f:
@@ -454,7 +465,7 @@ class SparkSearchClient:
             self._load(collection), self.root, collection,
             id_col=id_col, text_col=text_col,
         )
-        with open(os.path.join(path, "_facade_meta.json"), "w") as f:
+        with open(os.path.join(path, _TEXT_META), "w") as f:
             json.dump({"id_col": id_col, "text_col": text_col}, f)
         self._clear_stale(collection, "bm25")  # a rebuild is the repair
         return path
@@ -490,18 +501,27 @@ class SparkSearchClient:
         """Tombstone docs out of the persisted text index: O(|batch|),
         stats corrected immediately, searches skip the ids via the live
         view (bm25_index_delete). Returns newly-deleted id count."""
-        from .operators.bm25 import bm25_index_delete
-
-        ids = deleted_ids.select(F.col(id_col).alias("doc_id"))
-        return bm25_index_delete(self.spark, self.root, collection, ids)
+        return self._index_delete(
+            collection, _idx.family("bm25"), deleted_ids, id_col
+        )
 
     def compact_text_index(self, collection: str) -> int:
         """Fold accumulated text-index tombstones into a physical
         rewrite (maintenance cadence, like compact_ann_index). Returns
         live postings rows kept."""
-        from .operators.bm25 import bm25_index_compact
+        return _idx.index_compact(self.spark, self.root, collection, "bm25")
 
-        return bm25_index_compact(self.spark, self.root, collection)
+    def _index_delete(
+        self,
+        collection: str,
+        fam: _idx.IndexFamily,
+        deleted_ids: DataFrame,
+        id_col: str,
+    ) -> int:
+        ids = deleted_ids.select(F.col(id_col).alias(fam.id_col))
+        return _idx.index_delete(
+            self.spark, self.root, collection, fam.suffix, ids
+        )
 
     def vector_search(
         self,
@@ -543,16 +563,9 @@ class SparkSearchClient:
         if backend != "exact" and mmr_lambda is not None:
             raise ValueError("mmr_lambda requires backend='exact'")
         docs = self._docs(collection, filters)
-        if vector_col in docs.columns:
-            corpus = docs.select(
-                F.col(id_col).alias("vec_id"), F.col(vector_col).alias("embedding")
-            )
-            dim = self._dim(collection, vector_col, corpus)
-        else:
-            corpus = self._hash_corpus(
-                collection, docs, id_col, text_col, filters is not None
-            )
-            dim = self._embed_dim
+        corpus, dim = self._vectors(
+            collection, docs, id_col, vector_col, text_col, filters is not None
+        )
         q = self._query_df(query).select(
             "query_id", self._embed_query("query").alias("query_vec")
         )
@@ -619,49 +632,29 @@ class SparkSearchClient:
         'ivfpq' (PQ codebook + codes partitioned by coarse centroid), or
         'lsh' (bucket-partitioned sign-projection table + 3-int meta —
         appends to it are exact, operators/lsh.py)."""
-        from .operators.ann import ivf_build, ivf_save_index
-        from .operators.lsh import lsh_save_index
-        from .operators.pq import pq_save_index
+        from .operators import ann, lsh, pq
 
-        docs = self._load(collection)
-        if vector_col in docs.columns:
-            corpus = docs.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vector_col).alias("embedding"),
-            )
-            dim = self._dim(collection, vector_col, corpus)
-        else:
-            corpus = self._hash_corpus(
-                collection, docs, id_col, text_col, filtered=False
-            )
-            dim = self._embed_dim
-        if kind == "ivf":
-            path = ivf_save_index(
-                corpus,
-                self.root,
-                collection,
-                n_centroids=n_centroids,
+        fam = _idx.family(kind, "ann")
+        corpus, dim = self._vectors(
+            collection, self._load(collection), id_col, vector_col, text_col,
+            filtered=False,
+        )
+        save = {
+            "ivf": lambda: ann.ivf_save_index(
+                corpus, self.root, collection, n_centroids=n_centroids,
                 refine_iterations=refine_iterations,
-            )
-        elif kind == "ivfpq":
-            cents, _ = ivf_build(corpus, n_centroids=n_centroids)
-            n_sub = 8 if dim % 8 == 0 else 1
-            path = pq_save_index(
-                corpus,
-                self.root,
-                collection,
-                n_codes=n_codes,
-                n_sub=n_sub,
-                dim=dim,
-                centroids=cents,
-            )
-        elif kind == "lsh":
-            path = lsh_save_index(corpus, self.root, collection, dim=dim)
-        else:
-            raise ValueError(
-                f"unknown index kind {kind!r} (use ivf|ivfpq|lsh)"
-            )
-        self._clear_stale(collection, "pq" if kind == "ivfpq" else kind)
+            ),
+            "ivfpq": lambda: pq.pq_save_index(
+                corpus, self.root, collection, n_codes=n_codes,
+                n_sub=8 if dim % 8 == 0 else 1, dim=dim,
+                centroids=ann.ivf_build(corpus, n_centroids=n_centroids)[0],
+            ),
+            "lsh": lambda: lsh.lsh_save_index(
+                corpus, self.root, collection, dim=dim
+            ),
+        }
+        path = save[fam.kind]()
+        self._clear_stale(collection, fam.suffix)
         return path
 
     def append_to_ann_index(
@@ -681,41 +674,23 @@ class SparkSearchClient:
         on-disk append (frozen centroids/codebook for ivf/ivfpq — periodic
         full build_ann_index handles drift; exact for lsh). Returns the
         appended vector count."""
-        from .operators.ann import ivf_index_append
-        from .operators.lsh import lsh_index_append
-        from .operators.pq import pq_index_append
+        from .operators import ann, lsh, pq
 
-        if vector_col in new_rows.columns:
-            corpus = new_rows.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vector_col).alias("embedding"),
-            )
-            dim = self._dim(collection, vector_col, corpus)
-        else:
-            corpus = hash_embed_ids(
-                new_rows.select(id_col, text_col),
-                id_col,
-                text_col,
-                self._embed_dim,
-            ).select(F.col(id_col).alias("vec_id"), "embedding")
-            dim = self._embed_dim
-        fam = "pq" if kind == "ivfpq" else kind
-        if kind in ("ivf", "ivfpq", "lsh"):
-            self._check_append_repairs_stale(collection, fam)
-        if kind == "ivf":
-            n = ivf_index_append(self.spark, self.root, collection, corpus)
-        elif kind == "ivfpq":
-            # geometry resolves from the SAVED codebook (pq_index_append)
-            # — passing the facade's recomputed n_sub/dim here could only
-            # ever agree or corrupt, so pass nothing
-            n = pq_index_append(self.spark, self.root, collection, corpus)
-        elif kind == "lsh":
-            n = lsh_index_append(self.spark, self.root, collection, corpus)
-        else:
-            raise ValueError(
-                f"unknown index kind {kind!r} (use ivf|ivfpq|lsh)"
-            )
-        self._clear_stale(collection, fam)
+        fam = _idx.family(kind, "ann")
+        corpus, _ = self._vectors(
+            collection, new_rows, id_col, vector_col, text_col, filtered=True
+        )
+        self._check_append_repairs_stale(collection, fam.suffix)
+        # ivfpq geometry resolves from the SAVED codebook (pq_index_append)
+        # — passing the facade's recomputed n_sub/dim could only ever
+        # agree or corrupt, so no family gets more than the batch
+        append = {
+            "ivf": ann.ivf_index_append,
+            "ivfpq": pq.pq_index_append,
+            "lsh": lsh.lsh_index_append,
+        }[fam.kind]
+        n = append(self.spark, self.root, collection, corpus)
+        self._clear_stale(collection, fam.suffix)
         return n
 
     def delete_from_ann_index(
@@ -730,19 +705,8 @@ class SparkSearchClient:
         weaviate_interface_v4.py delete flow): O(|batch|), searches skip
         the ids immediately via the live view. ``deleted_ids``: any frame
         with ``id_col``. Returns newly-deleted id count."""
-        from .operators.ann import ivf_index_delete
-        from .operators.lsh import lsh_index_delete
-        from .operators.pq import pq_index_delete
-
-        ids = deleted_ids.select(F.col(id_col).alias("vec_id"))
-        if kind == "ivf":
-            return ivf_index_delete(self.spark, self.root, collection, ids)
-        if kind == "ivfpq":
-            return pq_index_delete(self.spark, self.root, collection, ids)
-        if kind == "lsh":
-            return lsh_index_delete(self.spark, self.root, collection, ids)
-        raise ValueError(
-            f"unknown index kind {kind!r} (use ivf|ivfpq|lsh)"
+        return self._index_delete(
+            collection, _idx.family(kind, "ann"), deleted_ids, id_col
         )
 
     def compact_ann_index(self, collection: str, kind: str = "ivf") -> int:
@@ -750,18 +714,8 @@ class SparkSearchClient:
         the maintenance cadence (sources/index_catalog.index_inventory
         reports the per-index tombstone debt that schedules this).
         Returns live rows kept."""
-        from .operators.ann import ivf_index_compact
-        from .operators.lsh import lsh_index_compact
-        from .operators.pq import pq_index_compact
-
-        if kind == "ivf":
-            return ivf_index_compact(self.spark, self.root, collection)
-        if kind == "ivfpq":
-            return pq_index_compact(self.spark, self.root, collection)
-        if kind == "lsh":
-            return lsh_index_compact(self.spark, self.root, collection)
-        raise ValueError(
-            f"unknown index kind {kind!r} (use ivf|ivfpq|lsh)"
+        return _idx.index_compact(
+            self.spark, self.root, collection, _idx.family(kind, "ann").suffix
         )
 
     # -- dedup indexes -----------------------------------------------------
@@ -813,12 +767,7 @@ class SparkSearchClient:
         to ONE family — passing either to a family it cannot affect
         raises instead of silently ignoring it (same contract as the
         append verb)."""
-        from .operators.ann import ivf_build
-        from .operators.dedup import (
-            minhash_save_index,
-            semantic_save_index,
-            simhash_save_index,
-        )
+        from .operators import ann, dedup
 
         if max_hamming is not None and kind != "simhash":
             raise ValueError(
@@ -830,28 +779,30 @@ class SparkSearchClient:
                 f"n_centroids sizes the semantic family's codebook; the "
                 f"{kind!r} index cannot use it"
             )
+        fam = _idx.family(kind, "dedup")
         corpus = self._dedup_corpus(
             self._load(collection), kind, id_col, text_col, vector_col
         )
-        if kind == "minhash":
-            path = minhash_save_index(corpus, self.root, collection)
-        elif kind == "simhash":
-            path = simhash_save_index(
+        save = {
+            "minhash": lambda: dedup.minhash_save_index(
+                corpus, self.root, collection
+            ),
+            "simhash": lambda: dedup.simhash_save_index(
+                corpus, self.root, collection,
+                max_hamming=3 if max_hamming is None else max_hamming,
+            ),
+            "semantic": lambda: dedup.semantic_save_index(
                 corpus,
+                ann.ivf_build(
+                    corpus,
+                    n_centroids=16 if n_centroids is None else n_centroids,
+                )[0],
                 self.root,
                 collection,
-                max_hamming=3 if max_hamming is None else max_hamming,
-            )
-        elif kind == "semantic":
-            cents, _ = ivf_build(
-                corpus, n_centroids=16 if n_centroids is None else n_centroids
-            )
-            path = semantic_save_index(corpus, cents, self.root, collection)
-        else:
-            raise ValueError(
-                f"unknown dedup index kind {kind!r} (use minhash|simhash|semantic)"
-            )
-        self._clear_stale(collection, kind)
+            ),
+        }
+        path = save[fam.kind]()
+        self._clear_stale(collection, fam.suffix)
         return path
 
     def append_to_dedup_index(
@@ -883,11 +834,7 @@ class SparkSearchClient:
         makes at-least-once foreachBatch ingest idempotent: redelivered
         vec_ids already in the standing index are screened but not
         re-appended."""
-        from .operators.dedup import (
-            minhash_index_append,
-            semantic_index_append,
-            simhash_index_append,
-        )
+        from .operators import dedup
 
         if threshold is not None and kind != "semantic":
             raise ValueError(
@@ -906,31 +853,25 @@ class SparkSearchClient:
                 "(re-appending a redelivered id duplicates band rows — "
                 "tombstone + compact instead)"
             )
+        fam = _idx.family(kind, "dedup")
         batch = self._dedup_corpus(new_rows, kind, id_col, text_col, vector_col)
-        if kind in ("minhash", "simhash", "semantic"):
-            self._check_append_repairs_stale(collection, kind)
-        if kind == "minhash":
-            out = minhash_index_append(
+        self._check_append_repairs_stale(collection, fam.suffix)
+        append = {
+            "minhash": lambda: dedup.minhash_index_append(
                 self.spark, self.root, collection, batch
-            )
-        elif kind == "simhash":
-            out = simhash_index_append(
-                self.spark, self.root, collection, batch, max_hamming=max_hamming
-            )
-        elif kind == "semantic":
-            out = semantic_index_append(
-                self.spark,
-                self.root,
-                collection,
-                batch,
+            ),
+            "simhash": lambda: dedup.simhash_index_append(
+                self.spark, self.root, collection, batch,
+                max_hamming=max_hamming,
+            ),
+            "semantic": lambda: dedup.semantic_index_append(
+                self.spark, self.root, collection, batch,
                 0.4 if threshold is None else threshold,
                 dedupe_redelivered=dedupe_redelivered,
-            )
-        else:
-            raise ValueError(
-                f"unknown dedup index kind {kind!r} (use minhash|simhash|semantic)"
-            )
-        self._clear_stale(collection, kind)
+            ),
+        }
+        out = append[fam.kind]()
+        self._clear_stale(collection, fam.suffix)
         return out
 
     def delete_from_dedup_index(
@@ -943,44 +884,39 @@ class SparkSearchClient:
         """Tombstone docs out of a persisted dedup index: deleted docs
         stop producing collision evidence immediately. Returns the
         newly-deleted id count."""
-        from .operators.dedup import (
-            minhash_index_delete,
-            semantic_index_delete,
-            simhash_index_delete,
-        )
-
-        if kind == "minhash":
-            ids = deleted_ids.select(F.col(id_col).alias("doc_id"))
-            return minhash_index_delete(self.spark, self.root, collection, ids)
-        if kind == "simhash":
-            ids = deleted_ids.select(F.col(id_col).alias("doc_id"))
-            return simhash_index_delete(self.spark, self.root, collection, ids)
-        if kind == "semantic":
-            ids = deleted_ids.select(F.col(id_col).alias("vec_id"))
-            return semantic_index_delete(self.spark, self.root, collection, ids)
-        raise ValueError(
-            f"unknown dedup index kind {kind!r} (use minhash|simhash|semantic)"
+        return self._index_delete(
+            collection, _idx.family(kind, "dedup"), deleted_ids, id_col
         )
 
     def compact_dedup_index(self, collection: str, kind: str = "minhash") -> int:
         """Fold accumulated dedup-index tombstones into a physical
         rewrite (scheduled off ``index_inventory``'s debt report, like
         ``compact_ann_index``). Returns live rows kept."""
-        from .operators.dedup import (
-            minhash_index_compact,
-            semantic_index_compact,
-            simhash_index_compact,
+        return _idx.index_compact(
+            self.spark, self.root, collection,
+            _idx.family(kind, "dedup").suffix,
         )
 
-        if kind == "minhash":
-            return minhash_index_compact(self.spark, self.root, collection)
-        if kind == "simhash":
-            return simhash_index_compact(self.spark, self.root, collection)
-        if kind == "semantic":
-            return semantic_index_compact(self.spark, self.root, collection)
-        raise ValueError(
-            f"unknown dedup index kind {kind!r} (use minhash|simhash|semantic)"
-        )
+    def _vectors(
+        self,
+        collection: str,
+        rows: DataFrame,
+        id_col: str,
+        vector_col: str,
+        text_col: str,
+        filtered: bool,
+    ) -> tuple[DataFrame, int]:
+        """(vec_id, embedding) view of collection rows and its dimension:
+        the stored ``vector_col`` when present, else the client's hash
+        embedding of ``text_col`` (session-cached unless ``filtered``)."""
+        if vector_col in rows.columns:
+            corpus = rows.select(
+                F.col(id_col).alias("vec_id"),
+                F.col(vector_col).alias("embedding"),
+            )
+            return corpus, self._dim(collection, vector_col, corpus)
+        corpus = self._hash_corpus(collection, rows, id_col, text_col, filtered)
+        return corpus, self._embed_dim
 
     def _hash_corpus(
         self,
@@ -1042,11 +978,7 @@ class SparkSearchClient:
         if backend == "ivf":
             from .operators.ann import ivf_build, ivf_search, ivf_search_indexed
 
-            if (
-                not filtered
-                and os.path.isdir(os.path.join(self.root, f"{collection}__ivf"))
-                and self._stale_meta(collection, "ivf") is None
-            ):
+            if not filtered and self._fresh_index(collection, "ivf"):
                 return ivf_search_indexed(
                     self.spark, self.root, collection, corpus, q,
                     k=limit, nprobe=nprobe,
@@ -1062,11 +994,7 @@ class SparkSearchClient:
                 lsh_search_indexed,
             )
 
-            if (
-                not filtered
-                and os.path.isdir(os.path.join(self.root, f"{collection}__lsh"))
-                and self._stale_meta(collection, "lsh") is None
-            ):
+            if not filtered and self._fresh_index(collection, "lsh"):
                 return lsh_search_indexed(
                     self.spark, self.root, collection, q, k=limit
                 )
@@ -1081,13 +1009,7 @@ class SparkSearchClient:
             )
 
             n_sub = 8 if dim % 8 == 0 else 1
-            if (
-                not filtered
-                and os.path.isdir(
-                    os.path.join(self.root, f"{collection}__pq", "centroids")
-                )
-                and self._stale_meta(collection, "pq") is None
-            ):
+            if not filtered and self._fresh_index(collection, "ivfpq"):
                 return ivfpq_search_indexed(
                     self.spark, self.root, collection, q,
                     n_sub=n_sub, dim=dim, k=limit, nprobe=nprobe,
@@ -1140,17 +1062,9 @@ class SparkSearchClient:
         kw = self._keyword_hits(
             collection, query, limit, query_properties, filters, id_col
         ).withColumnRenamed(id_col, "doc_id")
-        if vector_col in docs.columns:
-            corpus = docs.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vector_col).alias("embedding"),
-            )
-            dim = self._dim(collection, vector_col, corpus)
-        else:
-            corpus = self._hash_corpus(
-                collection, docs, id_col, text_col, filters is not None
-            )
-            dim = self._embed_dim
+        corpus, dim = self._vectors(
+            collection, docs, id_col, vector_col, text_col, filters is not None
+        )
         q = self._query_df(query).select(
             "query_id", self._embed_query("query").alias("query_vec")
         )
@@ -1234,17 +1148,14 @@ class SparkSearchClient:
             # was built, exact partial-top-k otherwise) — the module's
             # 'knn' stage embeds the corpus in-plan, correct but
             # index-blind
-            backend = "exact"
-            for b, marker in (("ivf", ""), ("lsh", ""), ("ivfpq", "centroids")):
-                fam = "pq" if b == "ivfpq" else b
-                if (
-                    os.path.isdir(
-                        os.path.join(self.root, f"{collection}__{fam}", marker)
-                    )
-                    and self._stale_meta(collection, fam) is None
-                ):
-                    backend = b
-                    break
+            backend = next(
+                (
+                    b
+                    for b in ("ivf", "lsh", "ivfpq")
+                    if self._fresh_index(collection, b)
+                ),
+                "exact",
+            )
             cands = self.vector_search(
                 collection,
                 query,
@@ -1556,7 +1467,7 @@ class SparkSearchClient:
                 "build_text_index first (stream_rag serves from the "
                 "on-disk index by design)"
             )
-        if self._stale_meta(collection, "bm25") is not None:
+        if not self._fresh_index(collection, "bm25"):
             raise ValueError(
                 f"persisted text index for {collection!r} is stale — "
                 "append_to_text_index with the new batch or "
@@ -1676,9 +1587,8 @@ class SparkSearchClient:
         # collect runs a |cores|-task mostly-empty job of pure scheduler
         # latency (~0.8 s at local[32] vs ~0.2 s for the 1-slice form,
         # bitwise-equal — see queries._search_queries_df).
-        rdd = self.spark.sparkContext.parallelize([(0, query)], 1)
-        return self.spark.createDataFrame(
-            rdd, "query_id long, query string"
+        return one_slice_df(
+            self.spark, [(0, query)], "query_id long, query string"
         )
 
     def _format(

@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_normalize
+from ..sources.index_catalog import (
+    index_compact_if_reviving,
+    index_dir,
+    index_live,
+    index_reset,
+)
 from .knn import knn_search_crossjoin
 
 
@@ -411,15 +417,7 @@ def ivf_save_index(
     """
     import os
 
-    base = os.path.join(root, f"{name}__ivf")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "ivf")
     centroids, _ = ivf_build(corpus, id_col, vec_col, n_centroids)
     if refine_iterations > 0:
         centroids = ivf_refine(
@@ -450,17 +448,10 @@ def ivf_search_indexed(
     join entirely."""
     import os
 
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__ivf")
+    base = index_dir(root, name, "ivf")
     centroids = spark.read.parquet(os.path.join(base, "centroids"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
-    assignments = apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "assignments")),
-        "vec_id",
-    )
+    assignments = index_live(spark, root, name, "ivf")
     return ivf_search(
         corpus, centroids, assignments, queries, k=k, nprobe=nprobe, **cols
     )
@@ -485,55 +476,18 @@ def ivf_index_append(
     one). Returns the appended vector count."""
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__ivf")
+    base = index_dir(root, name, "ivf")
     centroids = spark.read.parquet(os.path.join(base, "centroids"))
     asg = _assign(new_rows, centroids, id_col, vec_col).localCheckpoint(
         eager=True
     )
     n = asg.count()
-    compact_if_reviving(
-        spark,
-        base,
-        "assignments",
+    index_compact_if_reviving(
+        spark, root, name, "ivf",
         new_rows.select(F.col(id_col).alias("vec_id")),
-        "vec_id",
-        "centroid_id",
     )
     asg.write.mode("append").partitionBy("centroid_id").parquet(
         os.path.join(base, "assignments")
     )
     return n
 
-
-def ivf_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Tombstone vectors out of the persisted IVF index
-    (sources/tombstones.py): O(|delete batch|), no assignment rewrite;
-    probes skip them immediately via the live view's anti-join. The
-    codebook is untouched — centroids are statistics, not members, and
-    drift under heavy churn is handled by the periodic full rebuild
-    exactly as for appends (ivf_append docstring)."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__ivf"), deleted_ids, "vec_id"
-    )
-
-
-def ivf_index_compact(spark, root: str, name: str) -> int:
-    """Fold tombstones into a physical assignments rewrite; returns the
-    live vector count."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    return compact_table(
-        spark,
-        os.path.join(root, f"{name}__ivf"),
-        "assignments",
-        "vec_id",
-        "centroid_id",
-    )

@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..functions.vectors import isin_ints
+from ..sources.index_catalog import (
+    index_compact_if_reviving,
+    index_dir,
+    index_live,
+    index_reset,
+)
 
 
 # Session-scoped index cache: (session id, corpus key) → built stats.
@@ -611,16 +617,8 @@ def bm25_save_index(
     import math
     import os
 
-    base = os.path.join(root, f"{name}__bm25")
     spark = docs.sparkSession
-    # a REBUILD starts from a clean slate: a leftover tombstone table
-    # from the previous generation would be applied to the NEW postings
-    # (bm25_load_index), silently suppressing any doc ever deleted from
-    # the old index even after the rebuild re-ingested it (r11 review)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "bm25")
     # The build pays exactly TWO corpus passes (r11 optimization round;
     # was four): one for the 1-row corpus_stats (checkpointed — the
     # bucket-count probe and the final write reuse it instead of each
@@ -679,7 +677,7 @@ def bm25_index_n_buckets(spark, root: str, name: str) -> int | None:
     ``os.path.isdir`` index-layout probes (local/shared FS assumed)."""
     import os
 
-    meta_path = os.path.join(root, f"{name}__bm25", "meta")
+    meta_path = os.path.join(index_dir(root, name, "bm25"), "meta")
     if not os.path.isdir(meta_path):
         return None
     import pyarrow.parquet as pq
@@ -706,16 +704,9 @@ def bm25_load_index(
     already rewritten at delete time, so no view is needed."""
     import os
 
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__bm25")
+    base = index_dir(root, name, "bm25")
     return (
-        apply_tombstones(
-            spark,
-            base,
-            spark.read.parquet(os.path.join(base, "postings")),
-            "doc_id",
-        ),
+        index_live(spark, root, name, "bm25"),
         spark.read.parquet(os.path.join(base, "term_stats")),
         spark.read.parquet(os.path.join(base, "corpus_stats")),
     )
@@ -772,7 +763,8 @@ def bm25_delete_stats(
 
 
 def bm25_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Delete docs from the PERSISTED index: postings are tombstoned
+    """The BM25 family's delete hook (sources/index_catalog.index_delete
+    routes here): postings are tombstoned
     (O(|batch|), no rewrite — a doc's postings span every term it
     contains), while the tiny term/corpus stats files are rewritten with
     :func:`bm25_delete_stats` corrections so IDF and length
@@ -791,7 +783,7 @@ def bm25_index_delete(spark, root: str, name: str, deleted_ids) -> int:
         tombstone_append,
     )
 
-    base = os.path.join(root, f"{name}__bm25")
+    base = index_dir(root, name, "bm25")
     ids = deleted_ids.select(F.col("doc_id")).distinct()
     existing = load_tombstones(spark, base, "doc_id")
     if existing is not None:
@@ -843,9 +835,7 @@ def bm25_index_append_persisted(
     token — token-less docs have no postings rows to count)."""
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__bm25")
+    base = index_dir(root, name, "bm25")
     new_postings, new_terms, new_corpus = bm25_build_stats(
         new_docs, id_col, text_col
     )
@@ -869,13 +859,9 @@ def bm25_index_append_persisted(
     term_stats = term_stats.localCheckpoint(eager=True)
     corpus_stats = corpus_stats.localCheckpoint(eager=True)
     n = new_postings.select("doc_id").distinct().count()
-    compact_if_reviving(
-        spark,
-        base,
-        "postings",
+    index_compact_if_reviving(
+        spark, root, name, "bm25",
         new_docs.select(F.col(id_col).alias("doc_id")),
-        "doc_id",
-        partition_col="bucket" if n_buckets is not None else None,
     )
     writer = new_postings.write.mode("append")
     if n_buckets is not None:
@@ -888,24 +874,6 @@ def bm25_index_append_persisted(
         os.path.join(base, "corpus_stats")
     )
     return n
-
-
-def bm25_index_compact(spark, root: str, name: str) -> int:
-    """Fold postings tombstones into a physical rewrite (stats files are
-    already live); returns surviving postings rows. A bucketed layout
-    rewrites with its partitioning intact (meta is authoritative)."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    n_buckets = bm25_index_n_buckets(spark, root, name)
-    return compact_table(
-        spark,
-        os.path.join(root, f"{name}__bm25"),
-        "postings",
-        "doc_id",
-        partition_col="bucket" if n_buckets is not None else None,
-    )
 
 
 def bm25_search_indexed(

@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions.text import stable_hash64, tokenize
 from ..functions.vectors import isin_ints
+from ..sources.index_catalog import (
+    index_compact_if_reviving,
+    index_dir,
+    index_live,
+    index_reset,
+)
 from ..functions.text import tokenize_sql as _tokenize_sql
 
 
@@ -142,23 +148,6 @@ def minhash_signatures_wide(
         exploded.join(vocab, "shingle")
         .groupBy("doc_id")
         .agg(*[F.expr(f"min(_h{s}) AS mh{s}") for s in range(num_hashes)])
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Long-format view (doc_id, seed, minhash) of the wide signature."""
-    wide = minhash_signatures_wide(docs, id_col, text_col, num_hashes, shingle_n)
-    return wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"mh{s}") for s in range(num_hashes)])
-        ).alias("seed", "minhash"),
     )
 
 
@@ -439,15 +428,7 @@ def minhash_save_index(
     """
     import os
 
-    base = os.path.join(root, f"{name}__minhash")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "minhash")
     bands = minhash_bands(
         docs, id_col, text_col, num_hashes, band_size, shingle_n
     )
@@ -468,46 +449,9 @@ def minhash_save_index(
 
 def minhash_load_index(spark, root: str, name: str) -> DataFrame:
     """The LIVE band table: persisted rows minus any tombstoned docs
-    (minhash_index_delete) — deleted docs must stop producing collision
-    evidence immediately, not at the next compaction."""
-    import os
-
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__minhash")
-    return apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "bands")),
-        "doc_id",
-    )
-
-
-def minhash_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Delete docs from the persisted MinHash index via tombstones
-    (sources/tombstones.py): O(|delete batch|), no band rewrite — a
-    doc's band rows span every band partition, so a physical delete
-    would rewrite the whole table. Returns newly-recorded id count
-    (replay-idempotent). ``deleted_ids``: a frame with a doc_id column."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__minhash"), deleted_ids, "doc_id"
-    )
-
-
-def minhash_index_compact(spark, root: str, name: str) -> int:
-    """Fold tombstones into a physical band-table rewrite and clear
-    them; returns live band rows kept."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    return compact_table(
-        spark, os.path.join(root, f"{name}__minhash"), "bands", "doc_id", "band"
-    )
+    (index_catalog.index_delete) — deleted docs must stop producing
+    collision evidence immediately, not at the next compaction."""
+    return index_live(spark, root, name, "minhash")
 
 
 def minhash_index_append(
@@ -539,9 +483,7 @@ def minhash_index_append(
     """
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__minhash")
+    base = index_dir(root, name, "minhash")
     path = os.path.join(base, "bands")
     p = _resolve_index_meta(
         spark,
@@ -572,13 +514,9 @@ def minhash_index_append(
     # compacts first (merely clearing the tombstone would resurrect the
     # doc's STALE band rows — changed content would then collide under
     # its old signature too)
-    compact_if_reviving(
-        spark,
-        base,
-        "bands",
+    index_compact_if_reviving(
+        spark, root, name, "minhash",
         new_docs.select(F.col(id_col).alias("doc_id")),
-        "doc_id",
-        "band",
     )
     new_bands.write.mode("append").partitionBy("band").parquet(path)
     return pairs
@@ -874,15 +812,7 @@ def simhash_save_index(
     table appends resolve against."""
     import os
 
-    base = os.path.join(root, f"{name}__simhash")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "simhash")
     simhash_bands(docs, id_col, text_col, bits, max_hamming).write.mode(
         "overwrite"
     ).partitionBy("band").parquet(os.path.join(base, "bands"))
@@ -897,39 +827,7 @@ def simhash_save_index(
 def simhash_load_index(spark, root: str, name: str) -> DataFrame:
     """The LIVE band table (persisted rows minus tombstoned docs) —
     same contract as minhash_load_index."""
-    import os
-
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__simhash")
-    return apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "bands")),
-        "doc_id",
-    )
-
-
-def simhash_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Tombstone docs out of the persisted SimHash index — the MinHash
-    delete's twin (see minhash_index_delete)."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__simhash"), deleted_ids, "doc_id"
-    )
-
-
-def simhash_index_compact(spark, root: str, name: str) -> int:
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    return compact_table(
-        spark, os.path.join(root, f"{name}__simhash"), "bands", "doc_id", "band"
-    )
+    return index_live(spark, root, name, "simhash")
 
 
 def simhash_index_append(
@@ -954,9 +852,7 @@ def simhash_index_append(
     (_resolve_index_meta)."""
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__simhash")
+    base = index_dir(root, name, "simhash")
     path = os.path.join(base, "bands")
     p = _resolve_index_meta(
         spark,
@@ -973,13 +869,9 @@ def simhash_index_append(
     pairs = simhash_screen_batch(
         standing, new_bands, p["max_hamming"]
     ).localCheckpoint(eager=True)
-    compact_if_reviving(
-        spark,
-        base,
-        "bands",
+    index_compact_if_reviving(
+        spark, root, name, "simhash",
         new_docs.select(F.col(id_col).alias("doc_id")),
-        "doc_id",
-        "band",
     )
     new_bands.write.mode("append").partitionBy("band").parquet(path)
     return pairs
@@ -1541,15 +1433,7 @@ def semantic_save_index(
 
     from .ann import assign_nearest_centroid
 
-    base = os.path.join(root, f"{name}__semantic")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "semantic")
     asg = assign_nearest_centroid(
         corpus, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
     )
@@ -1566,19 +1450,9 @@ def semantic_save_index(
 
 def semantic_load_index(spark, root: str, name: str) -> DataFrame:
     """The LIVE assignment table: persisted rows minus tombstoned ids
-    (semantic_index_delete) — deleted vectors must stop producing
+    (index_catalog.index_delete) — deleted vectors must stop producing
     near-dup evidence immediately, not at the next compaction."""
-    import os
-
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__semantic")
-    return apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "assignments")),
-        "vec_id",
-    )
+    return index_live(spark, root, name, "semantic")
 
 
 def semantic_load_centroids(spark, root: str, name: str) -> DataFrame:
@@ -1589,37 +1463,7 @@ def semantic_load_centroids(spark, root: str, name: str) -> DataFrame:
     import os
 
     return spark.read.parquet(
-        os.path.join(root, f"{name}__semantic", "centroids")
-    )
-
-
-def semantic_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Delete vectors from the persisted semantic index via tombstones
-    (sources/tombstones.py): O(|delete batch|), no assignment rewrite.
-    Returns newly-recorded id count (replay-idempotent).
-    ``deleted_ids``: a frame with a vec_id column."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__semantic"), deleted_ids, "vec_id"
-    )
-
-
-def semantic_index_compact(spark, root: str, name: str) -> int:
-    """Fold tombstones into a physical assignment rewrite and clear
-    them; returns live assignment rows kept."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    return compact_table(
-        spark,
-        os.path.join(root, f"{name}__semantic"),
-        "assignments",
-        "vec_id",
-        "centroid_id",
+        os.path.join(index_dir(root, name, "semantic"), "centroids")
     )
 
 
@@ -1671,12 +1515,9 @@ def semantic_index_append(
     """
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
     from .ann import assign_nearest_centroid
 
-    base = os.path.join(root, f"{name}__semantic")
-    path = os.path.join(base, "assignments")
+    path = os.path.join(index_dir(root, name, "semantic"), "assignments")
     centroids = semantic_load_centroids(spark, root, name)
     new_asg = assign_nearest_centroid(
         new_vecs, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
@@ -1694,13 +1535,8 @@ def semantic_index_append(
     pairs = semantic_screen_batch(
         standing, new_asg, threshold
     ).localCheckpoint(eager=True)
-    compact_if_reviving(
-        spark,
-        base,
-        "assignments",
-        new_asg.select("vec_id"),
-        "vec_id",
-        "centroid_id",
+    index_compact_if_reviving(
+        spark, root, name, "semantic", new_asg.select("vec_id")
     )
     new_asg.select(
         "vec_id", "centroid_id", F.col("_v").alias("embedding")

@@ -26,6 +26,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_double, sql_ident
+from ..sources.index_catalog import (
+    index_compact_if_reviving,
+    index_dir,
+    index_live,
+    index_reset,
+)
 
 
 def lsh_planes(n_planes: int = 4, dim: int = 64, seed: int = 0x5EED1234) -> list[list[float]]:
@@ -230,15 +236,7 @@ def lsh_save_index(
     import os
 
     spark = corpus.sparkSession
-    base = os.path.join(root, f"{name}__lsh")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "lsh")
     planes = lsh_planes(n_planes, dim, seed)
     lsh_bucket_table(corpus, planes, id_col, vec_col).write.mode(
         "overwrite"
@@ -259,18 +257,10 @@ def lsh_load_index(
     lsh_search_bucketed takes."""
     import os
 
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__lsh")
+    base = index_dir(root, name, "lsh")
     meta = spark.read.parquet(os.path.join(base, "meta")).head()
     planes = lsh_planes(meta["n_planes"], meta["dim"], meta["seed"])
-    buckets = apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "buckets")),
-        "vec_id",
-    )
-    return buckets, planes
+    return index_live(spark, root, name, "lsh"), planes
 
 
 def lsh_index_append(
@@ -291,57 +281,21 @@ def lsh_index_append(
     vectors."""
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__lsh")
+    base = index_dir(root, name, "lsh")
     meta = spark.read.parquet(os.path.join(base, "meta")).head()
     planes = lsh_planes(meta["n_planes"], meta["dim"], meta["seed"])
     new_buckets = lsh_bucket_table(
         new_rows, planes, id_col, vec_col
     ).localCheckpoint(eager=True)
     n = new_buckets.count()
-    compact_if_reviving(
-        spark,
-        base,
-        "buckets",
+    index_compact_if_reviving(
+        spark, root, name, "lsh",
         new_rows.select(F.col(id_col).alias("vec_id")),
-        "vec_id",
-        "bucket",
     )
     new_buckets.write.mode("append").partitionBy("bucket").parquet(
         os.path.join(base, "buckets")
     )
     return n
-
-
-def lsh_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Tombstone vectors out of the persisted LSH index
-    (sources/tombstones.py): O(|delete batch|), no bucket rewrite;
-    probes skip them immediately via the live view's anti-join. Returns
-    newly-recorded id count (replay-idempotent)."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__lsh"), deleted_ids, "vec_id"
-    )
-
-
-def lsh_index_compact(spark, root: str, name: str) -> int:
-    """Fold tombstones into a physical bucket-table rewrite and clear
-    them; returns live rows kept."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    return compact_table(
-        spark,
-        os.path.join(root, f"{name}__lsh"),
-        "buckets",
-        "vec_id",
-        "bucket",
-    )
 
 
 def lsh_search_indexed(
@@ -386,8 +340,6 @@ __all__ = [
     "lsh_save_index",
     "lsh_load_index",
     "lsh_index_append",
-    "lsh_index_delete",
-    "lsh_index_compact",
     "lsh_search_indexed",
     "lsh_planes_sql_values",
 ]

@@ -33,6 +33,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cast_double_sql, dot_double, dot_double_sql
+from ..sources.index_catalog import (
+    index_compact_if_reviving,
+    index_dir,
+    index_live,
+    index_reset,
+)
 
 DIST_SCALE = 1_000_000
 
@@ -420,15 +426,7 @@ def pq_save_index(
     the on-disk IVFADC layout (probes read only their buckets' files)."""
     import os
 
-    base = os.path.join(root, f"{name}__pq")
-    # rebuild = clean slate: a leftover tombstone table from the
-    # previous generation would be applied to the NEW rows by the
-    # load path, suppressing re-ingested docs (r11 review, fixed
-    # fleet-wide across the six save_index functions)
-    if os.path.isdir(base):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    base = index_reset(root, name, "pq")
     cb = pq_codebook(corpus, n_codes, n_sub, dim, id_col, vec_col)
     codes = pq_encode(corpus, cb, n_sub, dim, id_col, vec_col)
     cb.write.mode("overwrite").parquet(os.path.join(base, "codebook"))
@@ -462,7 +460,7 @@ def pq_search_indexed(
     from disk; the original float embeddings are never touched."""
     import os
 
-    base = os.path.join(root, f"{name}__pq")
+    base = index_dir(root, name, "pq")
     cb = spark.read.parquet(os.path.join(base, "codebook"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
     codes = pq_load_index(spark, root, name).select("vec_id", "codes")
@@ -492,7 +490,7 @@ def ivfpq_search_indexed(
 
     from .ann import _centroid_array
 
-    base = os.path.join(root, f"{name}__pq")
+    base = index_dir(root, name, "pq")
     cb = spark.read.parquet(os.path.join(base, "codebook"))
     centroids = spark.read.parquet(os.path.join(base, "centroids"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
@@ -536,19 +534,9 @@ def ivfpq_search_indexed(
 
 def pq_load_index(spark, root: str, name: str) -> DataFrame:
     """The LIVE codes table: persisted rows minus tombstoned vectors
-    (pq_index_delete) — deleted vectors must stop surfacing as ADC hits
-    immediately, not at the next compaction."""
-    import os
-
-    from ..sources.tombstones import apply_tombstones
-
-    base = os.path.join(root, f"{name}__pq")
-    return apply_tombstones(
-        spark,
-        base,
-        spark.read.parquet(os.path.join(base, "codes")),
-        "vec_id",
-    )
+    (index_catalog.index_delete) — deleted vectors must stop surfacing
+    as ADC hits immediately, not at the next compaction."""
+    return index_live(spark, root, name, "pq")
 
 
 def pq_index_append(
@@ -585,9 +573,7 @@ def pq_index_append(
     minhash/simhash/lsh appends)."""
     import os
 
-    from ..sources.tombstones import compact_if_reviving
-
-    base = os.path.join(root, f"{name}__pq")
+    base = index_dir(root, name, "pq")
     cb = spark.read.parquet(os.path.join(base, "codebook"))
     geo = cb.select(
         (F.max("sub") + 1).alias("n_sub"),
@@ -619,58 +605,24 @@ def pq_index_append(
         )
     n_sub, dim = saved_n_sub, saved_dim
     codes = pq_encode(new_rows, cb, n_sub, dim, id_col, vec_col)
-    partition_cols: list[str] = []
-    if os.path.isdir(os.path.join(base, "centroids")):
+    ivfadc = os.path.isdir(os.path.join(base, "centroids"))
+    if ivfadc:
         from .ann import assign_nearest_centroid
 
         centroids = spark.read.parquet(os.path.join(base, "centroids"))
         asg = assign_nearest_centroid(new_rows, centroids, id_col, vec_col)
         codes = codes.join(asg, "vec_id")
-        partition_cols = ["centroid_id"]
     codes = codes.localCheckpoint(eager=True)
     n = codes.count()
     # revival compacts first: clearing the tombstone alone would
     # resurrect the id's stale codes next to the re-appended ones
-    compact_if_reviving(
-        spark,
-        base,
-        "codes",
+    index_compact_if_reviving(
+        spark, root, name, "pq",
         new_rows.select(F.col(id_col).alias("vec_id")),
-        "vec_id",
-        partition_cols[0] if partition_cols else None,
     )
     writer = codes.write.mode("append")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
+    if ivfadc:
+        writer = writer.partitionBy("centroid_id")
     writer.parquet(os.path.join(base, "codes"))
     return n
 
-
-def pq_index_delete(spark, root: str, name: str, deleted_ids) -> int:
-    """Tombstone vectors out of the persisted PQ index
-    (sources/tombstones.py): O(|delete batch|), no codes rewrite; ADC
-    scans skip them immediately via the live view's anti-join. The
-    codebook is untouched — sub-centroids are statistics, not members
-    (same argument as ivf_index_delete). Returns newly-recorded id count
-    (replay-idempotent)."""
-    import os
-
-    from ..sources.tombstones import tombstone_append
-
-    return tombstone_append(
-        spark, os.path.join(root, f"{name}__pq"), deleted_ids, "vec_id"
-    )
-
-
-def pq_index_compact(spark, root: str, name: str) -> int:
-    """Fold tombstones into a physical codes rewrite and clear them;
-    returns live vectors kept. Preserves the IVFADC bucket partitioning
-    when present."""
-    import os
-
-    from ..sources.tombstones import compact_table
-
-    base = os.path.join(root, f"{name}__pq")
-    codes = spark.read.parquet(os.path.join(base, "codes"))
-    partition_col = "centroid_id" if "centroid_id" in codes.columns else None
-    return compact_table(spark, base, "codes", "vec_id", partition_col)

@@ -39,6 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _label(name: str) -> str:
+    """``name`` as a SQL string literal (backslash and quote escaped)."""
+    return "'{}'".format(name.replace("\\", "\\\\").replace("'", "\\'"))
+
+
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """(column_name, n_null, n_distinct, min_s, max_s) per requested
     column — one stats scan + one NDV scan, both Expand-free."""
@@ -49,20 +54,19 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     # CAST(IS NULL AS BIGINT), CAST(min/max AS STRING), count(1) over
     # the distinct'd single-column projection. Bitwise-identical output.
     exprs = []
+    stack_args = []
     for c in cols:
         q = sql_ident(c)
-        a = c.replace("`", "``")
+        nn, mn, mx = (sql_ident(f"_{s}_{c}") for s in ("nn", "mn", "mx"))
         exprs += [
-            f"sum(CAST(({q} IS NULL) AS BIGINT)) AS `_nn_{a}`",
-            f"CAST(min({q}) AS STRING) AS `_mn_{a}`",
-            f"CAST(max({q}) AS STRING) AS `_mx_{a}`",
+            f"sum(CAST(({q} IS NULL) AS BIGINT)) AS {nn}",
+            f"CAST(min({q}) AS STRING) AS {mn}",
+            f"CAST(max({q}) AS STRING) AS {mx}",
         ]
+        stack_args.append(f"{_label(c)}, {nn}, {mn}, {mx}")
     row = df.selectExpr(*exprs)
-    stack_args = ", ".join(
-        f"'{c}', _nn_{c}, _mn_{c}, _mx_{c}" for c in cols
-    )
     base = row.selectExpr(
-        f"stack({len(cols)}, {stack_args}) AS "
+        f"stack({len(cols)}, {', '.join(stack_args)}) AS "
         "(column_name, n_null, min_s, max_s)"
     )
     import functools
@@ -72,7 +76,7 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
         .filter("v IS NOT NULL")  # countDistinct ignores nulls
         .distinct()
         .selectExpr(
-            "'{}' AS column_name".format(c.replace("'", "''")),
+            f"{_label(c)} AS column_name",
             "CAST(count(1) AS BIGINT) AS n_distinct",
         )
         for c in cols

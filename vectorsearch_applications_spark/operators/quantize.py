@@ -76,6 +76,11 @@ def quantized_dot(
             "(a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) "
             "AS DOUBLE)"
         )
+    # names mixed with Columns bind as column references, not literals
+    d_codes, q_codes, d_scale, q_scale = (
+        F.col(c) if isinstance(c, str) else c
+        for c in (d_codes, q_codes, d_scale, q_scale)
+    )
     intdot = F.aggregate(
         F.zip_with(d_codes, q_codes, lambda a, b: a * b),
         F.lit(0).cast("long"),

@@ -25,15 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-def _jaccard(a, b):
-    """Column-form Jaccard kept for Column-input callers/tests; the hot
-    rerank path builds the same tree from SQL (§12 fast path below)."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
-
 
 def rerank_overlap(
     hits: DataFrame,

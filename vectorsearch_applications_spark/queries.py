@@ -83,8 +83,7 @@ def _search_queries_df(spark: SparkSession) -> DataFrame:
     # Worse at scale, not better: on a 10k-core cluster the same literal
     # frame becomes 10k empty tasks per dispatch — and it is why these
     # rows previously ran FASTER at 8 cores than 32 (r11 scaling block).
-    rdd = spark.sparkContext.parallelize(SEARCH_QUERIES, 1)
-    return spark.createDataFrame(rdd, "query_id long, query string")
+    return one_slice_df(spark, SEARCH_QUERIES, "query_id long, query string")
 
 
 _SQ_VALUES = ", ".join(f"({i}::BIGINT, '{t}')" for i, t in SEARCH_QUERIES)
@@ -552,8 +551,10 @@ def _rag_index_root(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
+    from .sources.index_catalog import index_dir
+
     root = _RAG_INDEX_ROOTS.get(sf_dir)
-    if root is None or not os.path.isdir(os.path.join(root, "documents__bm25")):
+    if root is None or not os.path.isdir(index_dir(root, "documents", "bm25")):
         from .operators.bm25 import bm25_save_index
 
         root = tempfile.mkdtemp(prefix="ragidx_")
@@ -1856,15 +1857,15 @@ def _routes_df(spark: SparkSession) -> DataFrame:
     # routed dispatch COLLECTS the embed/argmax over these literal rows
     # per call, and the default createDataFrame(<list>) form spreads
     # them over |cores| near-empty tasks of pure scheduler latency.
-    rdd = spark.sparkContext.parallelize(
-        [(r, u) for r, _, u in _ROUTE_UTTERANCES], 1
+    return one_slice_df(
+        spark,
+        [(r, u) for r, _, u in _ROUTE_UTTERANCES],
+        "route string, utterance string",
     )
-    return spark.createDataFrame(rdd, "route string, utterance string")
 
 
 def _route_queries_df(spark: SparkSession) -> DataFrame:
-    rdd = spark.sparkContext.parallelize(_ROUTE_QUERIES, 1)
-    return spark.createDataFrame(rdd, "query_id long, query string")
+    return one_slice_df(spark, _ROUTE_QUERIES, "query_id long, query string")
 
 
 @register(
@@ -1982,9 +1983,8 @@ def q_router_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.router import fit_route_thresholds
 
     routes = _routes_df(spark)
-    train = spark.createDataFrame(
-        spark.sparkContext.parallelize(_ROUTE_TRAIN, 1),
-        "query_id long, query string, label string",
+    train = one_slice_df(
+        spark, _ROUTE_TRAIN, "query_id long, query string, label string"
     )
     return fit_route_thresholds(
         train, routes, default_route="search", dim=_EMBED_DIM

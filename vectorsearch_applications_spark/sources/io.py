@@ -74,27 +74,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def save_collection(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Persist a collection table (reference S3/S5 ``save_as_parquet`` +
-    ``batch_index_data``). At 100 TB this is the indexing path: partition by
-    a coarse key so per-collection scans prune directories."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def load_collection(spark: SparkSession, path: str) -> DataFrame:
-    """Reference S4 ``load_parquet`` — arrays stay native ArrayType, no
-    ndarray→list coercion needed."""
-    return spark.read.parquet(path)
-
-
 def export_jsonl_shards(
     df: DataFrame,
     path: str,

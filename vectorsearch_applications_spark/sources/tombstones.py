@@ -151,7 +151,9 @@ def compact_table(
     partition_col: str | None = None,
 ) -> int:
     """Fold tombstones into a physical rewrite of ``<base>/<table_name>``
-    and clear them; returns the number of LIVE rows kept.
+    and clear them; returns the number of LIVE rows kept. The rewrite
+    keeps ``partition_col`` as its directory partition when the table
+    carries that column (a layout without it rewrites unpartitioned).
 
     The live rows are eagerly localCheckpointed before the overwrite
     (the rewrite reads the directory it replaces); the tombstone table
@@ -166,7 +168,7 @@ def compact_table(
     )
     n = live.count()
     writer = live.write.mode("overwrite")
-    if partition_col is not None:
+    if partition_col in table.columns:
         writer = writer.partitionBy(partition_col)
     writer.parquet(path)
     tombs = load_tombstones(spark, base, id_col)
