@@ -1197,3 +1197,38 @@ def test_tokenize_sql_matches_column_path_under_both_parser_confs(spark):
     h = df.selectExpr("t AS `t``x`")
     got = h.select(F.expr(f"length({sql_ident('t`x')})").alias("n")).count()
     assert got == 4
+
+
+def test_ivf_search_on_nested_vector_columns_matches_top_level(spark):
+    """sql_ident binds a dotted name the way F.col does: an ivf_search
+    whose corpus and query vectors sit inside structs returns the same
+    rows as the same search on top-level vector columns."""
+    from vectorsearch_applications_spark.functions.vectors import sql_ident
+    from vectorsearch_applications_spark.operators.ann import (
+        ivf_build,
+        ivf_search,
+    )
+
+    assert sql_ident("meta.emb") == "`meta`.`emb`"
+    assert sql_ident("`a.b`.c") == "`a.b`.`c`"
+    assert sql_ident("t`x") == "`t``x`"
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    corpus = emb.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    centroids, assignments = ivf_build(corpus, n_centroids=4)
+    flat = ivf_search(corpus, centroids, assignments, queries, k=5, nprobe=2)
+    nested = ivf_search(
+        corpus.select("vec_id", F.struct("embedding").alias("doc")),
+        centroids,
+        assignments,
+        queries.select("query_id", F.struct(F.col("query_vec").alias("emb")).alias("meta")),
+        vec_col="doc.embedding",
+        query_vec_col="meta.emb",
+        k=5,
+        nprobe=2,
+    )
+    want = sorted(flat.collect())
+    assert len(want) == 20
+    assert sorted(nested.collect()) == want

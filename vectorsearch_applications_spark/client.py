@@ -36,7 +36,7 @@ from .operators.hybrid import hybrid_search as _fuse
 from .operators.knn import knn_search
 from .sources import collections as _coll
 from .sources import index_catalog as _idx
-from .sources.io import one_slice_df
+from .sources.io import one_slice_df, read_parquet
 
 _EMBED_DIM = 16
 
@@ -349,7 +349,7 @@ class SparkSearchClient:
         return snapshot_diff(old, new, key_col, compare_cols)
 
     def _load(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, name))
+        return read_parquet(self.spark, os.path.join(self.root, name))
 
     # -- searches ----------------------------------------------------------
 
@@ -1582,11 +1582,9 @@ class SparkSearchClient:
         return docs.filter(filters) if filters is not None else docs
 
     def _query_df(self, query: str) -> DataFrame:
-        # ONE partition on purpose: createDataFrame(<list>) parallelizes
-        # a 1-row frame over |cores| partitions, so each query-side
-        # collect runs a |cores|-task mostly-empty job of pure scheduler
-        # latency (~0.8 s at local[32] vs ~0.2 s for the 1-slice form,
-        # bitwise-equal — see queries._search_queries_df).
+        # a LocalRelation (one_slice_df): the query-side take, collect
+        # and broadcast of this frame run no Spark job and no Python
+        # worker, where a parallelize-backed frame ran one per action
         return one_slice_df(
             self.spark, [(0, query)], "query_id long, query string"
         )

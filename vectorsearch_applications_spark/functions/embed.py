@@ -23,7 +23,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .text import tokenize
-from .vectors import sql_ident
+from .vectors import sql_alias, sql_ident
 
 
 def _dim_contrib(token: Column, d) -> Column:
@@ -183,9 +183,9 @@ def hash_embed_ids(
         " + ".join(["0.0D"] + [f"_s{d} * _s{d}" for d in range(dim)])
     )
     return sums.selectExpr(
-        f"_eid AS {sql_ident(id_col)}",
+        f"_eid AS {sql_alias(id_col)}",
         f"CASE WHEN {norm} = 0 THEN {raw} "
-        f"ELSE transform({raw}, x -> x / {norm}) END AS {sql_ident(out_col)}",
+        f"ELSE transform({raw}, x -> x / {norm}) END AS {sql_alias(out_col)}",
     )
 
 

@@ -27,15 +27,62 @@ def dot(a: Column, b: Column) -> Column:
     return dot_double(_as_double(a), _as_double(b))
 
 
-def sql_ident(name: str) -> str:
-    """Backtick-quoted TOP-LEVEL column reference for the SQL-fragment
-    construction fast paths (r11 advice: embedded backticks must be
-    doubled or a hostile name breaks the parse). Note the quoted form
-    binds a literal top-level name — a dotted nested-field reference
-    that F.col() would resolve does NOT resolve through it; callers
-    needing nested fields must pass a Column and take the DataFrame-API
-    path."""
+def sql_alias(name: str) -> str:
+    """``name`` as ONE backtick-quoted SQL identifier (embedded backticks
+    doubled, r11 advice) — for output names (``... AS <alias>``), which
+    like ``Column.alias`` take the name literally, dots included."""
     return f"`{name.replace('`', '``')}`"
+
+
+def _name_parts(name: str) -> list[str] | None:
+    """The parts ``F.col(name)`` binds (Spark's ``parseAttributeName``):
+    dots separate parts; a backticked part is literal, with a doubled
+    backtick standing for one. None for a name ``F.col`` rejects."""
+    parts: list[str] = []
+    tmp: list[str] = []
+    in_tick = False
+    i = 0
+    while i < len(name):
+        ch = name[i]
+        if in_tick:
+            if ch != "`":
+                tmp.append(ch)
+            elif name[i + 1 : i + 2] == "`":
+                tmp.append("`")
+                i += 1
+            else:
+                in_tick = False
+                if name[i + 1 : i + 2] not in ("", "."):
+                    return None
+        elif ch == "`":
+            if tmp:
+                return None
+            in_tick = True
+        elif ch == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                return None
+            parts.append("".join(tmp))
+            tmp = []
+        else:
+            tmp.append(ch)
+        i += 1
+    if in_tick:
+        return None
+    parts.append("".join(tmp))
+    return parts
+
+
+def sql_ident(name: str) -> str:
+    """The SQL-fragment twin of ``F.col(name)`` for the construction
+    fast paths: each part of a dotted name backtick-quoted, so
+    ``"meta.emb"`` binds the nested field ``emb`` of struct ``meta``
+    and ``"`a.b`"`` the top-level column ``a.b``, exactly as ``F.col``
+    resolves them. A name ``F.col`` would reject (e.g. a stray
+    backtick, ``"t`x"``) is quoted whole, as one literal name."""
+    parts = _name_parts(name)
+    if parts is None:
+        return sql_alias(name)
+    return ".".join(sql_alias(p) for p in parts)
 
 
 def isin_ints(col_name: str, values) -> Column:
@@ -55,8 +102,7 @@ def isin_ints(col_name: str, values) -> Column:
     if not vals:
         return F.lit(False)
     if all(type(v) is int for v in vals):
-        ident = f"`{col_name.replace('`', '``')}`"
-        return F.expr(f"{ident} IN ({','.join(map(str, vals))})")
+        return F.expr(f"{sql_ident(col_name)} IN ({','.join(map(str, vals))})")
     return F.col(col_name).isin(vals)
 
 

@@ -28,6 +28,7 @@ from ..sources.index_catalog import (
     index_live,
     index_reset,
 )
+from ..sources.io import read_parquet
 from .knn import knn_search_crossjoin
 
 
@@ -449,7 +450,7 @@ def ivf_search_indexed(
     import os
 
     base = index_dir(root, name, "ivf")
-    centroids = spark.read.parquet(os.path.join(base, "centroids"))
+    centroids = read_parquet(spark, os.path.join(base, "centroids"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
     assignments = index_live(spark, root, name, "ivf")
     return ivf_search(
@@ -477,7 +478,7 @@ def ivf_index_append(
     import os
 
     base = index_dir(root, name, "ivf")
-    centroids = spark.read.parquet(os.path.join(base, "centroids"))
+    centroids = read_parquet(spark, os.path.join(base, "centroids"))
     asg = _assign(new_rows, centroids, id_col, vec_col).localCheckpoint(
         eager=True
     )

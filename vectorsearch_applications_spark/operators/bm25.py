@@ -38,6 +38,7 @@ from ..sources.index_catalog import (
     index_live,
     index_reset,
 )
+from ..sources.io import read_parquet
 
 
 # Session-scoped index cache: (session id, corpus key) → built stats.
@@ -671,26 +672,11 @@ def bm25_index_n_buckets(spark, root: str, name: str) -> int | None:
     the layout from here, never from call-site arguments.
 
     Read with pyarrow, not a Spark action: this runs on EVERY indexed
-    search, and `spark.read.parquet(...).head()` schedules a full job
-    for a 1-row local file — a fixed ~0.1-0.2 s driver round-trip per
-    search. The local-file read is consistent with the repo-wide
-    ``os.path.isdir`` index-layout probes (local/shared FS assumed)."""
-    import os
+    search (sources.io.read_meta_row)."""
+    from ..sources.io import read_meta_row
 
-    meta_path = os.path.join(index_dir(root, name, "bm25"), "meta")
-    if not os.path.isdir(meta_path):
-        return None
-    import pyarrow.parquet as pq
-
-    for f in sorted(
-        f for f in os.listdir(meta_path) if f.endswith(".parquet")
-    ):
-        t = pq.read_table(
-            os.path.join(meta_path, f), columns=["n_buckets"]
-        )
-        if t.num_rows:  # Spark may emit empty leading part files
-            return t["n_buckets"][0].as_py()
-    return None
+    meta = read_meta_row(os.path.join(index_dir(root, name, "bm25"), "meta"))
+    return None if meta is None else meta["n_buckets"]
 
 
 def bm25_load_index(
@@ -707,8 +693,8 @@ def bm25_load_index(
     base = index_dir(root, name, "bm25")
     return (
         index_live(spark, root, name, "bm25"),
-        spark.read.parquet(os.path.join(base, "term_stats")),
-        spark.read.parquet(os.path.join(base, "corpus_stats")),
+        read_parquet(spark, os.path.join(base, "term_stats")),
+        read_parquet(spark, os.path.join(base, "corpus_stats")),
     )
 
 
@@ -847,8 +833,8 @@ def bm25_index_append_persisted(
         new_postings = new_postings.withColumn(
             "bucket", _term_bucket(F.col("term"), n_buckets)
         )
-    saved_terms = spark.read.parquet(os.path.join(base, "term_stats"))
-    saved_corpus = spark.read.parquet(os.path.join(base, "corpus_stats"))
+    saved_terms = read_parquet(spark, os.path.join(base, "term_stats"))
+    saved_corpus = read_parquet(spark, os.path.join(base, "corpus_stats"))
     _, term_stats, corpus_stats = bm25_merge_stats(
         (new_postings.limit(0).drop("bucket"), saved_terms, saved_corpus),
         (new_postings.limit(0).drop("bucket"), new_terms, new_corpus),

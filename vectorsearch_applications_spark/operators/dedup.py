@@ -369,22 +369,18 @@ def _resolve_index_meta(
     caller-or-legacy values, preserving old layouts."""
     import os
 
-    from pyspark.errors import AnalysisException
+    from ..sources.io import read_meta_row
 
-    try:
-        row = spark.read.parquet(os.path.join(base, "meta")).head()
-        saved = {k: int(row[k]) for k in legacy_defaults}
-    except AnalysisException as ex:
-        from ..sources.tombstones import is_path_not_found
-
-        if not is_path_not_found(ex):
-            raise
-        saved = None
-    if saved is None:
+    meta = os.path.join(base, "meta")
+    row = read_meta_row(meta)
+    if row is None and os.path.isdir(meta):
+        raise ValueError(f"{family} index meta at {meta} holds no row")
+    if row is None:
         return {
             k: (given[k] if given.get(k) is not None else d)
             for k, d in legacy_defaults.items()
         }
+    saved = {k: int(row[k]) for k in legacy_defaults}
     for k, v in given.items():
         if v is not None and int(v) != saved[k]:
             raise ValueError(

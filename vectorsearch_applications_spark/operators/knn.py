@@ -163,9 +163,12 @@ def knn_search(
     if not q_rows:
         # empty query set → empty result with the right schema (matches
         # knn_search_crossjoin; a (0,)-shaped matmul would crash the job)
-        spark = queries.sparkSession
-        return spark.createDataFrame(
-            [], "query_id string, vec_id string, rank int, distance double"
+        from ..sources.io import one_slice_df
+
+        return one_slice_df(
+            queries.sparkSession,
+            [],
+            "query_id string, vec_id string, rank int, distance double",
         ).select(
             F.col("query_id").cast(
                 queries.schema[query_id_col].dataType

@@ -249,17 +249,26 @@ def lsh_save_index(
     return base
 
 
+def _saved_planes(base: str) -> list[list[float]]:
+    """The index's planes, re-minted from its 1-row meta (read on the
+    driver: sources.io.read_meta_row)."""
+    import os
+
+    from ..sources.io import read_meta_row
+
+    meta = read_meta_row(os.path.join(base, "meta"))
+    if meta is None:
+        raise FileNotFoundError(f"no lsh index meta under {base}")
+    return lsh_planes(meta["n_planes"], meta["dim"], meta["seed"])
+
+
 def lsh_load_index(
     spark, root: str, name: str
 ) -> tuple[DataFrame, list[list[float]]]:
     """(live bucket table, planes): persisted rows minus tombstoned ids,
     planes re-minted from the saved meta — exactly the inputs
     lsh_search_bucketed takes."""
-    import os
-
-    base = index_dir(root, name, "lsh")
-    meta = spark.read.parquet(os.path.join(base, "meta")).head()
-    planes = lsh_planes(meta["n_planes"], meta["dim"], meta["seed"])
+    planes = _saved_planes(index_dir(root, name, "lsh"))
     return index_live(spark, root, name, "lsh"), planes
 
 
@@ -282,8 +291,7 @@ def lsh_index_append(
     import os
 
     base = index_dir(root, name, "lsh")
-    meta = spark.read.parquet(os.path.join(base, "meta")).head()
-    planes = lsh_planes(meta["n_planes"], meta["dim"], meta["seed"])
+    planes = _saved_planes(base)
     new_buckets = lsh_bucket_table(
         new_rows, planes, id_col, vec_col
     ).localCheckpoint(eager=True)

@@ -39,6 +39,7 @@ from ..sources.index_catalog import (
     index_live,
     index_reset,
 )
+from ..sources.io import read_parquet
 
 DIST_SCALE = 1_000_000
 
@@ -461,7 +462,7 @@ def pq_search_indexed(
     import os
 
     base = index_dir(root, name, "pq")
-    cb = spark.read.parquet(os.path.join(base, "codebook"))
+    cb = read_parquet(spark, os.path.join(base, "codebook"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
     codes = pq_load_index(spark, root, name).select("vec_id", "codes")
     return pq_adc_search(codes, cb, queries, n_codes, n_sub, dim, k, **cols)
@@ -491,8 +492,8 @@ def ivfpq_search_indexed(
     from .ann import _centroid_array
 
     base = index_dir(root, name, "pq")
-    cb = spark.read.parquet(os.path.join(base, "codebook"))
-    centroids = spark.read.parquet(os.path.join(base, "centroids"))
+    cb = read_parquet(spark, os.path.join(base, "codebook"))
+    centroids = read_parquet(spark, os.path.join(base, "centroids"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
     index = pq_load_index(spark, root, name).select(
         "vec_id", "codes", "centroid_id"
@@ -574,7 +575,7 @@ def pq_index_append(
     import os
 
     base = index_dir(root, name, "pq")
-    cb = spark.read.parquet(os.path.join(base, "codebook"))
+    cb = read_parquet(spark, os.path.join(base, "codebook"))
     geo = cb.select(
         (F.max("sub") + 1).alias("n_sub"),
         F.max(F.size("cvec")).alias("sub_dim"),
@@ -609,7 +610,7 @@ def pq_index_append(
     if ivfadc:
         from .ann import assign_nearest_centroid
 
-        centroids = spark.read.parquet(os.path.join(base, "centroids"))
+        centroids = read_parquet(spark, os.path.join(base, "centroids"))
         asg = assign_nearest_centroid(new_rows, centroids, id_col, vec_col)
         codes = codes.join(asg, "vec_id")
     codes = codes.localCheckpoint(eager=True)

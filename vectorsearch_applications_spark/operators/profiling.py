@@ -47,7 +47,7 @@ def _label(name: str) -> str:
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """(column_name, n_null, n_distinct, min_s, max_s) per requested
     column — one stats scan + one NDV scan, both Expand-free."""
-    from ..functions.vectors import sql_ident
+    from ..functions.vectors import sql_alias, sql_ident
 
     # the per-column stat aggregates and NDV branches parse as SQL (§12
     # fast path, r12): same trees as the retired Column forms — sum over
@@ -57,7 +57,7 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     stack_args = []
     for c in cols:
         q = sql_ident(c)
-        nn, mn, mx = (sql_ident(f"_{s}_{c}") for s in ("nn", "mn", "mx"))
+        nn, mn, mx = (sql_alias(f"_{s}_{c}") for s in ("nn", "mn", "mx"))
         exprs += [
             f"sum(CAST(({q} IS NULL) AS BIGINT)) AS {nn}",
             f"CAST(min({q}) AS STRING) AS {mn}",

@@ -73,16 +73,14 @@ SEARCH_QUERIES: list[tuple[int, str]] = [
 
 
 def _search_queries_df(spark: SparkSession) -> DataFrame:
-    # ONE partition on purpose: createDataFrame(<python list>) backs the
-    # frame with parallelize(data) at DEFAULT parallelism — 3 rows
-    # spread over |cores| partitions, so every query-side action (the
-    # take in knn_search, the routed dispatch collect, broadcast builds)
-    # runs a |cores|-task job of almost entirely EMPTY tasks: pure
-    # scheduler latency, measured 0.77–0.94 s per collect at local[32]
-    # vs 0.21 s from this 1-slice form (bitwise-equal rows; r12 §16).
-    # Worse at scale, not better: on a 10k-core cluster the same literal
-    # frame becomes 10k empty tasks per dispatch — and it is why these
-    # rows previously ran FASTER at 8 cores than 32 (r11 scaling block).
+    # A LocalRelation (one_slice_df), not createDataFrame(<python list>):
+    # the list form backs the frame with parallelize(data) at DEFAULT
+    # parallelism — 3 rows over |cores| partitions, so every query-side
+    # action (the take in knn_search, the routed dispatch collect,
+    # broadcast builds) ran a |cores|-task job of almost entirely EMPTY
+    # tasks, 0.77–0.94 s per collect at local[32] (r12 §16), and even a
+    # one-slice parallelize runs a 1-task job through a Python worker.
+    # Over the LocalRelation those actions run no job at all.
     return one_slice_df(spark, SEARCH_QUERIES, "query_id long, query string")
 
 
@@ -1853,10 +1851,9 @@ _RQ_VALUES = ", ".join(f"({i}::BIGINT, '{q}')" for i, q in _ROUTE_QUERIES)
 
 
 def _routes_df(spark: SparkSession) -> DataFrame:
-    # ONE partition for the same reason as _search_queries_df: the
+    # a LocalRelation for the same reason as _search_queries_df: the
     # routed dispatch COLLECTS the embed/argmax over these literal rows
-    # per call, and the default createDataFrame(<list>) form spreads
-    # them over |cores| near-empty tasks of pure scheduler latency.
+    # per call.
     return one_slice_df(
         spark,
         [(r, u) for r, _, u in _ROUTE_UTTERANCES],

@@ -1,4 +1,4 @@
-"""SparkSession factory tuned for the local[32] test harness.
+"""SparkSession factory for the local test and bench harness.
 
 The settings mirror what a 1000-executor cluster deployment would set
 per-executor (AQE on, shuffle partitions ~ cores, Arrow for the Pandas-UDF
@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the whole
+    machine's count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _host_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g: the driver JVM shares the
+    host with the Python workers and the OS page cache."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, total // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "vectorsearch-applications-spark",
     cpus: int | str | None = None,
@@ -21,11 +34,14 @@ def get_spark(
 
     All operators in this package work against *any* session (the driver
     harness passes its own); this factory is for tests and bench runs.
+    CPUs default to the process's CPU affinity and driver memory to half
+    of physical RAM (at most 24g); ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEMORY`` override them.
     """
     if cpus is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if str(cpus).isdigit() else _host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -35,7 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -38,6 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from . import tombstones as _tomb
+from .io import one_slice_df, read_parquet
 
 
 @dataclass(frozen=True)
@@ -107,7 +108,7 @@ def index_live(spark, root: str, name: str, suffix: str) -> DataFrame:
     fam = FAMILIES[suffix]
     base = index_dir(root, name, suffix)
     return _tomb.apply_tombstones(
-        spark, base, spark.read.parquet(os.path.join(base, fam.table)),
+        spark, base, read_parquet(spark, os.path.join(base, fam.table)),
         fam.id_col,
     )
 
@@ -202,7 +203,8 @@ def index_inventory(spark, root: str) -> DataFrame:
         rows.append(
             (collection, family, base, n, live, n_tombs, n_files, n_tombs > 0)
         )
-    return spark.createDataFrame(
+    return one_slice_df(
+        spark,
         rows,
         "collection string, family string, path string, rows long, "
         "live_rows long, tombstoned_ids long, n_files long, "

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .io import read_parquet
+
 TOMBSTONES = "tombstones"
 
 
@@ -72,7 +74,7 @@ def load_tombstones(spark, base: str, id_col: str) -> DataFrame | None:
 
     path = _tomb_path(base)
     try:
-        return spark.read.parquet(path).select(id_col).distinct()
+        return read_parquet(spark, path).select(id_col).distinct()
     except AnalysisException as ex:
         if is_path_not_found(ex):
             return None
