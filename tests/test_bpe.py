@@ -144,7 +144,7 @@ def test_encode_vocab_spells_every_corpus_word(spark):
     from vectorsearch_applications_spark.functions.text import tokenize
 
     vocab = (
-        docs.select(F.explode(tokenize(F.col("text"))).alias("word"))
+        docs.select(F.explode(tokenize("text")).alias("word"))
         .distinct()
     )
     enc = encode_vocab(vocab, merges)

@@ -609,7 +609,7 @@ def test_client_routed_query_hash_query_vectors(client, spark):
         docs.select("doc_id", "text"), "doc_id", "text", 16
     ).select(F.col("doc_id").alias("vec_id"), "embedding")
     qv = queries.select(
-        "query_id", hash_embed_col(F.col("query"), 16).alias("query_vec")
+        "query_id", hash_embed_col("query", 16).alias("query_vec")
     )
     want = routed_query_pipeline(
         spark,

@@ -31,7 +31,7 @@ def test_streaming_ingest_appends_collection(spark, tmp_path):
 
     def index_batch(batch_df, epoch_id):
         chunks = chunk_tokens(batch_df, chunk_size=16).withColumn(
-            "content_embedding", hash_embed_col(F.col("chunk_text"), 8)
+            "content_embedding", hash_embed_col("chunk_text", 8)
         )
         chunks.write.mode("append").parquet(sink)
 
@@ -262,10 +262,10 @@ def test_minhash_index_append_matches_rebuild(spark, tmp_path):
     rows become part of the standing index for the NEXT batch."""
     from vectorsearch_applications_spark.operators.dedup import (
         minhash_index_append,
-        minhash_load_index,
         minhash_lsh_pairs,
         minhash_save_index,
     )
+    from vectorsearch_applications_spark.sources.index_catalog import index_live
     from vectorsearch_applications_spark.sources.io import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").filter(
@@ -306,7 +306,7 @@ def test_minhash_index_append_matches_rebuild(spark, tmp_path):
 
     on_disk = {
         (r["doc_id"], r["band"], r["band_key"])
-        for r in minhash_load_index(spark, root, "docs").collect()
+        for r in index_live(spark, root, "docs", "minhash").collect()
     }
     fresh = {
         (r["doc_id"], r["band"], r["band_key"])
@@ -322,11 +322,11 @@ def test_simhash_index_append_matches_rebuild(spark, tmp_path):
     known ∪ screened(b1) ∪ screened(b2) == full rebuild."""
     from vectorsearch_applications_spark.operators.dedup import (
         simhash_index_append,
-        simhash_load_index,
         simhash_neardup_pairs,
         simhash_save_index,
         simhash_bands,
     )
+    from vectorsearch_applications_spark.sources.index_catalog import index_live
     from vectorsearch_applications_spark.sources.io import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").filter(
@@ -368,7 +368,7 @@ def test_simhash_index_append_matches_rebuild(spark, tmp_path):
     assert rebuilt  # non-vacuous: the widened ball must find pairs
     on_disk = {
         (r["doc_id"], r["simhash"], r["band"], r["bval"])
-        for r in simhash_load_index(spark, root, "docs").collect()
+        for r in index_live(spark, root, "docs", "simhash").collect()
     }
     fresh = {
         (r["doc_id"], r["simhash"], r["band"], r["bval"])
@@ -391,11 +391,11 @@ def test_index_meta_is_authoritative_for_appends(spark, tmp_path):
     from vectorsearch_applications_spark.operators.dedup import (
         minhash_bands,
         minhash_index_append,
-        minhash_load_index,
         minhash_save_index,
         simhash_index_append,
         simhash_save_index,
     )
+    from vectorsearch_applications_spark.sources.index_catalog import index_live
 
     docs = load_table(spark, SF_SMOKE, "documents").filter(
         F.col("doc_id") < 200
@@ -409,7 +409,7 @@ def test_index_meta_is_authoritative_for_appends(spark, tmp_path):
     minhash_index_append(spark, root, "m", batch)  # resolves 8/2 from meta
     on_disk = {
         (r["doc_id"], r["band"], r["band_key"])
-        for r in minhash_load_index(spark, root, "m").collect()
+        for r in index_live(spark, root, "m", "minhash").collect()
     }
     fresh = {
         (r["doc_id"], r["band"], r["band_key"])

@@ -20,15 +20,14 @@ from vectorsearch_applications_spark.operators.bm25 import (
 from vectorsearch_applications_spark.operators.dedup import (
     minhash_bands,
     minhash_index_append,
-    minhash_load_index,
     minhash_save_index,
     minhash_screen_batch,
-    simhash_load_index,
     simhash_save_index,
 )
 from vectorsearch_applications_spark.sources.index_catalog import (
     index_compact,
     index_delete,
+    index_live,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -77,7 +76,7 @@ def test_minhash_delete_equals_rebuild_and_compact(spark, tmp_path):
     got = {
         (r["doc_a"], r["doc_b"])
         for r in minhash_screen_batch(
-            minhash_load_index(spark, root, "c"), minhash_bands(batch)
+            index_live(spark, root, "c", "minhash"), minhash_bands(batch)
         ).collect()
     }
     assert got == want and want
@@ -90,11 +89,11 @@ def test_minhash_delete_equals_rebuild_and_compact(spark, tmp_path):
 
     # compaction folds the tombstones physically: same live view after
     live_before = {
-        tuple(r) for r in minhash_load_index(spark, root, "c").collect()
+        tuple(r) for r in index_live(spark, root, "c", "minhash").collect()
     }
     kept = index_compact(spark, root, "c", "minhash")
     live_after = {
-        tuple(r) for r in minhash_load_index(spark, root, "c").collect()
+        tuple(r) for r in index_live(spark, root, "c", "minhash").collect()
     }
     assert live_after == live_before and kept == len(live_after)
 
@@ -106,7 +105,7 @@ def test_minhash_reappend_revives_deleted_doc(spark, tmp_path):
     victim = docs.filter(F.col("doc_id") == 7)
     index_delete(spark, root, "c", "minhash", victim.select("doc_id"))
     assert (
-        minhash_load_index(spark, root, "c")
+        index_live(spark, root, "c", "minhash")
         .filter(F.col("doc_id") == 7)
         .count()
         == 0
@@ -115,7 +114,7 @@ def test_minhash_reappend_revives_deleted_doc(spark, tmp_path):
     # revived doc screens against the standing corpus again
     pairs = minhash_index_append(spark, root, "c", victim)
     assert (
-        minhash_load_index(spark, root, "c")
+        index_live(spark, root, "c", "minhash")
         .filter(F.col("doc_id") == 7)
         .count()
         > 0
@@ -129,12 +128,12 @@ def test_simhash_delete_and_compact(spark, tmp_path):
     simhash_save_index(docs, root, "c")
     deleted = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     assert index_delete(spark, root, "c", "simhash", deleted) == deleted.count()
-    live = simhash_load_index(spark, root, "c")
+    live = index_live(spark, root, "c", "simhash")
     assert live.filter(F.col("doc_id") % 3 == 0).count() == 0
     before = {tuple(r) for r in live.collect()}
     index_compact(spark, root, "c", "simhash")
     after = {
-        tuple(r) for r in simhash_load_index(spark, root, "c").collect()
+        tuple(r) for r in index_live(spark, root, "c", "simhash").collect()
     }
     assert after == before and before
 
@@ -237,16 +236,13 @@ def test_bm25_delete_equals_rebuild_on_survivors(spark, tmp_path):
 
 
 def test_path_not_found_detection_uses_error_condition(spark, tmp_path):
-    """is_path_not_found keys on the structured error condition, not a
-    message substring (r9 advice), and the installed Spark actually
-    raises PATH_NOT_FOUND as the condition for a missing parquet path —
-    if an upgrade renames the class, this pins the break here instead
-    of as every-live-view-read-raises in production."""
+    """The installed Spark raises PATH_NOT_FOUND as the condition for a
+    missing parquet path, and a missing tombstone directory reads as
+    None (nothing ever deleted)."""
     import pytest
     from pyspark.errors import AnalysisException
 
     from vectorsearch_applications_spark.sources.tombstones import (
-        is_path_not_found,
         load_tombstones,
     )
 
@@ -257,17 +253,25 @@ def test_path_not_found_detection_uses_error_condition(spark, tmp_path):
     cond = (ex.getCondition() if hasattr(ex, "getCondition")
             else ex.getErrorClass())
     assert cond == "PATH_NOT_FOUND"  # the installed Spark's condition
-    assert is_path_not_found(ex)
-    # the None contract rides on it
     assert load_tombstones(spark, missing, "doc_id") is None
 
-    # a non-path error whose MESSAGE happens to contain the token must
-    # not read as missing — substring matching got this wrong
-    class FakeEx(Exception):
-        def getCondition(self):
-            return "DIVIDE_BY_ZERO"
 
-    assert not is_path_not_found(FakeEx("mentions PATH_NOT_FOUND"))
+def test_unreadable_tombstones_directory_raises(spark, tmp_path):
+    """Only a MISSING tombstone directory means "nothing deleted": a
+    present one whose files are not parquet must raise, never read as
+    None — None would resurrect every deleted row in the live views."""
+    import pytest
+
+    from vectorsearch_applications_spark.sources.tombstones import (
+        load_tombstones,
+    )
+
+    tomb = tmp_path / "idx" / "tombstones"
+    tomb.mkdir(parents=True)
+    (tomb / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception) as exc:
+        load_tombstones(spark, str(tmp_path / "idx"), "doc_id").collect()
+    assert "parquet" in str(exc.value).lower()
 
 
 def test_bm25_save_index_empty_corpus_completes(spark, tmp_path):

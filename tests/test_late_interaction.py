@@ -109,7 +109,7 @@ def test_two_stage_knn_first_stage(spark):
     demb = hash_embed_ids(docs.select("doc_id", "text"), "doc_id", "text", 16)
     demb = demb.select(F.col("doc_id").alias("vec_id"), "embedding")
     qemb = q.select(
-        "query_id", hash_embed_col(F.col("query"), 16).alias("query_vec")
+        "query_id", hash_embed_col("query", 16).alias("query_vec")
     )
     cands = knn_search(demb, qemb, k=20).select(
         "query_id", F.col("vec_id").alias("doc_id")

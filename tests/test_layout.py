@@ -17,7 +17,7 @@ def morton_interleave(x, y, bits=16):
 
 
 def zorder_layout(df, x_col, y_col, bits=16, bucket_bits=12):
-    m = morton_interleave(F.col(x_col), F.col(y_col), bits)
+    m = morton_interleave(x_col, y_col, bits)
     return df.withColumn("morton", m).withColumn(
         "zbucket",
         F.floor(F.col("morton") / (1 << (2 * bits - bucket_bits))).cast(
@@ -37,7 +37,7 @@ def _py_morton(x: int, y: int, bits: int = 16) -> int:
 def test_morton_matches_python_bit_interleave(spark):
     rows = [(x, y) for x in range(0, 300, 7) for y in range(0, 300, 11)]
     df = spark.createDataFrame(rows, "x long, y long").withColumn(
-        "m", morton_interleave(F.col("x"), F.col("y"))
+        "m", morton_interleave("x", "y")
     )
     for r in df.collect():
         assert r["m"] == _py_morton(r["x"], r["y"]), (r["x"], r["y"])

@@ -67,18 +67,61 @@ def test_hash_embed_deterministic_unit_norm(spark):
         [(1, "spark join order"), (2, "spark join order"), (3, "other text")],
         "id long, text string",
     )
-    rows = df.select("id", hash_embed_col(F.col("text"), dim=16).alias("e")).collect()
+    rows = df.select("id", hash_embed_col("text", dim=16).alias("e")).collect()
     e = {r["id"]: r["e"] for r in rows}
     assert e[1] == e[2] != e[3]
     assert len(e[1]) == 16
     assert abs(sum(x * x for x in e[1]) - 1.0) < 1e-9
 
 
+def _dim_contrib_reference(token, d):
+    """Per-token contribution to dimension d (lambda variable), built
+    through the DataFrame API: ((hex byte d of md5(token)) − 127.5)/128."""
+    if isinstance(d, int):
+        sub = F.substring(F.md5(token), 2 * d + 1, 2)
+    else:
+        sub = F.md5(token).substr(d * 2 + 1, F.lit(2))
+    return (F.conv(sub, 16, 10).cast("double") - 127.5) / 128.0
+
+
+def _hash_embed_column_reference(text, dim):
+    """hash_embed_col's tree assembled node by node through the
+    DataFrame API — the reference the one-string SQL builder
+    (functions/embed.py:_HASH_EMBED_SQL) must match bitwise."""
+    toks = F.filter(
+        F.split(F.lower(text), r"\W+"), lambda x: x != F.lit("")
+    )
+    raw = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: F.aggregate(
+            toks,
+            F.lit(0.0),
+            lambda acc, t: acc + _dim_contrib_reference(t, d),
+        ),
+    )
+
+    def _norm(r):
+        return F.sqrt(
+            F.aggregate(
+                F.transform(r, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
+            )
+        )
+
+    return F.element_at(
+        F.transform(
+            F.array(raw),
+            lambda r: F.when(_norm(r) == 0, r).otherwise(
+                F.transform(r, lambda x: x / _norm(r))
+            ),
+        ),
+        1,
+    )
+
+
 def test_hash_embed_col_name_path_bitwise_equal(spark):
-    """The named-column fast construction path (one JVM-parsed SQL
-    expression, functions/embed.py:_HASH_EMBED_SQL) must produce
-    bitwise-identical vectors to the Column-input DataFrame-API path —
-    same Catalyst tree, different assembly route."""
+    """hash_embed_col (one JVM-parsed SQL expression) must produce
+    bitwise-identical vectors to the same tree assembled through the
+    DataFrame API."""
     df = spark.createDataFrame(
         [
             (1, "What is vector search and how does BM25 differ?"),
@@ -93,7 +136,7 @@ def test_hash_embed_col_name_path_bitwise_equal(spark):
     )
     for dim in (8, 16):
         a = df.select(
-            "id", hash_embed_col(F.col("text"), dim).alias("e")
+            "id", _hash_embed_column_reference(F.col("text"), dim).alias("e")
         ).collect()
         b = df.select("id", hash_embed_col("text", dim).alias("e")).collect()
         assert sorted(map(repr, a)) == sorted(map(repr, b))
@@ -103,10 +146,7 @@ def test_hash_embed_ids_sql_construction_bitwise_equal(spark):
     """hash_embed_ids' SQL-string construction must match the
     DataFrame-API form it replaced bitwise (same tree: per-dim md5-byte
     contributions, groupBy sums, left-fold norm seeded 0.0D)."""
-    from vectorsearch_applications_spark.functions.embed import (
-        _dim_contrib,
-        hash_embed_ids,
-    )
+    from vectorsearch_applications_spark.functions.embed import hash_embed_ids
     from vectorsearch_applications_spark.functions.text import tokenize
 
     df = load_table(spark, SF_SMOKE, "documents").limit(60)
@@ -116,7 +156,7 @@ def test_hash_embed_ids_sql_construction_bitwise_equal(spark):
     )
     per_tok = toks.select(
         "_eid",
-        *[_dim_contrib(F.col("_t"), d).alias(f"_v{d}") for d in range(dim)],
+        *[_dim_contrib_reference(F.col("_t"), d).alias(f"_v{d}") for d in range(dim)],
     )
     sums = per_tok.groupBy("_eid").agg(
         *[F.sum(f"_v{d}").alias(f"_s{d}") for d in range(dim)]
@@ -553,13 +593,17 @@ def test_cosine_math(spark):
         [([3.0, 4.0], [3.0, 4.0]), ([1.0, 0.0], [0.0, 1.0])],
         "a array<double>, b array<double>",
     )
-    rows = df.select(
-        cosine_similarity(
-            l2_normalize(F.col("a")), l2_normalize(F.col("b"))
-        ).alias("c")
-    ).collect()
+    rows = (
+        df.select("a", "b", l2_normalize("a").alias("na"), l2_normalize("b").alias("nb"))
+        .select(
+            cosine_similarity("na", "nb").alias("c"),
+            cosine_similarity("a", "b", assume_normalized=False).alias("cu"),
+        )
+        .collect()
+    )
     assert abs(rows[0]["c"] - 1.0) < 1e-12
     assert abs(rows[1]["c"]) < 1e-12
+    assert all(abs(r["cu"] - r["c"]) < 1e-12 for r in rows)
 
 
 def test_bpe_tokenize_golden(spark):
@@ -763,9 +807,12 @@ def test_quantize_embeddings_codes_and_zero_vector(spark):
 
 
 def test_quantized_dot_mixed_str_and_column_inputs(spark):
-    """Every mix of column names and Columns scores like the all-name
-    form: a name among Columns binds as a column, never a literal."""
+    """quantized_dot takes column names only: all-name inputs score
+    exactly, and any Column among the inputs raises instead of binding
+    to a silently different expression."""
     import itertools
+
+    import pytest
 
     from vectorsearch_applications_spark.operators.quantize import (
         quantized_dot,
@@ -779,9 +826,11 @@ def test_quantized_dot_mixed_str_and_column_inputs(spark):
     want = [r[0] for r in df.select(quantized_dot(*names)).collect()]
     assert want == [0.5 * 0.25 * (3 - 8 - 5), 0.1 * 2.0 * (14 + 2)]
     for mask in itertools.product((False, True), repeat=4):
+        if not any(mask):
+            continue
         args = [F.col(n) if m else n for n, m in zip(names, mask)]
-        got = [r[0] for r in df.select(quantized_dot(*args)).collect()]
-        assert got == want, mask
+        with pytest.raises(TypeError, match="column name"):
+            quantized_dot(*args)
 
 
 def test_profile_columns_escapes_awkward_column_names(spark):
@@ -1073,13 +1122,12 @@ def test_retrieval_metrics_sql_construction_bitwise_equal(spark):
 
 
 def test_langid_ngram_sql_construction_bitwise_equal(spark):
-    """r12 §12: langid_ngram's SQL-parsed score/argmax select must match
-    the retired Column form (rebuilt inline) bitwise, including the
-    'und' zero-score docs and the alphabetical tie-break."""
+    """langid_ngram's SQL-parsed score/argmax select must match the same
+    trees assembled through the DataFrame API (rebuilt inline) bitwise,
+    including the 'und' zero-score docs and the alphabetical tie-break."""
     from vectorsearch_applications_spark.operators.textstats import (
         LANG_PROFILES,
         langid_ngram,
-        langid_normalize,
     )
 
     df = spark.createDataFrame(
@@ -1106,7 +1154,12 @@ def test_langid_ngram_sql_construction_bitwise_equal(spark):
             total = term if total is None else total + term
         return (total / F.lit(3)).cast("bigint")
 
-    norm = langid_normalize("text")
+    # space-padded, lowercased, [a-z ]-only text — the gram alphabet
+    norm = F.concat(
+        F.lit(" "),
+        F.regexp_replace(F.lower(F.col("text")), "[^a-z ]", " "),
+        F.lit(" "),
+    )
 
     def _score_col(grams):
         return F.transform(F.array(norm), lambda t: _score(t, grams))[0]
@@ -1163,12 +1216,16 @@ def test_isin_ints_sql_construction_bitwise_equal(spark):
 
 
 def test_tokenize_sql_matches_column_path_under_both_parser_confs(spark):
-    """The SQL-fragment tokenizer must produce bitwise-identical token
-    arrays to the Column path under BOTH settings of
-    spark.sql.parser.escapedStringLiterals (r12 §5: the escape-free
-    character class was reverted for its 3-5x split cost, so the \\W+
-    literal must be escaped per the ACTIVE session's parser conf)."""
+    """The SQL-fragment tokenizers must produce bitwise-identical token
+    arrays to the same trees assembled through the DataFrame API under
+    BOTH settings of spark.sql.parser.escapedStringLiterals (the
+    escape-free character class was reverted for its 3-5x split cost,
+    so the \\W+ literal must be escaped per the ACTIVE session's parser
+    conf; the BPE pattern also carries a quote)."""
     from vectorsearch_applications_spark.functions.text import (
+        BPE_PATTERN,
+        TOKEN_PATTERN,
+        bpe_tokenize,
         sql_token_pattern_literal,
         tokenize,
         tokenize_sql,
@@ -1188,8 +1245,28 @@ def test_tokenize_sql_matches_column_path_under_both_parser_confs(spark):
             assert lit == (r"\W+" if esc == "true" else "\\\\W+")
             a = df.select(F.expr(tokenize_sql("t")).alias("x")).collect()
             b = df.select(tokenize("t").alias("x")).collect()
-            assert list(map(repr, a)) == list(map(repr, b))
+            ref = df.select(
+                F.filter(
+                    F.split(F.lower(F.col("t")), TOKEN_PATTERN),
+                    lambda x: x != F.lit(""),
+                ).alias("x")
+            ).collect()
+            assert list(map(repr, a)) == list(map(repr, ref))
+            assert list(map(repr, b)) == list(map(repr, ref))
             assert a[0].x == ["hello", "w", "rld", "a_b", "c", "42"]
+            quoted = df.union(
+                spark.createDataFrame([("Don't stop!! it's \\s 'q'",)], "t string")
+            )
+            bpe = quoted.select(bpe_tokenize("t").alias("x")).collect()
+            assert bpe[-1].x == [
+                "don", "'t", " stop", "!!", " it", "'s", " \\", "s", "'q",
+            ]
+            bpe_ref = quoted.select(
+                F.regexp_extract_all(
+                    F.lower(F.col("t")), F.lit(BPE_PATTERN), 0
+                ).alias("x")
+            ).collect()
+            assert list(map(repr, bpe)) == list(map(repr, bpe_ref))
     finally:
         spark.conf.set(conf_key, saved)
 

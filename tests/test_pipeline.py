@@ -35,7 +35,7 @@ def test_create_dataset_pipeline(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents").limit(50)
     chunks = chunk_tokens(docs, chunk_size=16)
     embedded = chunks.withColumn(
-        "content_embedding", hash_embed_col(F.col("chunk_text"), 16)
+        "content_embedding", hash_embed_col("chunk_text", 16)
     )
     # O1: chunk ⋈ episode metadata (broadcast — the dim side is tiny)
     final = embedded.join(

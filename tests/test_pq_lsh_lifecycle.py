@@ -36,6 +36,7 @@ from vectorsearch_applications_spark.operators.pq import (
 from vectorsearch_applications_spark.sources.index_catalog import (
     index_compact,
     index_delete,
+    index_live,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -262,8 +263,6 @@ def test_lsh_revive_changed_vector_no_stale_rows(spark, tmp_path):
 
 
 def test_pq_revive_changed_vector_no_stale_codes(spark, tmp_path):
-    from vectorsearch_applications_spark.operators.pq import pq_load_index
-
     root = str(tmp_path)
     full = _emb(spark)
     pq_save_index(full, root, "c")
@@ -274,7 +273,7 @@ def test_pq_revive_changed_vector_no_stale_codes(spark, tmp_path):
     )
     pq_index_append(spark, root, "c", changed)
 
-    assert pq_load_index(spark, root, "c").filter(
+    assert index_live(spark, root, "c", "pq").filter(
         F.col("vec_id") == 0
     ).count() == 1
 

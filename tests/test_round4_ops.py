@@ -78,7 +78,7 @@ def test_lsh_bucket_range_and_locality(spark):
             (3, [-1.0, 0.0, 0.0, 0.0]),  # antipode of 1
         ],
         "vec_id long, embedding array<double>",
-    ).withColumn("bucket", lsh_bucket(F.col("embedding"), planes))
+    ).withColumn("bucket", lsh_bucket("embedding", planes))
     rows = {r["vec_id"]: r["bucket"] for r in df.collect()}
     assert all(0 <= b < 16 for b in rows.values())
     assert rows[1] == rows[2]  # near-identical vectors collide
@@ -277,11 +277,28 @@ def test_kgram_spans_detect_shared_span(spark):
     assert out[3]["dup_ratio"] == 0.0
 
 
+def _lsh_bucket_column_reference(vec, planes):
+    """The DataFrame-API form of lsh_bucket_sql, built node by node —
+    the reference the one-string SQL builder must match bitwise."""
+    dv = F.transform(vec, lambda x: x.cast("double"))
+    code = F.lit(0).cast("bigint")
+    for p, row in enumerate(planes):
+        lit_plane = F.array(*[F.lit(v) for v in row])
+        proj = F.aggregate(
+            F.zip_with(lit_plane, dv, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        code = code + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)).cast(
+            "bigint"
+        )
+    return code
+
+
 def test_lsh_bucket_sql_path_bitwise_equal(spark):
-    """The str fast construction path of lsh_bucket (one JVM-parsed SQL
-    expression, r12 §12 recipe) must bucket bitwise-identically to the
-    Column-input DataFrame-API path — same Catalyst tree, different
-    assembly route. Covers negative components, zero vectors, and a
+    """lsh_bucket (one JVM-parsed SQL expression) must bucket
+    bitwise-identically to the same tree assembled through the
+    DataFrame API. Covers negative components, zero vectors, and a
     vector landing exactly on a hyperplane (proj == 0 → bit set)."""
     planes = lsh_planes(n_planes=4, dim=4)
     df = spark.createDataFrame(
@@ -294,15 +311,16 @@ def test_lsh_bucket_sql_path_bitwise_equal(spark):
         "vec_id long, embedding array<double>",
     )
     a = df.select(
-        "vec_id", lsh_bucket(F.col("embedding"), planes).alias("b")
+        "vec_id",
+        _lsh_bucket_column_reference(F.col("embedding"), planes).alias("b"),
     ).collect()
     b = df.select("vec_id", lsh_bucket("embedding", planes).alias("b")).collect()
     assert sorted(map(repr, a)) == sorted(map(repr, b))
 
 
 def test_lsh_bucket_table_sql_construction_bitwise_equal(spark):
-    """lsh_bucket_table's selectExpr construction must match the retired
-    Column-API form bitwise (same id/vector-cast/bucket trees)."""
+    """lsh_bucket_table's selectExpr construction must match the
+    DataFrame-API form bitwise (same id/vector-cast/bucket trees)."""
     from vectorsearch_applications_spark.operators.lsh import lsh_bucket_table
 
     planes = lsh_planes(n_planes=4, dim=3)
@@ -314,6 +332,6 @@ def test_lsh_bucket_table_sql_construction_bitwise_equal(spark):
     old = df.select(
         F.col("vec_id").alias("vec_id"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
-        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
+        _lsh_bucket_column_reference(F.col("embedding"), planes).alias("bucket"),
     ).collect()
     assert sorted(map(repr, new)) == sorted(map(repr, old))

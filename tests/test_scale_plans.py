@@ -516,7 +516,7 @@ def test_encode_map_join_both_shapes(spark):
         .orderBy("merge_rank")
         .collect()
     ]
-    words = docs.select(F.explode(tokenize(F.col("text"))).alias("word"))
+    words = docs.select(F.explode(tokenize("text")).alias("word"))
     word_map = encode_vocab(words.distinct(), merges).select(
         "word", F.size(F.split("syms", " ")).alias("n_toks")
     )

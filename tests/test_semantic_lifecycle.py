@@ -15,13 +15,13 @@ from vectorsearch_applications_spark.operators.ann import (
 from vectorsearch_applications_spark.operators.dedup import (
     semantic_index_append,
     semantic_load_centroids,
-    semantic_load_index,
     semantic_save_index,
     semantic_screen_batch,
 )
 from vectorsearch_applications_spark.sources.index_catalog import (
     index_compact,
     index_delete,
+    index_live,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -86,7 +86,7 @@ def test_semantic_append_equals_rebuild(spark, tmp_path):
     # the FROZEN codebook: on-disk equals a fresh full assignment
     on_disk = {
         (r["vec_id"], r["centroid_id"])
-        for r in semantic_load_index(spark, root, "vecs").collect()
+        for r in index_live(spark, root, "vecs", "semantic").collect()
     }
     fresh = {
         (r["vec_id"], r["centroid_id"])
@@ -112,7 +112,7 @@ def test_semantic_delete_compact_revive(spark, tmp_path):
     assert index_delete(spark, root, "vecs", "semantic", victim) == 1
     # replay-idempotent
     assert index_delete(spark, root, "vecs", "semantic", victim) == 0
-    live = semantic_load_index(spark, root, "vecs")
+    live = index_live(spark, root, "vecs", "semantic")
     assert live.filter(F.col("vec_id") == 2).count() == 0
     # a deleted vector stops producing evidence IMMEDIATELY: screen a
     # batch that duplicates it exactly — no pair against vec 2
@@ -127,16 +127,16 @@ def test_semantic_delete_compact_revive(spark, tmp_path):
     # same-cluster neighbors only if any pass the threshold — but it
     # must itself now be part of the standing index
     assert (
-        semantic_load_index(spark, root, "vecs")
+        index_live(spark, root, "vecs", "semantic")
         .filter(F.col("vec_id") == 100002)
         .count()
         == 1
     )
     # compaction folds the tombstone into a physical rewrite
     kept = index_compact(spark, root, "vecs", "semantic")
-    assert kept == semantic_load_index(spark, root, "vecs").count()
+    assert kept == index_live(spark, root, "vecs", "semantic").count()
     assert (
-        semantic_load_index(spark, root, "vecs")
+        index_live(spark, root, "vecs", "semantic")
         .filter(F.col("vec_id") == 2)
         .count()
         == 0
@@ -159,7 +159,7 @@ def test_semantic_revive_changed_vector_no_stale_rows(spark, tmp_path):
     )
     semantic_index_append(spark, root, "vecs", changed, THRESHOLD)
     rows = (
-        semantic_load_index(spark, root, "vecs")
+        index_live(spark, root, "vecs", "semantic")
         .filter(F.col("vec_id") == 4)
         .collect()
     )
@@ -177,12 +177,12 @@ def test_semantic_empty_batch_append_is_noop(spark, tmp_path):
     cents = _centroids(_emb(spark))
     root = str(tmp_path)
     semantic_save_index(emb, cents, root, "vecs")
-    before = semantic_load_index(spark, root, "vecs").count()
+    before = index_live(spark, root, "vecs", "semantic").count()
     evid = semantic_index_append(
         spark, root, "vecs", emb.limit(0), THRESHOLD
     )
     assert evid.count() == 0
-    assert semantic_load_index(spark, root, "vecs").count() == before
+    assert index_live(spark, root, "vecs", "semantic").count() == before
 
 
 def test_semantic_family_in_index_inventory(spark, tmp_path):
@@ -252,7 +252,7 @@ def test_streaming_semantic_index_append(spark, tmp_path):
     asg_all = assign_nearest_centroid(all300, cents, keep_vec=True)
     on_disk = {
         (r["vec_id"], r["centroid_id"])
-        for r in semantic_load_index(spark, root, "c").collect()
+        for r in index_live(spark, root, "c", "semantic").collect()
     }
     fresh = {
         (r["vec_id"], r["centroid_id"])
@@ -287,7 +287,7 @@ def test_semantic_append_redelivery_idempotent(spark, tmp_path):
             spark, root, "c", batch, THRESHOLD, dedupe_redelivered=True
         )
     )
-    rows_after_first = semantic_load_index(spark, root, "c").count()
+    rows_after_first = index_live(spark, root, "c", "semantic").count()
     # the redelivered epoch: identical bytes, already standing
     replay = _pair_set(
         semantic_index_append(
@@ -295,9 +295,9 @@ def test_semantic_append_redelivery_idempotent(spark, tmp_path):
         )
     )
     assert replay == set()
-    assert semantic_load_index(spark, root, "c").count() == rows_after_first
+    assert index_live(spark, root, "c", "semantic").count() == rows_after_first
     assert (
-        semantic_load_index(spark, root, "c")
+        index_live(spark, root, "c", "semantic")
         .groupBy("vec_id")
         .count()
         .filter(F.col("count") > 1)
@@ -334,7 +334,7 @@ def test_semantic_live_view_prunes_centroid_partitions(spark, tmp_path):
         spark, root, "c", "semantic",
         emb.filter(F.col("vec_id") == 0).select("vec_id"),
     )
-    pruned = semantic_load_index(spark, root, "c").filter(
+    pruned = index_live(spark, root, "c", "semantic").filter(
         F.col("centroid_id").isin([1, 3])
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()

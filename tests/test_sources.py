@@ -310,15 +310,15 @@ def test_zorder_value_interleaves_bits(spark):
 
     df = spark.createDataFrame([(5, 3)], "x long, y long")  # 0b101, 0b011
     (row,) = df.select(
-        zorder_value(F.col("x"), F.col("y"), bits=3).alias("z")
+        zorder_value("x", "y", bits=3).alias("z")
     ).collect()
     # x bits -> even positions (1,0,1 at 0,2,4), y bits -> odd (1,1,0 at 1,3,5)
     assert row["z"] == 0b011011
 
 
 def test_zorder_value_sql_construction_bitwise_equal(spark):
-    """The str fast path (one parsed SQL chain) must build the same
-    BIGINT as the Column loop for every input — r12 §12 conversion pin."""
+    """zorder_value's one parsed SQL chain must build the same BIGINT as
+    the same chain assembled through the DataFrame API, for every input."""
     from vectorsearch_applications_spark.sources.collections import (
         zorder_value,
     )
@@ -326,9 +326,21 @@ def test_zorder_value_sql_construction_bitwise_equal(spark):
     df = spark.createDataFrame(
         [(5, 3), (0, 0), (65535, 65535), (12345, 54321)], "x long, y long"
     )
+    x, y = F.col("x"), F.col("y")
+    z_col = None
+    for i in range(16):
+        xi = F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(1), 2 * i)
+        yi = F.shiftleft(
+            F.shiftright(y.cast("long"), i).bitwiseAND(1), 2 * i + 1
+        )
+        z_col = (
+            xi.bitwiseOR(yi)
+            if z_col is None
+            else z_col.bitwiseOR(xi).bitwiseOR(yi)
+        )
     rows = df.select(
         zorder_value("x", "y", bits=16).alias("z_sql"),
-        zorder_value(F.col("x"), F.col("y"), bits=16).alias("z_col"),
+        z_col.alias("z_col"),
     ).collect()
     for r in rows:
         assert r["z_sql"] == r["z_col"]

@@ -327,7 +327,7 @@ def test_stream_semantic_screen_equals_batch_new_vs_standing(
 
 def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
     """The persisted lifecycle and the streaming screen compose: the
-    standing side of stream_semantic_screen can be semantic_load_index's
+    standing side of stream_semantic_screen can be the semantic index's
     live view (stored `embedding` column, tombstones applied) with the
     codebook from semantic_load_centroids — a deleted standing vector
     stops colliding with arrivals immediately."""
@@ -336,11 +336,11 @@ def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
     )
     from vectorsearch_applications_spark.operators.dedup import (
         semantic_load_centroids,
-        semantic_load_index,
         semantic_save_index,
     )
     from vectorsearch_applications_spark.sources.index_catalog import (
         index_delete,
+        index_live,
     )
     from vectorsearch_applications_spark.streaming.dedup import (
         stream_semantic_screen,
@@ -361,7 +361,7 @@ def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
     saved_cents = semantic_load_centroids(spark, root, "c")
-    live = semantic_load_index(spark, root, "c")
+    live = index_live(spark, root, "c", "semantic")
     want = {
         (r["new_vec_id"], r["standing_vec_id"])
         for r in stream_semantic_screen(
@@ -386,7 +386,7 @@ def test_stream_semantic_screen_reads_persisted_index(spark, tmp_path):
         (r["new_vec_id"], r["standing_vec_id"])
         for r in stream_semantic_screen(
             batch,
-            semantic_load_index(spark, root, "c"),
+            index_live(spark, root, "c", "semantic"),
             saved_cents,
             threshold=0.999,
         ).collect()

@@ -22,37 +22,24 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .text import tokenize
+from .text import tokenize, tokenize_sql
 from .vectors import sql_alias, sql_ident
 
 
-def _dim_contrib(token: Column, d) -> Column:
-    """Per-token contribution to dimension d: one byte of md5(token),
-    centered and scaled — ((hex byte d of md5) − 127.5)/128. One md5 per
-    token serves all 16 dims (2 hex chars each), engine-portable
-    (DuckDB: ('0x' || substr(md5(t), 2d+1, 2))::BIGINT)."""
-    if isinstance(d, int):
-        start = 2 * d + 1
-        sub = F.substring(F.md5(token), start, 2)
-    else:  # lambda variable dimension index
-        sub = F.md5(token).substr(d * 2 + 1, F.lit(2))
-    return (F.conv(sub, 16, 10).cast("double") - 127.5) / 128.0
-
-
-# SQL form of hash_embed_col for the named-column fast path: ONE parsed
-# expression instead of ~10 nested higher-order-function lambdas, each of
-# which costs a py4j round trip per node to assemble (measured 138 ms →
-# 2 ms per construction — driver plan-build latency, paid per query on a
-# real cluster exactly as on the bench). The parsed Catalyst tree is the
-# SAME tree the DataFrame-API path builds (same functions, same literal
-# types, same operand order), so results are bitwise identical — pinned
-# by test_operators.py::test_hash_embed_col_name_path_bitwise_equal.
+# One per-token contribution to dimension d: one byte of md5(token),
+# centered and scaled — ((hex byte d of md5) − 127.5)/128. One md5 per
+# token serves all 16 dims (2 hex chars each), engine-portable (DuckDB:
+# ('0x' || substr(md5(t), 2d+1, 2))::BIGINT). The raw array is
+# **let-bound** via a 1-element ``transform`` lambda so it is evaluated
+# once per row — inlining it naively into every normalized element
+# copies the whole raw tree per element (17× the hash work; this exact
+# mistake made embedding 1000 docs take minutes).
 _HASH_EMBED_SQL = r"""element_at(
   transform(
     array(
       transform(sequence(0, {dm1}), d ->
         aggregate(
-          filter(split(lower({t}), '{pat}'), x -> x != ''),
+          {toks},
           0.0D,
           (acc, tk) -> acc +
             ((cast(conv(substr(md5(tk), d * 2 + 1, 2), 16, 10)
@@ -70,58 +57,16 @@ _HASH_EMBED_SQL = r"""element_at(
 1)"""
 
 
-def hash_embed_col(text: Column | str, dim: int = 16) -> Column:
+def hash_embed_col(text: str, dim: int = 16) -> Column:
     """Deterministic unit-norm embedding of a text column (dim ≤ 16).
 
     dim_d(text) = Σ_tokens ((byte d of md5(token)) − 127.5)/128, then
-    L2-normalized. Zero-token texts embed to the zero vector.
-
-    ``text`` as a **str** (column name) takes the fast construction path:
-    the whole expression parses JVM-side from ``_HASH_EMBED_SQL`` in one
-    py4j round trip (~70× cheaper to build; bitwise-identical tree — see
-    the template comment). A ``Column`` input builds the same tree via
-    the DataFrame API below; prefer the name form on hot driver paths.
-
-    The raw array is **let-bound** via a 1-element ``transform`` lambda so
-    it is evaluated once per row — inlining it naively (e.g.
-    ``when(cond, raw).otherwise(l2_normalize(raw))``) copies the whole raw
-    tree into every normalized element (17× the hash work; this exact
-    mistake made embedding 1000 docs take minutes).
-    """
+    L2-normalized. Zero-token texts embed to the zero vector. The whole
+    expression parses JVM-side from ``_HASH_EMBED_SQL`` in one py4j
+    round trip."""
     assert dim <= 16, "one md5 yields 16 byte-dims"
-    if isinstance(text, str):
-        from .text import sql_token_pattern_literal
-
-        return F.expr(
-            _HASH_EMBED_SQL.format(
-                t=sql_ident(text), dm1=dim - 1, pat=sql_token_pattern_literal()
-            )
-        )
-    toks = tokenize(text)
-    raw = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: F.aggregate(
-            toks,
-            F.lit(0.0),
-            lambda acc, t: acc + _dim_contrib(t, d),
-        ),
-    )
-
-    def _norm(r: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(r, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-            )
-        )
-
-    return F.element_at(
-        F.transform(
-            F.array(raw),
-            lambda r: F.when(_norm(r) == 0, r).otherwise(
-                F.transform(r, lambda x: x / _norm(r))
-            ),
-        ),
-        1,
+    return F.expr(
+        _HASH_EMBED_SQL.format(dm1=dim - 1, toks=tokenize_sql(sql_ident(text)))
     )
 
 
@@ -158,14 +103,9 @@ def hash_embed_ids(
     toks = df.select(
         F.col(id_col).alias("_eid"), F.explode(tokenize(text_col)).alias("_t")
     )
-    # Construction fast path (same rationale as _HASH_EMBED_SQL): the
-    # per-dimension contribution / sum / normalize expressions parse
-    # JVM-side as SQL strings instead of assembling ~350 py4j tree nodes
-    # one round trip each (measured 566 ms → ~20 ms per construction —
-    # driver latency paid on every search that embeds a corpus). The
-    # parsed trees are identical to the DataFrame-API forms they replace
-    # (same functions, literal types, operand order: the norm chain is
-    # the same left fold seeded 0.0D), so outputs are bitwise unchanged —
+    # The per-dimension contribution / sum / normalize expressions parse
+    # JVM-side as SQL strings (~350 tree nodes otherwise, 566 ms → ~20 ms
+    # per construction); the norm chain is a left fold seeded 0.0D —
     # pinned by
     # test_operators.py::test_hash_embed_ids_sql_construction_bitwise_equal.
     contrib = (

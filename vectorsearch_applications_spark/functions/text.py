@@ -13,59 +13,64 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .vectors import sql_ident
+
 # Regexp used on BOTH engines (Spark `split`, DuckDB `regexp_split_to_array`).
 # Kept as \W+ on purpose: the semantically-identical character class
 # [^a-zA-Z0-9_]+ measured 3-5x SLOWER on split-heavy plans (r12 —
 # quality_composite_rank 13 -> 61 s: StringSplit re-compiles its pattern
-# per evaluation, so pattern SOURCE LENGTH is a per-row cost). The SQL
-# fast paths embed it via sql_token_pattern_literal(), which escapes per
-# the session's parser conf (r11 advice: '\\W+' only parses to \W+ while
+# per evaluation, so pattern SOURCE LENGTH is a per-row cost). Fragments
+# embed it via sql_token_pattern_literal(), which escapes per the
+# session's parser conf (r11 advice: '\\W+' only parses to \W+ while
 # spark.sql.parser.escapedStringLiterals is false, the default).
 TOKEN_PATTERN = r"\W+"
 
 
-def sql_token_pattern_literal() -> str:
-    """TOKEN_PATTERN as it must appear inside a SQL string literal for
-    the ACTIVE session: backslashes doubled under the default parser
-    (backslash is an escape character there), raw under the legacy
-    spark.sql.parser.escapedStringLiterals=true conf."""
+def sql_string_body(s: str) -> str:
+    """``s`` as it must appear between the quotes of a SQL string
+    literal for the ACTIVE session: backslashes doubled and quotes
+    escaped under the default parser (backslash is an escape character
+    there); under the legacy spark.sql.parser.escapedStringLiterals=true
+    conf backslashes stay raw and a quote keeps its backslash (the
+    literal then reads ``\\'``, which a regex matches as ``'``)."""
     from pyspark.sql import SparkSession
 
-    s = SparkSession.getActiveSession()
+    spark = SparkSession.getActiveSession()
     esc = (
-        s is not None
-        and s.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        spark is not None
+        and spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
         == "true"
     )
-    return TOKEN_PATTERN if esc else TOKEN_PATTERN.replace("\\", "\\\\")
+    if not esc:
+        s = s.replace("\\", "\\\\")
+    return s.replace("'", "\\'")
 
 
-def tokenize(col: Column | str) -> Column:
-    """lower → split on \\W+ → drop empty strings. Returns array<string>.
-
-    Stays inside whole-stage codegen (no UDF): split + filter are
-    Catalyst expressions.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), TOKEN_PATTERN), lambda x: x != F.lit(""))
+def sql_token_pattern_literal() -> str:
+    """TOKEN_PATTERN as it must appear inside a SQL string literal."""
+    return sql_string_body(TOKEN_PATTERN)
 
 
 def tokenize_sql(text_sql: str) -> str:
-    """SQL-fragment twin of :func:`tokenize` for the §12 construction
-    fast paths — same split/filter tree and the SAME compiled pattern
-    (escaped per the active session's parser conf), so token arrays are
-    bitwise identical to the Column form."""
+    """lower → split on \\W+ → drop empty strings. Returns array<string>.
+
+    Stays inside whole-stage codegen (no UDF): split + filter are
+    Catalyst expressions."""
     return (
         f"filter(split(lower({text_sql}), "
         f"'{sql_token_pattern_literal()}'), x -> x != '')"
     )
 
 
-def token_count(col: Column | str) -> Column:
+def tokenize(col: str) -> Column:
+    return F.expr(tokenize_sql(sql_ident(col)))
+
+
+def token_count(col: str) -> Column:
     """Whitespace/punctuation token count (reference A6 ``get_token_count``,
     ``src/llm/llm_utils.py:6-28`` — tiktoken there; the portable token model
     here)."""
-    return F.size(tokenize(col))
+    return F.expr(f"size({tokenize_sql(sql_ident(col))})")
 
 
 # GPT-2-style pretokenizer, simplified to the alternation both Java regex
@@ -75,21 +80,27 @@ def token_count(col: Column | str) -> Column:
 BPE_PATTERN = r"'[a-z]+| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s']+"
 
 
-def bpe_tokenize(col: Column | str) -> Column:
+def bpe_tokenize_sql(text_sql: str) -> str:
     """BPE-ish pretokenization (reference A6 counts tokens with tiktoken,
     ``src/llm/llm_utils.py:6-28``; this is the portable regex analog of its
     pretokenizer stage). lower → leftmost-first alternation scan. Returns
     array<string>; stays in codegen (regexp_extract_all is a Catalyst
     expression, no UDF)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(F.lower(c), F.lit(BPE_PATTERN), 0)
+    return (
+        f"regexp_extract_all(lower({text_sql}), "
+        f"'{sql_string_body(BPE_PATTERN)}', 0)"
+    )
 
 
-def bpe_token_count(col: Column | str) -> Column:
+def bpe_tokenize(col: str) -> Column:
+    return F.expr(bpe_tokenize_sql(sql_ident(col)))
+
+
+def bpe_token_count(col: str) -> Column:
     """Token count under the BPE-ish pretokenizer — the LLM-billing-shaped
     counter (punctuation runs and contraction tails count as tokens, unlike
     ``token_count`` which drops them)."""
-    return F.size(bpe_tokenize(col))
+    return F.expr(f"size({bpe_tokenize_sql(sql_ident(col))})")
 
 
 def stable_hash64(col: Column, seed: int | None = None) -> Column:

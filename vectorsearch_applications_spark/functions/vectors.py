@@ -17,16 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ a_i·b_i in double precision, left-to-right (matches the DuckDB
-    oracle's list_dot_product to ~1e-12)."""
-    return dot_double(_as_double(a), _as_double(b))
-
-
 def sql_alias(name: str) -> str:
     """``name`` as ONE backtick-quoted SQL identifier (embedded backticks
     doubled, r11 advice) — for output names (``... AS <alias>``), which
@@ -73,12 +63,17 @@ def _name_parts(name: str) -> list[str] | None:
 
 
 def sql_ident(name: str) -> str:
-    """The SQL-fragment twin of ``F.col(name)`` for the construction
-    fast paths: each part of a dotted name backtick-quoted, so
-    ``"meta.emb"`` binds the nested field ``emb`` of struct ``meta``
-    and ``"`a.b`"`` the top-level column ``a.b``, exactly as ``F.col``
-    resolves them. A name ``F.col`` would reject (e.g. a stray
-    backtick, ``"t`x"``) is quoted whole, as one literal name."""
+    """A column name as a SQL operand: each part of a dotted name
+    backtick-quoted, so ``"meta.emb"`` binds the nested field ``emb`` of
+    struct ``meta`` and ``"`a.b`"`` the top-level column ``a.b``,
+    exactly as ``F.col`` resolves them. A name ``F.col`` would reject
+    (e.g. a stray backtick, ``"t`x"``) is quoted whole, as one literal
+    name. Anything but a str (e.g. a Column) raises TypeError: the
+    expression builders take column names only."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__}"
+        )
     parts = _name_parts(name)
     if parts is None:
         return sql_alias(name)
@@ -106,60 +101,69 @@ def isin_ints(col_name: str, values) -> Column:
     return F.col(col_name).isin(vals)
 
 
+# Every vector expression below is built ONE way: as a Spark SQL
+# fragment over SQL operands (a quoted column name from sql_ident, a
+# struct field such as ``c.centroid``, a lambda variable or a nested
+# fragment). Callers embed fragments in one F.expr / selectExpr string,
+# so a whole scoring expression parses JVM-side in a single py4j round
+# trip. The Column-returning entry points take column NAMES only.
+
+
+def cast_double_sql(arr: str) -> str:
+    """``arr`` with every element cast to double."""
+    return f"transform({arr}, x -> cast(x as double))"
+
+
 def dot_double_sql(a: str, b: str) -> str:
-    """SQL-fragment twin of :func:`dot_double` for hot construction
-    paths: callers embed it in ONE ``F.expr``/``selectExpr`` string so
-    the whole scoring expression parses JVM-side in a single py4j round
-    trip instead of assembling ~25 tree nodes at one round trip each
-    (r11 optimization: ~2 ms per round trip on the bench host — builder
-    chatter dominated several interactive-search walls; guide §7.3
-    driver-side planning cost). The parsed tree is the same zip_with +
-    left-fold aggregate seeded 0.0D, so results are bitwise identical
-    (pinned by the ANN/PQ oracle rows and test_operators.py)."""
+    """Σ a_i·b_i for arrays ALREADY cast to double: a zip_with product
+    left-folded from 0.0D (matches the DuckDB oracle's list_dot_product
+    to ~1e-12). Skipping the per-evaluation element casts matters in a
+    pair join, where they would re-run per PAIR: projecting the cast
+    once per ROW and folding raw measured 2.24 s → 1.37 s on the
+    semantic-dedup pair join at sf0.1 (same-session A/B)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def cast_double_sql(arr: str) -> str:
-    """SQL-fragment twin of :func:`_as_double`."""
-    return f"transform({arr}, x -> cast(x as double))"
+def dot_sql(a: str, b: str) -> str:
+    """Σ a_i·b_i in double precision over arrays of any numeric type."""
+    return dot_double_sql(cast_double_sql(a), cast_double_sql(b))
 
 
-def dot_double(a: Column, b: Column) -> Column:
-    """``dot`` for arrays ALREADY cast to double — skips the per-
-    evaluation element casts. In a pair join the cast otherwise re-runs
-    per PAIR (three array allocations each time); projecting the cast
-    once per ROW before the join and folding raw here measured
-    2.24 s → 1.37 s on the semantic-dedup pair join at sf0.1 (same-
-    session A/B). Identical values and fold order, so bitwise-equal
-    results."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def cosine_similarity_sql(a: str, b: str, assume_normalized: bool = True) -> str:
+    if assume_normalized:
+        return dot_sql(a, b)
+    return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
+
+
+def l2_normalize_sql(arr: str) -> str:
+    """``arr`` cast to double and divided by its L2 norm."""
+    d = cast_double_sql(arr)
+    return (
+        f"transform({d}, v -> v / sqrt(aggregate(transform({d}, y -> y * y), "
+        "0.0D, (acc, y) -> acc + y)))"
     )
 
 
-def cosine_similarity(a: Column, b: Column, assume_normalized: bool = True) -> Column:
-    if assume_normalized:
-        return dot(a, b)
-    norm = lambda v: F.sqrt(dot(v, v))  # noqa: E731
-    return dot(a, b) / (norm(a) * norm(b))
+def dot(a: str, b: str) -> Column:
+    """Σ a_i·b_i of two array columns, in double precision."""
+    return F.expr(dot_sql(sql_ident(a), sql_ident(b)))
 
 
-def cosine_distance(a: Column, b: Column, assume_normalized: bool = True) -> Column:
+def cosine_similarity(a: str, b: str, assume_normalized: bool = True) -> Column:
+    return F.expr(cosine_similarity_sql(sql_ident(a), sql_ident(b), assume_normalized))
+
+
+def cosine_distance(a: str, b: str, assume_normalized: bool = True) -> Column:
     """Weaviate-style distance = 1 − cosine (lower is better; the notebooks
     flip it back with ``1 - distance``, nb4 cell 19)."""
-    return F.lit(1.0) - cosine_similarity(a, b, assume_normalized)
+    sim = cosine_similarity_sql(sql_ident(a), sql_ident(b), assume_normalized)
+    return F.expr(f"1.0D - ({sim})")
 
 
-def l2_normalize(arr: Column) -> Column:
+def l2_normalize(arr: str) -> Column:
     """Unit-normalize once at index-build time so query-time cosine is a
     plain dot product (cheapest possible inner loop at scale)."""
-    d = _as_double(arr)
-    norm = F.sqrt(
-        F.aggregate(F.transform(d, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return F.transform(d, lambda x: x / norm)
+    return F.expr(l2_normalize_sql(sql_ident(arr)))

@@ -21,7 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import l2_normalize
+from ..functions.vectors import (
+    cast_double_sql,
+    dot_double_sql,
+    l2_normalize_sql,
+    sql_ident,
+)
 from ..sources.index_catalog import (
     index_compact_if_reviving,
     index_dir,
@@ -106,7 +111,6 @@ def _assign(
     The argmin expression parses from ONE SQL string (r11: the
     DataFrame-API assembly cost ~80 py4j round trips per call on a hot
     interactive path — same tree either way, bitwise-identical)."""
-    from ..functions.vectors import cast_double_sql, dot_double_sql, sql_ident
 
     picked = F.expr(
         "array_min(transform(_cents, c -> struct("
@@ -183,19 +187,11 @@ def ivf_refine(
             # break Lloyd monotonicity. Zero-norm means (antipodal cluster,
             # measure-zero) fall back to the previous centroid via the
             # coalesce below.
-            .select(
+            .selectExpr(
                 "centroid_id",
-                F.when(
-                    F.sqrt(
-                        F.aggregate(
-                            F.transform("_mean", lambda x: x * x),
-                            F.lit(0.0),
-                            lambda a, x: a + x,
-                        )
-                    )
-                    > 0,
-                    l2_normalize(F.col("_mean")),
-                ).alias("new_centroid"),
+                "CASE WHEN sqrt(aggregate(transform(_mean, x -> x * x), 0.0D, "
+                f"(a, x) -> a + x)) > 0 THEN {l2_normalize_sql('_mean')} END "
+                "AS new_centroid",
             )
         )
         centroids = (
@@ -219,23 +215,12 @@ def kmeans_objective(
 ) -> float:
     """Mean nearest-centroid cosine distance over the corpus — the k-means
     objective Lloyd iterations monotonically non-increase (test harness)."""
-    from ..functions.vectors import dot_double
-
     return (
-        corpus.select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "_v"
-            )
-        )
+        corpus.select(F.expr(cast_double_sql(sql_ident(vec_col))).alias("_v"))
         .crossJoin(F.broadcast(_centroid_array(centroids)))
-        .select(
-            F.array_min(
-                F.transform(
-                    "_cents",
-                    lambda c: F.lit(1.0)
-                    - dot_double(F.col("_v"), c["centroid"]),
-                )
-            ).alias("d")
+        .selectExpr(
+            "array_min(transform(_cents, c -> "
+            f"1.0D - {dot_double_sql('_v', 'c.centroid')})) AS d"
         )
         .agg(F.avg("d"))
         .collect()[0][0]
@@ -272,9 +257,7 @@ def _centroid_array(centroids: DataFrame) -> DataFrame:
             F.collect_list(
                 F.struct(
                     F.col("centroid_id"),
-                    F.transform(
-                        "centroid", lambda x: x.cast("double")
-                    ).alias("centroid"),
+                    F.expr(cast_double_sql("centroid")).alias("centroid"),
                 )
             )
         ).alias("_cents")
@@ -304,12 +287,6 @@ def ivf_search(
     must not be scored as vectors."""
     from pyspark.sql.types import ArrayType, DoubleType
 
-    from ..functions.vectors import (
-        cast_double_sql,
-        dot_double_sql,
-        sql_ident,
-    )
-
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.expr(cast_double_sql(sql_ident(query_vec_col))).alias("qv"),
@@ -317,10 +294,7 @@ def ivf_search(
     # Probe selection is the same map-side argmin trick as ivf_build's
     # assignment, generalized to top-nprobe: sort the per-row
     # (distance, centroid_id) struct array and slice — no window, so a
-    # billion-query batch never shuffles just to pick its buckets. The
-    # whole expression parses from ONE SQL string (§12 fast path, r12):
-    # same array_sort/slice/explode tree over the same scored structs as
-    # the retired Column form, bitwise-identical results.
+    # billion-query batch never shuffles just to pick its buckets.
     probes = (
         q.crossJoin(F.broadcast(_centroid_array(centroids)))
         .select(

@@ -41,7 +41,7 @@ def word_frequency_table(
     from ..functions.text import tokenize
 
     return (
-        docs.select(F.explode(tokenize(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokenize(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -210,7 +210,7 @@ def encode_corpus(
 
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(tokenize(F.col(text_col))).alias("pos", "word"),
+        F.posexplode(tokenize(text_col)).alias("pos", "word"),
     )
     # ``encode_map``: a prebuilt (word, syms) map — callers that just
     # LEARNED the merges already hold it (learn_bpe_merges_with_vocab);

@@ -24,18 +24,17 @@ precision/recall tradeoff (P(candidate) = 1-(1-j^r)^bands).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import stable_hash64, tokenize
-from ..functions.vectors import isin_ints
+from ..functions.text import stable_hash64, tokenize, tokenize_sql
+from ..functions.vectors import cast_double_sql, dot_double_sql, isin_ints, sql_ident
 from ..sources.index_catalog import (
     index_compact_if_reviving,
     index_dir,
     index_live,
     index_reset,
 )
-from ..functions.text import tokenize_sql as _tokenize_sql
 
 
 def exact_duplicates(
@@ -55,57 +54,32 @@ def exact_duplicates(
     )
 
 
-# SQL-fragment twins for the §12 construction fast paths (r12): each
-# builder below assembles hundreds-to-thousands of py4j tree nodes at
-# ~2 ms per round trip on the bench host — parsing the SAME tree from one
-# SQL string JVM-side removes that driver latency (paid per query on a
-# real cluster exactly as on the bench). Every fragment mirrors its
-# Column-form twin node for node (same functions, literal types, operand
-# order — including the `i + 0` the Python loop emits), so outputs are
-# bitwise identical; pinned by the *_sql_construction_bitwise_equal tests
-# and the dedup oracle rows.
+# Expressions with hundreds-to-thousands of tree nodes parse from ONE
+# SQL string (one py4j round trip; assembling them node by node cost
+# ~2 ms per node on the bench host), pinned by the dedup oracle rows.
 _HASH64_SQL = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def shingles_sql(text_sql: str, n: int = 3) -> str:
-    """SQL-fragment twin of :func:`shingles`."""
+    """Word n-gram shingles as array<string> (positional, space-joined).
+
+    Pure Catalyst: sequence + transform + element_at; returns [] for docs
+    shorter than n tokens. The token array is let-bound once (interpreted
+    HOFs have no CSE — a raw tokenize subtree would re-run its regex for
+    every shingle position × every element_at; see
+    operators/textstats.py:ngrams)."""
     grams = ", ".join(f"element_at(t, i + {j})" for j in range(n))
     return (
-        f"transform(array({_tokenize_sql(text_sql)}), t -> "
+        f"transform(array({tokenize_sql(text_sql)}), t -> "
         f"CASE WHEN size(t) < {n} THEN CAST(array() AS array<string>) "
         f"ELSE transform(sequence(1, size(t) - {n - 1}), "
         f"i -> concat_ws(' ', {grams})) END)[0]"
     )
 
 
-def shingles(text_col, n: int = 3):
-    """Word n-gram shingles as array<string> (positional, space-joined).
-
-    Pure Catalyst: sequence + transform + element_at; returns [] for docs
-    shorter than n tokens. A **str** column name takes the one-round-trip
-    SQL construction path (:func:`shingles_sql`, bitwise-identical tree).
-    """
-    if isinstance(text_col, str):
-        from ..functions.vectors import sql_ident
-
-        return F.expr(shingles_sql(sql_ident(text_col), n))
-
-    # let-bind the token array once (interpreted HOFs have no CSE — a raw
-    # tokenize subtree would re-run its regex for every shingle position ×
-    # every element_at; see operators/textstats.py:ngrams)
-    def _shingles(t):
-        return F.when(
-            F.size(t) < n, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(t, i + j) for j in range(n)]
-                ),
-            )
-        )
-
-    return F.transform(F.array(tokenize(text_col)), _shingles)[0]
+def shingles(text_col: str, n: int = 3) -> Column:
+    """:func:`shingles_sql` of the text column named ``text_col``."""
+    return F.expr(shingles_sql(sql_ident(text_col), n))
 
 
 def minhash_signatures_wide(
@@ -135,8 +109,7 @@ def minhash_signatures_wide(
     # (doc, shingle) occurrence — same values, ~occurrences/distinct× less
     # md5 work. No broadcast hint: distinct shingles grow with the corpus,
     # so the planner must be free to shuffle-join when the vocab is big.
-    # The k hash columns and k min-aggregates parse as SQL (§12 fast
-    # path — bitwise-identical trees; see the header comment).
+    # The k hash columns and k min-aggregates parse as SQL.
     vocab = exploded.select("shingle").distinct().selectExpr(
         "shingle",
         *[
@@ -161,8 +134,7 @@ def minhash_bands_from_wide(
     derive the bands from it instead of re-running the shingle→vocab→
     min-agg pipeline per consumer."""
     n_bands = num_hashes // band_size
-    # band-key expressions parse as ONE SQL string (§12 fast path —
-    # bitwise-identical trees; see the header comment)
+    # band-key expressions parse as ONE SQL string
     band_keys = ", ".join(
         "md5(concat_ws(',', {}))".format(
             ", ".join(
@@ -224,10 +196,9 @@ def minhash_bands_projection(
     Shingle and band keys are bit-identical to the batch shape
     (same stable_hash64 seeding, same md5 band key).
 
-    Construction (§12 fast path, r12): the whole nested expression —
-    ~2,900 py4j tree nodes when assembled via the DataFrame API — parses
-    JVM-side from ONE SQL string; same tree, bitwise-identical rows
-    (test_stream_dedup.py's projection==batch pins cover it end to end).
+    The whole nested expression (~2,900 tree nodes) parses JVM-side
+    from ONE SQL string (test_stream_dedup.py's projection==batch pins
+    cover it end to end).
     """
     n_bands = num_hashes // band_size
 
@@ -244,7 +215,6 @@ def minhash_bands_projection(
     # where element_at/concat_ws swallow the NULL minhashes and emit
     # n_bands rows all keyed md5('') — every null-text doc would falsely
     # collide with every other.
-    from ..functions.vectors import sql_ident
 
     seed_hash = _HASH64_SQL.format(x="concat(x, '#{s}')")
     mins = "array({})".format(
@@ -443,13 +413,6 @@ def minhash_save_index(
     return base
 
 
-def minhash_load_index(spark, root: str, name: str) -> DataFrame:
-    """The LIVE band table: persisted rows minus any tombstoned docs
-    (index_catalog.index_delete) — deleted docs must stop producing
-    collision evidence immediately, not at the next compaction."""
-    return index_live(spark, root, name, "minhash")
-
-
 def minhash_index_append(
     spark,
     root: str,
@@ -494,7 +457,7 @@ def minhash_index_append(
     )
     # screen against the LIVE view: tombstoned (deleted) docs must not
     # resurrect as collision evidence for the arriving batch
-    standing = minhash_load_index(spark, root, name)
+    standing = index_live(spark, root, name, "minhash")
     new_bands = minhash_bands(
         new_docs,
         id_col,
@@ -549,15 +512,10 @@ def simhash_fingerprints(
     # the 32-bit-range hash, so the arithmetic SQL oracle
     # (floor(h / 2^j) % 2) is unchanged.
     #
-    # Construction fast path (§12 recipe, r12): the `bits` sum aggregates
-    # and the 32-term fingerprint chain parse JVM-side as SQL (one round
-    # trip per aggregate + one for the chain) instead of assembling ~400
-    # py4j tree nodes at ~2 ms each — the dominant build cost of every
-    # simhash row on the bench host. Same functions, literal types and
-    # left-assoc add order as the retired Column forms, so fingerprints
-    # are bitwise identical — pinned by
-    # test_dedup.py::test_simhash_fingerprints_sql_construction_bitwise_equal
-    # and the dedup_simhash* oracle rows.
+    # The `bits` sum aggregates and the 32-term fingerprint chain parse
+    # JVM-side as SQL (one round trip per aggregate + one for the chain,
+    # instead of ~400 tree nodes at one round trip each), pinned by the
+    # dedup_simhash* oracle rows.
     bit_sums = [
         F.expr(
             f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1"
@@ -600,13 +558,10 @@ def simhash_fingerprints_projection(
     token. Docs with NULL/token-less text emit ZERO rows, exactly like
     the batch shape's explode.
 
-    Construction (§12 fast path, r12): the whole expression — ~7,600
-    py4j tree nodes when assembled via the DataFrame API, the single
-    chattiest builder in the engine — parses JVM-side from ONE SQL
-    string; same tree, bitwise-identical rows (projection==batch pins
-    in test_properties.py / test_stream_dedup.py cover it end to end).
+    The whole expression (~7,600 tree nodes) parses JVM-side from ONE
+    SQL string (projection==batch pins in test_properties.py /
+    test_stream_dedup.py cover it end to end).
     """
-    from ..functions.vectors import sql_ident
 
     # per-bit balance: a left fold over the let-bound token hashes; the
     # CAST binds the whole CASE (same tree as the retired when/otherwise
@@ -623,7 +578,7 @@ def simhash_fingerprints_projection(
         for j, s in enumerate(bit_sums)
     )
     hashes = (
-        f"transform(array({_tokenize_sql(sql_ident(text_col))}), "
+        f"transform(array({tokenize_sql(sql_ident(text_col))}), "
         f"toks -> transform(toks, t -> {_HASH64_SQL.format(x='t')}))[0]"
     )
     fp_arr = (
@@ -647,8 +602,7 @@ def _simhash_band_split(
     contract depends on this being a single definition)."""
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
-    # band expressions parse as ONE SQL string (§12 fast path — bitwise-
-    # identical trees; see the header comment)
+    # band expressions parse as ONE SQL string
     band_vals = ", ".join(
         f"CAST(floor(simhash / {float(2 ** (band_bits * b))!r}D) AS BIGINT)"
         f" % {2 ** band_bits}"
@@ -820,12 +774,6 @@ def simhash_save_index(
     return base
 
 
-def simhash_load_index(spark, root: str, name: str) -> DataFrame:
-    """The LIVE band table (persisted rows minus tombstoned docs) —
-    same contract as minhash_load_index."""
-    return index_live(spark, root, name, "simhash")
-
-
 def simhash_index_append(
     spark,
     root: str,
@@ -858,7 +806,7 @@ def simhash_index_append(
         {"bits": 32, "max_hamming": 3},
     )
     # LIVE view + compact-on-revive: same contract as the MinHash twin
-    standing = simhash_load_index(spark, root, name)
+    standing = index_live(spark, root, name, "simhash")
     new_bands = simhash_bands(
         new_docs, id_col, text_col, p["bits"], p["max_hamming"]
     ).localCheckpoint(eager=True)
@@ -1033,7 +981,6 @@ def embedding_neardup_pairs_bucketed(
     raise n_probe-style overlap by lowering n_centroids for higher recall).
     """
     from .ann import ivf_build
-    from ..functions.vectors import dot_double
 
     # keep_vec assignments carry the (double-cast) vector — no
     # corpus⋈assignment id join, and the pair cosine folds raw (r6)
@@ -1062,7 +1009,7 @@ def embedding_neardup_pairs_bucketed(
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .withColumn(
-            "cosine", dot_double(F.col("a._v"), F.col("b._v"))
+            "cosine", F.expr(dot_double_sql("a._v", "b._v"))
         )
         .filter(F.col("cosine") >= threshold)
         .select(
@@ -1084,9 +1031,8 @@ def embedding_neardup_pairs(
     Brute-force O(n²) — correctness oracle for bounded subsets; the scale
     path buckets by LSH/IVF (operators/ann.py) before the pair join.
     """
-    from ..functions.vectors import dot_double
 
-    dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    dv = F.expr(cast_double_sql(sql_ident(vec_col)))
     a = vectors.select(
         F.col(id_col).alias("vec_a"), dv.alias("_va")
     ).alias("a")
@@ -1095,7 +1041,7 @@ def embedding_neardup_pairs(
     ).alias("b")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", dot_double(F.col("_va"), F.col("_vb")))
+        .withColumn("cosine", F.expr(dot_double_sql("_va", "_vb")))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )
@@ -1132,7 +1078,7 @@ def duplicated_kgram_spans(
     from ..functions.text import tokenize
 
     toks = docs.select(
-        F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("id"), tokenize(text_col).alias("toks")
     )
     grams = toks.select(
         "id",
@@ -1246,7 +1192,6 @@ def semantic_dedup(
     """
     from .ann import assign_nearest_centroid
 
-    from ..functions.vectors import dot_double
 
     # Two plan-shape rules, both r6 same-session A/Bs:
     # 1. keep_vec=True carries the vector THROUGH the broadcast-argmin
@@ -1294,7 +1239,7 @@ def semantic_dedup(
         x.join(y, ["centroid_id", "_jblk"])
         .filter(F.col("lo_id") < F.col("hi_id"))
         .filter(
-            dot_double(F.col("lo_v"), F.col("hi_v")) >= F.lit(threshold)
+            F.expr(dot_double_sql("lo_v", "hi_v")) >= F.lit(threshold)
         )
         .groupBy(F.col("hi_id").alias("vec_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_dup_lower"))
@@ -1325,7 +1270,7 @@ def _semantic_asg_norm(asg: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return asg.select(
         "vec_id",
         "centroid_id",
-        F.transform(F.col(vc), lambda x: x.cast("double")).alias("_v"),
+        F.expr(cast_double_sql(sql_ident(vc))).alias("_v"),
     )
 
 
@@ -1376,7 +1321,6 @@ def semantic_screen_batch(
 
     Returns (vec_a, vec_b, centroid_id, cosine) with vec_a < vec_b.
     """
-    from ..functions.vectors import dot_double
 
     a = _semantic_asg_norm(batch_asg, vec_col).alias("a")
     b = (
@@ -1389,7 +1333,7 @@ def semantic_screen_batch(
         )
         .alias("b")
     )
-    sim = dot_double(F.col("a._v"), F.col("b._v"))
+    sim = F.expr(dot_double_sql("a._v", "b._v"))
     return (
         a.join(
             b,
@@ -1442,13 +1386,6 @@ def semantic_save_index(
         os.path.join(base, "centroids")
     )
     return base
-
-
-def semantic_load_index(spark, root: str, name: str) -> DataFrame:
-    """The LIVE assignment table: persisted rows minus tombstoned ids
-    (index_catalog.index_delete) — deleted vectors must stop producing
-    near-dup evidence immediately, not at the next compaction."""
-    return index_live(spark, root, name, "semantic")
 
 
 def semantic_load_centroids(spark, root: str, name: str) -> DataFrame:
@@ -1522,7 +1459,7 @@ def semantic_index_append(
         r["centroid_id"]
         for r in new_asg.select("centroid_id").distinct().collect()
     ]
-    live = semantic_load_index(spark, root, name)
+    live = index_live(spark, root, name, "semantic")
     standing = live.filter(isin_ints("centroid_id", touched))
     if dedupe_redelivered:
         new_asg = new_asg.join(

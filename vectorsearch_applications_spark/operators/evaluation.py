@@ -49,11 +49,9 @@ def retrieval_metrics(
             method_df = hits.select(method_col).distinct()
         base = base.crossJoin(method_df)
     # left join so queries with zero hits still count toward n_queries.
-    # The aggregate expressions parse as SQL (§12 fast path, r12): same
-    # trees as the retired Column forms — note 1.0D, not 1.0, in the mrr
-    # reciprocal (a bare SQL 1.0 parses as DECIMAL and would change the
-    # division's type and rounding; the D-suffixed literal is the double
-    # the Column form built). Bitwise-identical output — pinned by
+    # The aggregate expressions parse as SQL — note 1.0D, not 1.0, in the
+    # mrr reciprocal (a bare SQL 1.0 parses as DECIMAL and would change
+    # the division's type and rounding). Pinned by
     # test_operators.py::test_retrieval_metrics_sql_construction_bitwise_equal
     # and the eval_* oracle rows.
     per_query = (
@@ -165,13 +163,11 @@ def confusion_ladder(
     if not all(math.isfinite(t) for t in thresholds):
         # repr(inf/nan) is not a parseable SQL double literal
         raise ValueError("thresholds must be finite")
-    # the 4·|ladder| conditional sums parse as ONE SQL projection (§12
-    # fast path, r12): same trees as the retired Column forms — the
-    # D-suffixed threshold literal is the double F.lit(float(t)) built
-    # (repr round-trips any finite float exactly, and the parser's
-    # Double.parseDouble is correctly rounded), the bare 1/0 literals
-    # are the ints the Column arithmetic used. coalesce zero-fills so an
-    # empty corpus yields 0-rows, not nulls.
+    # the 4·|ladder| conditional sums parse as ONE SQL projection — the
+    # D-suffixed threshold literal is the exact double (repr round-trips
+    # any finite float, and the parser's Double.parseDouble is correctly
+    # rounded), the bare 1/0 literals are ints. coalesce zero-fills so
+    # an empty corpus yields 0-rows, not nulls.
     s = sql_ident(score_col)
     y = f"CAST({sql_ident(label_col)} AS BIGINT)"
     exprs = []

@@ -29,10 +29,7 @@ def minmax_normalize(
     """(s − min)/(max − min) within group; degenerate group → 0.0 (sklearn
     MinMaxScaler behavior on a constant column).
 
-    Construction (§12 fast path, r12): the window expression parses
-    JVM-side as ONE SQL string — same min/max-over-partition subtrees
-    (repeated textually exactly as the Column form repeated them), same
-    default window frame, so outputs are bitwise identical (pinned by
+    The window expression parses JVM-side as ONE SQL string (pinned by
     test_operators.py::test_hybrid_fusion_sql_construction_bitwise_equal
     and every hybrid oracle row)."""
     from ..functions.vectors import sql_ident
@@ -62,9 +59,8 @@ def hybrid_search(
     vec_hits: (query_id, doc_id, distance)   — cosine distance, lower better
     Output:   (query_id, doc_id, rank, score) — fused, rank 1-based.
     """
-    # §12 fast path: weight/score/rank expressions parse as SQL — same
-    # trees as the retired Column forms (float weights embedded via repr,
-    # which round-trips any finite double), bitwise-identical output.
+    # weight/score/rank expressions parse as SQL (float weights embedded
+    # via repr, which round-trips any finite double).
     import math
 
     if not math.isfinite(alpha):
@@ -131,8 +127,7 @@ def rrf_fuse(
     """
     from functools import reduce
 
-    # §12 fast path: same trees as the retired Column forms (1.0D /
-    # (kD + rank) with k embedded via repr), bitwise-identical output.
+    # 1.0D / (kD + rank), with k embedded via repr.
     import math
 
     if not math.isfinite(k):

@@ -47,7 +47,7 @@ def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return (
         docs.select(
             F.col(id_col).alias("id"),
-            F.explode(tokenize(F.col(text_col))).alias("term"),
+            F.explode(tokenize(text_col)).alias("term"),
         )
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -101,7 +101,7 @@ def bigram_collocations(
     """
     from ..functions.text import tokenize
 
-    toks = docs.select(tokenize(F.col(text_col)).alias("toks"))
+    toks = docs.select(tokenize(text_col).alias("toks"))
     # bigram strings built in-projection: no join, no UDF, one explode
     bigrams = toks.select(
         F.explode(

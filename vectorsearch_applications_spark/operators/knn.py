@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot_double
+from ..functions.vectors import cast_double_sql, dot_double_sql, sql_ident
 
 
 def knn_search_crossjoin(
@@ -54,22 +54,18 @@ def knn_search_crossjoin(
     scored = (
         corpus.select(
             F.col(id_col).alias("vec_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "_v"
-            ),
+            F.expr(cast_double_sql(sql_ident(vec_col))).alias("_v"),
         )
         .crossJoin(
             F.broadcast(
                 queries.select(
                     F.col(query_id_col).alias("query_id"),
-                    F.transform(
-                        F.col(query_vec_col), lambda x: x.cast("double")
-                    ).alias("_q"),
+                    F.expr(cast_double_sql(sql_ident(query_vec_col))).alias("_q"),
                 )
             )
         )
         .withColumn(
-            "distance", F.lit(1.0) - dot_double(F.col("_v"), F.col("_q"))
+            "distance", F.expr(f"1.0D - {dot_double_sql('_v', '_q')}")
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("vec_id"))
@@ -264,7 +260,6 @@ def knn_prf_search(
         query_vec_col=query_vec_col,
         k=fb_k,
     )
-    from ..functions.vectors import cast_double_sql, dot_double_sql, sql_ident
 
     corp = corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -272,11 +267,9 @@ def knn_prf_search(
     )
     fb = r1.join(corp, "vec_id").select("query_id", "rank", "_v")
 
-    # the rank-ordered Rocchio fold parses from ONE SQL string (§12 fast
-    # path, r12): same collect_list/array_sort/zip_with fold — the
+    # the rank-ordered Rocchio fold parses from ONE SQL string — the
     # explicit 0.0D init keeps the oracle's '0.0 + v1 + …' chain (and
-    # never starts at -0.0) — so q' is bitwise-identical to the retired
-    # Column form
+    # never starts at -0.0)
     _ranked = "transform(array_sort(collect_list(struct(rank, _v))), s -> s._v)"
     cent = fb.groupBy("query_id").agg(
         F.expr(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.embed import hash_embed_col
 from ..functions.text import tokenize
-from ..functions.vectors import dot_double, isin_ints
+from ..functions.vectors import dot_double_sql, isin_ints
 from .bm25 import bm25_search
 
 
@@ -54,11 +54,11 @@ def late_interaction_search(
     """
     qt = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.posexplode(tokenize(F.col(query_text_col))).alias("q_pos", "tok"),
+        F.posexplode(tokenize(query_text_col)).alias("q_pos", "tok"),
     ).withColumn("_qe", hash_embed_col("tok", dim))
     dt = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("tok"),
+        F.explode(F.array_distinct(tokenize(text_col))).alias("tok"),
     )
     # hash each DISTINCT corpus token once (vocabulary table), then join
     # back — same amortization as the BPE encode map; no broadcast hint
@@ -72,7 +72,7 @@ def late_interaction_search(
         "query_id",
         "q_pos",
         "doc_id",
-        dot_double(F.col("_de"), F.col("_qe")).alias("_sim"),
+        F.expr(dot_double_sql("_de", "_qe")).alias("_sim"),
     )
     maxsim = sims.groupBy("query_id", "q_pos", "doc_id").agg(
         F.max("_sim").alias("_m")
@@ -150,7 +150,7 @@ def late_interaction_rerank(
     rows = cand.take(max_collect_candidates + 1)
     qt = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.posexplode(tokenize(F.col(query_text_col))).alias("q_pos", "tok"),
+        F.posexplode(tokenize(query_text_col)).alias("q_pos", "tok"),
     ).withColumn("_qe", hash_embed_col("tok", dim))
     if len(rows) <= max_collect_candidates:
         from pyspark.sql.types import StructType
@@ -182,7 +182,7 @@ def late_interaction_rerank(
     # before the (quadratic) token interaction
     dt = pruned.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("tok"),
+        F.explode(F.array_distinct(tokenize(text_col))).alias("tok"),
     )
     vocab = dt.select("tok").distinct().withColumn(
         "_de", hash_embed_col("tok", dim)
@@ -204,7 +204,7 @@ def late_interaction_rerank(
         "query_id",
         "q_pos",
         "doc_id",
-        dot_double(F.col("_de"), F.col("_qe")).alias("_sim"),
+        F.expr(dot_double_sql("_de", "_qe")).alias("_sim"),
     )
     maxsim = sims.groupBy("query_id", "q_pos", "doc_id").agg(
         F.max("_sim").alias("_m")

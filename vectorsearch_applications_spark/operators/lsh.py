@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot_double, sql_ident
+from ..functions.vectors import dot_double_sql, sql_ident
 from ..sources.index_catalog import (
     index_compact_if_reviving,
     index_dir,
@@ -50,15 +50,12 @@ def lsh_planes(n_planes: int = 4, dim: int = 64, seed: int = 0x5EED1234) -> list
 
 
 def lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """SQL-fragment twin of :func:`lsh_bucket` (§12 recipe, r12): the
-    whole P-plane bucket expression parses JVM-side in ONE py4j round
-    trip instead of assembling ~P·dim literal tree nodes at ~2 ms per
-    round trip (the dominant build cost of every LSH row on the bench
-    host — driver latency a real cluster pays identically per query).
-    Same functions, literal types (±1.0D doubles, int masks), fold order
-    and left-assoc add chain as the Column form, so bucket codes are
-    bitwise identical — pinned by test_lsh.py's SQL-vs-Column bitwise
-    test and the ann_lsh_* oracle rows."""
+    """P-bit bucket code of a vector: bit p set iff the sequential
+    signed sum ``sum_d planes[p][d] * v_d`` is >= 0. JVM-side fold
+    (±1.0D double literals, left-assoc BIGINT add chain), exact parity
+    with the oracle's list_dot_product. The whole P-plane expression
+    parses in ONE py4j round trip instead of ~P·dim literal tree nodes
+    — pinned by the ann_lsh_* oracle rows."""
     terms = ["CAST(0 AS BIGINT)"]
     for p, row in enumerate(planes):
         arr = ", ".join("1.0D" if v > 0 else "-1.0D" for v in row)
@@ -73,29 +70,9 @@ def lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     return " + ".join(terms)
 
 
-def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """P-bit bucket code of a vector column: bit p set iff the sequential
-    signed sum ``sum_d planes[p][d] * v_d`` is >= 0. JVM-side fold, exact
-    parity with the oracle's list_dot_product.
-
-    ``vec_col`` as a **str** (top-level column name) takes the one-round-
-    trip SQL construction path (:func:`lsh_bucket_sql`); a ``Column``
-    builds the same tree via the DataFrame API below."""
-    if isinstance(vec_col, str):
-        return F.expr(lsh_bucket_sql(sql_ident(vec_col), planes))
-    dv = F.transform(vec_col, lambda x: x.cast("double"))
-    code = F.lit(0).cast("bigint")
-    for p, row in enumerate(planes):
-        lit_plane = F.array(*[F.lit(v) for v in row])
-        proj = F.aggregate(
-            F.zip_with(lit_plane, dv, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        code = code + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)).cast(
-            "bigint"
-        )
-    return code
+def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
+    """:func:`lsh_bucket_sql` of the vector column named ``vec_col``."""
+    return F.expr(lsh_bucket_sql(sql_ident(vec_col), planes))
 
 
 def lsh_search(
@@ -146,11 +123,7 @@ def lsh_bucket_table(
     pre-cast to double per ROW so candidate scoring folds raw (a
     per-pair cast would re-run once per candidate pair; bitwise-equal),
     and stored IN the bucket table so query-time search never rejoins
-    the corpus — the on-disk layout lsh_save_index persists.
-
-    Construction: the three output expressions parse JVM-side as SQL
-    (one round trip each) — same trees as the retired Column forms, so
-    the table is bitwise unchanged (§12 recipe; see lsh_bucket_sql)."""
+    the corpus — the on-disk layout lsh_save_index persists."""
     v = sql_ident(vec_col)
     return corpus.selectExpr(
         f"{sql_ident(id_col)} AS vec_id",
@@ -206,7 +179,7 @@ def lsh_search_bucketed(
             F.explode(F.transform(masks, lambda m: F.col("bucket").bitwiseXOR(m))),
         )
     scored = buckets.join(F.broadcast(q), "bucket").withColumn(
-        "distance", F.lit(1.0) - dot_double(F.col("_v"), F.col("_q"))
+        "distance", F.expr(f"1.0D - {dot_double_sql('_v', '_q')}")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("vec_id"))
     return (

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import cast_double_sql, sql_ident
+
 
 def pca_fit(
     df: DataFrame, vec_col: str = "embedding", k: int = 8
@@ -83,7 +85,7 @@ def pca_project(
 ) -> DataFrame:
     """Append the k-dim projection as literal-weight folds — pure
     codegen projection, no shuffle, no Python."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.expr(cast_double_sql(sql_ident(vec_col)))
     mean_arr = F.array(*[F.lit(float(m)) for m in mean])
     centered = F.zip_with(v, mean_arr, lambda a, b: a - b)
 

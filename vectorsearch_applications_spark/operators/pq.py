@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cast_double_sql, dot_double, dot_double_sql
+from ..functions.vectors import cast_double_sql, dot_double_sql, sql_ident
 from ..sources.index_catalog import (
     index_compact_if_reviving,
     index_dir,
@@ -44,41 +44,24 @@ from ..sources.io import read_parquet
 DIST_SCALE = 1_000_000
 
 
-def _sub(vec, m, sub_dim: int):
+# The encode/LUT/fold expressions nest _d_int_sql inside 2-3 levels of
+# higher-order-function lambdas; each parses from ONE SQL string (built
+# node by node they cost 400-900 py4j round trips per search). Codes and
+# scores are gated by the ann_pq_adc / ann_ivfpq_search /
+# ann_ivfpq_refined / append oracle rows and test_pq_lsh_lifecycle.py.
+
+
+def _sub_sql(vec: str, m: str, sub_dim: int) -> str:
     """1-based slice of subvector m (length sub_dim)."""
-    return F.slice(vec, m * sub_dim + 1, sub_dim)
+    return f"slice({vec}, {m} * {sub_dim} + 1, {sub_dim})"
 
 
-def _d_int(xs, cs):
+def _d_int_sql(xs: str, cs: str) -> str:
     """floor((<c,c> - 2<x,c>) * 1e6) — the exact-integer L2 surrogate.
 
     Inputs must ALREADY be double arrays (every call site pre-casts once
     per row / at codebook build); folding raw skips the per-evaluation
     re-cast the encode loop would otherwise pay M·K times per vector."""
-    return F.floor(
-        (dot_double(cs, cs) - F.lit(2.0) * dot_double(xs, cs))
-        * F.lit(float(DIST_SCALE))
-    ).cast("long")
-
-
-# --- SQL-fragment twins (r11 optimization) -------------------------------
-# The encode/LUT/fold expressions below nest _d_int inside 2-3 levels of
-# higher-order-function lambdas; assembled via the DataFrame API they cost
-# 400-900 py4j round trips PER SEARCH (~2 ms each on the bench host —
-# plan-construction wall, guide §7.3). Each builder now parses from ONE
-# SQL string. The parsed trees are identical (same functions, literal
-# types, operand order), so codes/scores are bitwise unchanged — gated by
-# the ann_pq_adc / ann_ivfpq_search / ann_ivfpq_refined / append oracle
-# rows and test_pq_lsh_lifecycle.py.
-
-
-def _sub_sql(vec: str, m: str, sub_dim: int) -> str:
-    """SQL twin of :func:`_sub`."""
-    return f"slice({vec}, {m} * {sub_dim} + 1, {sub_dim})"
-
-
-def _d_int_sql(xs: str, cs: str) -> str:
-    """SQL twin of :func:`_d_int`."""
     return (
         f"cast(floor(({dot_double_sql(cs, cs)} - "
         f"2.0D * {dot_double_sql(xs, cs)}) * {float(DIST_SCALE)!r}D) "
@@ -141,9 +124,7 @@ def pq_codebook(
     seeds = (
         corpus.select(
             F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "_v"
-            ),
+            F.expr(cast_double_sql(sql_ident(vec_col))).alias("_v"),
         )
         .orderBy("_id")
         .limit(n_codes)
@@ -157,8 +138,8 @@ def pq_codebook(
         F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub"),
         "_v",
     )
-    return subs.select(
-        "sub", "code", _sub(F.col("_v"), F.col("sub"), sub_dim).alias("cvec")
+    return subs.selectExpr(
+        "sub", "code", f"{_sub_sql('_v', 'sub', sub_dim)} AS cvec"
     )
 
 
@@ -191,30 +172,22 @@ def pq_codebook_kmeans(
     """
     sub_dim = dim // n_sub
     cb = pq_codebook(corpus, n_codes, n_sub, dim, id_col, vec_col)
-    v = F.transform(F.col("_raw"), lambda x: x.cast("double"))
     subs = (
         corpus.select(F.col(vec_col).alias("_raw"))
         .select(
             F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub"),
             "_raw",
         )
-        .select("sub", _sub(v, F.col("sub"), sub_dim).alias("xs"))
+        .selectExpr(
+            "sub", f"{_sub_sql(cast_double_sql('_raw'), 'sub', sub_dim)} AS xs"
+        )
     )
     for _ in range(iterations):
-        assigned = subs.crossJoin(F.broadcast(_codebook_array(cb))).select(
+        assigned = subs.crossJoin(F.broadcast(_codebook_array(cb))).selectExpr(
             "sub",
             "xs",
-            F.array_min(
-                F.transform(
-                    F.filter(
-                        F.col("_cb"), lambda s: s["sub"] == F.col("sub")
-                    ),
-                    lambda s: F.struct(
-                        _d_int(F.col("xs"), s["cvec"]).alias("d"),
-                        s["code"].alias("code"),
-                    ),
-                )
-            )["code"].alias("code"),
+            "array_min(transform(filter(_cb, s -> s.sub = sub), s -> struct("
+            f"{_d_int_sql('xs', 's.cvec')} AS d, s.code AS code))).code AS code",
         )
         means = (
             assigned.select("sub", "code", F.posexplode("xs").alias("pos", "x"))
@@ -464,7 +437,7 @@ def pq_search_indexed(
     base = index_dir(root, name, "pq")
     cb = read_parquet(spark, os.path.join(base, "codebook"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
-    codes = pq_load_index(spark, root, name).select("vec_id", "codes")
+    codes = index_live(spark, root, name, "pq").select("vec_id", "codes")
     return pq_adc_search(codes, cb, queries, n_codes, n_sub, dim, k, **cols)
 
 
@@ -495,7 +468,7 @@ def ivfpq_search_indexed(
     cb = read_parquet(spark, os.path.join(base, "codebook"))
     centroids = read_parquet(spark, os.path.join(base, "centroids"))
     # LIVE view: tombstoned (deleted) vectors never surface as hits
-    index = pq_load_index(spark, root, name).select(
+    index = index_live(spark, root, name, "pq").select(
         "vec_id", "codes", "centroid_id"
     )
 
@@ -531,13 +504,6 @@ def ivfpq_search_indexed(
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "rank", "adc_score")
     )
-
-
-def pq_load_index(spark, root: str, name: str) -> DataFrame:
-    """The LIVE codes table: persisted rows minus tombstoned vectors
-    (index_catalog.index_delete) — deleted vectors must stop surfacing
-    as ADC hits immediately, not at the next compaction."""
-    return index_live(spark, root, name, "pq")
 
 
 def pq_index_append(

@@ -49,10 +49,9 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     column — one stats scan + one NDV scan, both Expand-free."""
     from ..functions.vectors import sql_alias, sql_ident
 
-    # the per-column stat aggregates and NDV branches parse as SQL (§12
-    # fast path, r12): same trees as the retired Column forms — sum over
-    # CAST(IS NULL AS BIGINT), CAST(min/max AS STRING), count(1) over
-    # the distinct'd single-column projection. Bitwise-identical output.
+    # the per-column stat aggregates and NDV branches parse as SQL: sum
+    # over CAST(IS NULL AS BIGINT), CAST(min/max AS STRING), count(1)
+    # over the distinct'd single-column projection.
     exprs = []
     stack_args = []
     for c in cols:

@@ -30,14 +30,9 @@ def quantize_embeddings(
     df: DataFrame, emb_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """(id, scale DOUBLE, codes array<int>) — symmetric per-vector int8
-    range, materialized as int for exact downstream arithmetic.
-
-    The let-bound scale/codes expression parses from ONE SQL string per
-    output column (§12 fast path, r12): same nested-lambda trees, same
-    D-suffixed double literals and operand order as the retired Column
-    form, so codes and scales are bitwise identical — pinned by the
-    quantize unit tests and the ann_quantized_search / eval_rank_agreement
-    oracle rows."""
+    range, materialized as int for exact downstream arithmetic. The
+    scale is let-bound via a 1-element transform, so array_max runs once
+    per vector."""
     from ..functions.vectors import sql_ident
 
     e = sql_ident(emb_col)
@@ -56,34 +51,16 @@ def quantize_embeddings(
 
 
 def quantized_dot(
-    d_codes: Column | str,
-    q_codes: Column | str,
-    d_scale: Column | str,
-    q_scale: Column | str,
+    d_codes: str, q_codes: str, d_scale: str, q_scale: str
 ) -> Column:
-    """(scale_d · scale_q) · Σ code_d·code_q — integer-exact inner sum.
+    """(scale_d · scale_q) · Σ code_d·code_q over four column names —
+    integer-exact inner sum, a fold seeded CAST(0 AS BIGINT)."""
+    from ..functions.vectors import sql_ident
 
-    With all-string (top-level column name) inputs the expression parses
-    as ONE SQL string — same integer fold seeded CAST(0 AS BIGINT), same
-    association, bitwise-identical scores."""
-    if all(isinstance(c, str) for c in (d_codes, q_codes, d_scale, q_scale)):
-        from ..functions.vectors import sql_ident
-
-        dc, qc = sql_ident(d_codes), sql_ident(q_codes)
-        ds, qs = sql_ident(d_scale), sql_ident(q_scale)
-        return F.expr(
-            f"({ds} * {qs}) * CAST(aggregate(zip_with({dc}, {qc}, "
-            "(a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) "
-            "AS DOUBLE)"
-        )
-    # names mixed with Columns bind as column references, not literals
-    d_codes, q_codes, d_scale, q_scale = (
-        F.col(c) if isinstance(c, str) else c
-        for c in (d_codes, q_codes, d_scale, q_scale)
+    dc, qc = sql_ident(d_codes), sql_ident(q_codes)
+    ds, qs = sql_ident(d_scale), sql_ident(q_scale)
+    return F.expr(
+        f"({ds} * {qs}) * CAST(aggregate(zip_with({dc}, {qc}, "
+        "(a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) "
+        "AS DOUBLE)"
     )
-    intdot = F.aggregate(
-        F.zip_with(d_codes, q_codes, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (d_scale * q_scale) * intdot.cast("double")

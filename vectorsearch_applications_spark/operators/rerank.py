@@ -52,10 +52,8 @@ def rerank_overlap(
     candidate subtree into a broadcast build taxed rag_pipeline_eval
     +17% — the barrier cost more than the tokenize it saved locally).
     """
-    # §12 fast path (r12): tokenize/jaccard expressions parse as SQL —
-    # same trees as the retired Column forms (the union subtree repeats
-    # in the CASE exactly as the Column form repeated it), so scores are
-    # bitwise identical (pinned by the rerank oracle rows).
+    # tokenize/jaccard expressions parse as SQL (pinned by the rerank
+    # oracle rows).
     from ..functions.text import tokenize_sql
     from ..functions.vectors import sql_ident
 

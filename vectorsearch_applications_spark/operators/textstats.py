@@ -34,14 +34,6 @@ LANG_PROFILES: dict[str, dict[str, int]] = {
 }
 
 
-def langid_normalize(text_col: str | Column) -> Column:
-    """Space-padded, lowercased, [a-z ]-only text — the gram alphabet."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.concat(
-        F.lit(" "), F.regexp_replace(F.lower(c), "[^a-z ]", " "), F.lit(" ")
-    )
-
-
 def langid_ngram(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -72,17 +64,11 @@ def langid_ngram(
 
     from ..functions.vectors import sql_ident
 
-    # Construction fast path (§12 recipe, r12): the per-language score
-    # columns and the argmax CASE assembled ~3,100 py4j tree nodes via
-    # the DataFrame API (every gram term is its own length/replace
-    # subtree) — the whole select now parses JVM-side as SQL. Same
-    # functions, literal types and operand order as the retired Column
-    # form (the normalized text stays let-bound per language via the
-    # 1-element transform; the CASE re-embeds the greatest() subtree per
-    # branch exactly as the when-chain did), so outputs are bitwise
-    # identical — pinned by
-    # test_operators.py::test_langid_ngram_sql_construction_bitwise_equal
-    # and the langid_ngram oracle row.
+    # The per-language score columns and the argmax CASE (~3,100 tree
+    # nodes: every gram term is its own length/replace subtree) parse
+    # JVM-side as one SQL select. The normalized text — space-padded,
+    # lowercased, [a-z ]-only, the gram alphabet — stays let-bound per
+    # language via the 1-element transform.
     def _score_sql(grams: dict[str, int]) -> str:
         terms = " + ".join(
             "(length(t) - length(replace(t, '{g}', ''))) * {w}".format(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.embed import hash_embed_col
+from ..functions.vectors import cosine_similarity
 
 
 def route_queries(
@@ -52,21 +53,8 @@ def route_queries(
         F.col(query_id_col).alias("query_id"),
         hash_embed_col(query_col, dim).alias("_q"),
     )
-    # §12 fast path (r12): the unnormalized-cosine expression parses as
-    # SQL — same dot/norm trees as the retired cosine_similarity Column
-    # form (each dot re-casts both sides exactly as dot() did), bitwise-
-    # identical scores (pinned by the routed oracle rows).
-    from ..functions.vectors import cast_double_sql, dot_double_sql
-
-    def _dot(a: str, b: str) -> str:
-        return dot_double_sql(cast_double_sql(a), cast_double_sql(b))
-
     scored = q.crossJoin(F.broadcast(cent)).withColumn(
-        "score",
-        F.expr(
-            f"{_dot('_q', 'centroid')} / (sqrt({_dot('_q', '_q')})"
-            f" * sqrt({_dot('centroid', 'centroid')}))"
-        ),
+        "score", cosine_similarity("_q", "centroid", assume_normalized=False)
     )
     return (
         scored.withColumn(

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from .sources.io import load_table, one_slice_df
 from .functions.text import BPE_PATTERN, bpe_token_count, token_count, tokenize
+from .functions.text import tokenize_sql
+from .functions.vectors import cast_double_sql, dot_sql
 from .operators.bm25 import bm25_search
 from .operators.knn import knn_search
 from .operators.hybrid import hybrid_search
@@ -1249,7 +1251,7 @@ def q_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2× faster (same-session A/B at sf0.1: 1.4 → 1.0 s warm; the
     # signature pipeline ran twice otherwise). localCheckpoint pins the
     # shared table (AQE does not reuse exchanges across the two filters).
-    # In deployment standing bands come from disk (minhash_load_index).
+    # In deployment standing bands come from disk (index_live(..., "minhash")).
     bands = minhash_bands(docs, num_hashes=16, band_size=4).localCheckpoint(
         eager=False
     )
@@ -2249,10 +2251,10 @@ def q_llm_cost_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     done = llm_complete(prompts, model_name="gpt-4o-mini")
     counts = done.select(
-        F.size(
-            tokenize(
-                F.concat_ws(" ", F.col("system_message"), F.col("user_message"))
-            )
+        F.expr(
+            "size("
+            + tokenize_sql("concat_ws(' ', system_message, user_message)")
+            + ")"
         ).alias("np"),
         F.size(tokenize("completion")).alias("nc"),
     )
@@ -6407,7 +6409,7 @@ def q_quality_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality-filter pass over 100 TB (swap the literals for trained
     weights)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     f = d.select(
         "doc_id",
         F.length("text").alias("n_chars"),
@@ -6743,7 +6745,7 @@ def q_dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in ONE broadcast-argmin pass and splits by parity — value-identical
     # to two assigns (the dedup_index_append lesson); localCheckpoint
     # pins the shared table across the two filters. In deployment the
-    # standing side comes from disk (semantic_load_index) and the batch
+    # standing side comes from disk (index_live(..., "semantic")) and the batch
     # assigns under semantic_load_centroids.
     asg = assign_nearest_centroid(
         emb, centroids, keep_vec=True
@@ -7715,7 +7717,7 @@ def q_docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram pass, one min-over-gram window, one per-doc aggregation —
     integer ppm."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
+    toks = docs.select("doc_id", tokenize("text").alias("toks"))
     grams = toks.select(
         "doc_id",
         F.when(
@@ -7829,7 +7831,7 @@ def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-aggregation; the threshold ladder is a 6-row broadcast."""
     docs = load_table(spark, sf_dir, "documents")
     firsts = (
-        docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(tokenize("text")).alias("term"))
         .groupBy("term")
         .agg(F.min("doc_id").alias("first_doc"))
     )
@@ -8076,9 +8078,7 @@ def q_embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("vec_id") < 250, F.lit("old"))
         .otherwise(F.lit("new"))
         .alias("gen"),
-        F.posexplode(F.transform("embedding", lambda x: x.cast("double"))).alias(
-            "pos", "x"
-        ),
+        F.posexplode(F.expr(cast_double_sql("embedding"))).alias("pos", "x"),
     )
     per = tagged.groupBy("gen", (F.col("pos") + 1).alias("dim")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -8307,7 +8307,7 @@ def q_quality_composite_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr("microprob_sum DIV n_bigrams").alias("fluency_micro"),
     )
-    toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
+    toks = docs.select("doc_id", tokenize("text").alias("toks"))
     tg = toks.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n_tokens"),
@@ -8938,7 +8938,7 @@ def q_classifier_score_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.classifier import logistic_margin
 
     d = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     feats = d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -8983,11 +8983,10 @@ def q_embedding_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension counts, unit-norm check, and the squared norm floored to
     1e-4 units (the fold is bitwise identical across engines; floor of
     identical doubles is exact). Pure projection, zero shuffle."""
-    from .functions.vectors import dot
-
     emb = load_table(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    sq = dot(v, v)
+    v_sql = cast_double_sql("embedding")
+    v = F.expr(v_sql)
+    sq = F.expr(dot_sql(v_sql, v_sql))
     return emb.select(
         "vec_id",
         F.size("embedding").cast("bigint").alias("dim"),
@@ -9176,7 +9175,7 @@ def q_docs_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise identical across engines. Pure narrow projection +
     aggregation-free pass: stays in whole-stage codegen, zero shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     n_sents = F.regexp_count(F.col("text"), F.lit(r"[.!?]+"))
     n_words = F.size(toks)
     long_words = F.size(F.filter(toks, lambda x: F.length(x) >= 7))
@@ -9387,7 +9386,7 @@ def q_padding_waste_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pack_training_sequences). Narrow projection + one tiny aggregation;
     the CASE ladder is constant-folded comparison chains, no log2 float."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(F.size(tokenize(F.col("text"))).alias("n"))
+    t = docs.select(F.size(tokenize("text")).alias("n"))
     b = t.withColumn("bucket", F.expr(_PAD_BUCKET_SQL))
     return (
         b.groupBy(F.col("bucket").cast("bigint").alias("bucket"))
@@ -9435,7 +9434,7 @@ def q_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     redistribution is the caller's loop over this (source-count-sized)
     output — driver-side by design, like every codebook here."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("source", F.size(tokenize(F.col("text"))).alias("n"))
+    d = docs.select("source", F.size(tokenize("text")).alias("n"))
     s = d.groupBy("source").agg(F.sum("n").cast("bigint").alias("avail"))
     tot = s.agg(F.sum("avail").cast("bigint").alias("t"))
     prop = F.floor((F.lit(100000) * F.col("avail")) / F.col("t")).cast(
@@ -9559,7 +9558,6 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching floats; only those 32·|Q| rows are joined back to the float
     embeddings for the exact cosine pass — at 100 TB the refine join is
     shortlist-sized, never corpus-sized."""
-    from .functions.vectors import cosine_distance
     from .operators.pq import ivfpq_search, pq_codebook
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -9582,9 +9580,10 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            cosine_distance(
-                F.transform(F.col("embedding"), lambda x: x.cast("double")),
-                F.transform(F.col("query_vec"), lambda x: x.cast("double")),
+            F.expr(
+                "1.0D - " + dot_sql(
+                    cast_double_sql("embedding"), cast_double_sql("query_vec")
+                )
             ).alias("distance"),
         )
     )
@@ -9917,7 +9916,7 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules (the flags query complements text_profile's continuous stats).
     All integer/ppm arithmetic, single narrow projection, zero shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     n_words = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, lambda x: F.length(x)),
@@ -9986,7 +9985,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     that size the denoising targets. Entirely inside one Catalyst
     projection over index sequences — no explode, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     t = docs.select("doc_id", toks.alias("toks"))
     mask = F.transform(
         F.sequence(F.lit(0), F.size("toks") - 1),
@@ -10152,7 +10151,7 @@ def q_classifier_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.evaluation import auc_from_scores
 
     d = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     feats = d.select(
         F.size(toks).alias("n_tokens"),
         F.length("text").alias("n_chars"),
@@ -10221,7 +10220,7 @@ def q_classifier_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.evaluation import confusion_ladder
 
     d = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     feats = d.select(
         F.size(toks).alias("n_tokens"),
         F.length("text").alias("n_chars"),
@@ -10672,7 +10671,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
-        F.explode(tokenize(F.col("text"))).alias("term")
+        F.explode(tokenize("text")).alias("term")
     )
     tf = terms.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_count")
@@ -10713,7 +10712,7 @@ def q_phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pos = docs.select(
         "doc_id",
-        F.posexplode(tokenize(F.col("text"))).alias("p0", "term"),
+        F.posexplode(tokenize("text")).alias("p0", "term"),
     ).select("doc_id", "term", (F.col("p0") + 1).alias("p"))
     a = pos.filter(F.col("term") == "table").select("doc_id", "p")
     b = pos.filter(F.col("term") == "hash").select(
@@ -12840,7 +12839,7 @@ def q_classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame
     from .operators.classifier import logistic_margin
 
     d = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
+    toks = tokenize("text")
     feats = d.select(
         F.size(toks).alias("n_tokens"),
         F.length("text").alias("n_chars"),

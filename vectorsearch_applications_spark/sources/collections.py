@@ -302,43 +302,21 @@ def cluster_collection(
     shutil.rmtree(old)
 
 
-def zorder_value(
-    x: Column | str, y: Column | str, bits: int = 16
-) -> Column:
-    """Morton (Z-order) interleave of two non-negative integer keys,
+def zorder_value(x: str, y: str, bits: int = 16) -> Column:
+    """Morton (Z-order) interleave of two non-negative integer columns,
     built as a pure Catalyst bit expression (no UDF): bit i of x lands at
-    position 2i, bit i of y at 2i+1. Inputs must already be rank/scale
-    normalized into [0, 2^bits); the z-value fits in BIGINT for
-    bits <= 31.
+    position 2i, bit i of y at 2i+1, in one left-associative OR chain.
+    Inputs must already be rank/scale normalized into [0, 2^bits); the
+    z-value fits in BIGINT for bits <= 31."""
+    from ..functions.vectors import sql_ident
 
-    When both inputs are TOP-LEVEL column names the 2·bits-term chain
-    parses from one SQL string (§12 fast path: the Column loop built
-    ~12 py4j round trips per bit) — same left-associative OR chain,
-    same shiftleft/shiftright/& operand order, so the BIGINT result is
-    identical by construction."""
-    if isinstance(x, str) and isinstance(y, str):
-        from ..functions.vectors import sql_ident
-
-        xs, ys = sql_ident(x), sql_ident(y)
-        terms = []
-        for i in range(bits):
-            terms.append(
-                f"shiftleft(shiftright(CAST({xs} AS BIGINT), {i}) & 1,"
-                f" {2 * i})"
-            )
-            terms.append(
-                f"shiftleft(shiftright(CAST({ys} AS BIGINT), {i}) & 1,"
-                f" {2 * i + 1})"
-            )
-        return F.expr(" | ".join(terms))
-    z: Column | None = None
-    for i in range(bits):
-        xi = F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(1), 2 * i)
-        yi = F.shiftleft(
-            F.shiftright(y.cast("long"), i).bitwiseAND(1), 2 * i + 1
-        )
-        z = xi.bitwiseOR(yi) if z is None else z.bitwiseOR(xi).bitwiseOR(yi)
-    return z
+    xs, ys = sql_ident(x), sql_ident(y)
+    terms = [
+        f"shiftleft(shiftright(CAST({c} AS BIGINT), {i}) & 1, {2 * i + o})"
+        for i in range(bits)
+        for o, c in ((0, xs), (1, ys))
+    ]
+    return F.expr(" | ".join(terms))
 
 
 def zorder_collection(
@@ -389,7 +367,7 @@ def zorder_collection(
     zy, _ = bucketize(col_y, "_zy")
     ranked = df.select("*", zx, zy)
     z = ranked.withColumn(
-        "_z", zorder_value(F.col("_zx"), F.col("_zy"), bits)
+        "_z", zorder_value("_zx", "_zy", bits)
     )
     if n_files:
         clustered = z.repartitionByRange(n_files, "_z")

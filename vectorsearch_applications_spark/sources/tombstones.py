@@ -35,50 +35,24 @@ def _tomb_path(base: str) -> str:
     return os.path.join(base, TOMBSTONES)
 
 
-def is_path_not_found(ex) -> bool:
-    """True iff an AnalysisException is Spark's missing-path error.
-
-    Matches on the structured error condition (``getCondition()``,
-    Spark 4's name for ``getErrorClass()``) rather than a message
-    substring: a Spark upgrade that rewords the message must not make
-    every never-deleted index raise on its first live-view read, and a
-    path that merely CONTAINS the string 'PATH_NOT_FOUND' must not read
-    as missing. The substring probe survives only as a last-resort
-    fallback for exceptions carrying no condition at all. Pinned
-    against the installed Spark in tests/test_index_delete.py."""
-    for probe in ("getCondition", "getErrorClass"):
-        fn = getattr(ex, probe, None)
-        if fn is None:
-            continue
-        try:
-            cond = fn()
-        except Exception:
-            continue
-        if cond is not None:
-            return cond == "PATH_NOT_FOUND"
-    return "PATH_NOT_FOUND" in str(ex)
-
-
 def load_tombstones(spark, base: str, id_col: str) -> DataFrame | None:
     """The tombstoned id set, or None when nothing was ever deleted.
 
-    ONLY the missing-directory case maps to None: any other read failure
-    (transient FS error, corrupted directory) must raise — swallowing it
-    would silently resurrect every deleted row in the live views, and a
-    compaction run under the same condition would rewrite the table WITH
-    the tombstoned rows, permanently undeleting them. (A truncated
-    tombstone table — compact_table's empty overwrite — reads back as a
-    schema'd empty frame, not an error, so it does not hit this path.)
+    ONLY a missing ``<base>/tombstones`` maps to None, checked on the
+    driver (local/shared FS assumed, as read_meta_row does) so a
+    never-deleted index pays no failed Spark read per search. Any read
+    failure of a present directory (transient FS error, corrupted or
+    foreign files) must raise — swallowing it would silently resurrect
+    every deleted row in the live views, and a compaction run under the
+    same condition would rewrite the table WITH the tombstoned rows,
+    permanently undeleting them. (A truncated tombstone table —
+    compact_table's empty overwrite — reads back as a schema'd empty
+    frame, not an error.)
     """
-    from pyspark.errors import AnalysisException
-
     path = _tomb_path(base)
-    try:
-        return read_parquet(spark, path).select(id_col).distinct()
-    except AnalysisException as ex:
-        if is_path_not_found(ex):
-            return None
-        raise
+    if not os.path.exists(path):
+        return None
+    return read_parquet(spark, path).select(id_col).distinct()
 
 
 def tombstone_append(

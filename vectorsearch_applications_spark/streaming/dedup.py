@@ -4,7 +4,7 @@ incremental MinHash index (operators/dedup.py minhash_index_append).
 A document's LSH band rows depend only on its own shingles, so minting
 them is a STATELESS projection that composes directly onto a readStream
 source; screening is then one stream-static inner join against the
-persisted standing band table (minhash_load_index). No watermark, no
+persisted standing band table (index_live(..., "minhash")). No watermark, no
 state store, append-mode output — the same cheapest-shape contract as
 streaming/hygiene.py.
 
@@ -156,7 +156,7 @@ def stream_semantic_screen(
     partitioned by centroid_id; vectors must ride along because the
     verify needs the standing side's coordinates.
     """
-    from ..functions.vectors import dot_double
+    from ..functions.vectors import cast_double_sql, dot_double_sql, sql_ident
     from ..operators.ann import assign_nearest_centroid
 
     new = assign_nearest_centroid(
@@ -172,12 +172,12 @@ def stream_semantic_screen(
         "centroid_id",
         # cast ONCE per standing row; inside the join the cast would
         # re-run per candidate pair (the r6 SemDeDup lesson)
-        F.transform(F.col(vc), lambda x: x.cast("double")).alias("_sv"),
+        F.expr(cast_double_sql(sql_ident(vc))).alias("_sv"),
     )
     return (
         new.join(s, "centroid_id")
         .filter(F.col("new_vec_id") != F.col("standing_vec_id"))
-        .withColumn("sim", dot_double(F.col("_nv"), F.col("_sv")))
+        .withColumn("sim", F.expr(dot_double_sql("_nv", "_sv")))
         .filter(F.col("sim") >= F.lit(float(threshold)))
         .select("new_vec_id", "standing_vec_id", "centroid_id", "sim")
     )
