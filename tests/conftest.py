@@ -13,9 +13,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def make_spark():
+    """The test session (also used to regenerate tests/plan_shapes.tsv)."""
+    return get_spark(cpus=8, shuffle_partitions=8)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cpus=8, shuffle_partitions=8)
+    s = make_spark()
     yield s
 
 

@@ -8741,7 +8741,8 @@ def q_supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct→count per distinct measure over a NARROW 2-column
     projection (l_suppkey + the counted key, both ints, map-side
     partial distinct applies), then a |suppliers|-sized 3-way join.
-    A/B (plans/r12/probe_scorecard_shapes.py, 8 interleaved sweeps):
+    A/B (`git show 382c7cb:plans/r12/probe_scorecard_shapes.py`, 8
+    interleaved sweeps):
     Expand 2.673 s vs split 1.300 s (−51.3%), results identical —
     decimal revenue sums are grouping-path-independent, and the
     distinct counts are exact either way."""
