@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from vectorsearch_applications_spark.client import SparkSearchClient
-from vectorsearch_applications_spark.sources.io import load_table
+from vectorsearch_applications_spark.sources.io import (
+    frame_files,
+    load_table,
+    memo,
+    read_parquet,
+)
 
 from .conftest import SF_SMOKE
 
@@ -208,28 +215,35 @@ def test_build_ann_index_reused_no_rebuild_between_searches(
     assert rc == rd and len(rc) == 5
 
 
-def test_dim_probe_cached_once_per_collection(client, spark, monkeypatch):
-    """The dim probe (limit(1).collect()) runs at most once per
-    (collection, vector_col); later ANN searches hit the cache."""
+def test_dim_probe_cached_once_per_collection(client, spark):
+    """The dim probe (a limit(1).collect() job) runs once per
+    (collection, vector_col) while the collection's files are
+    unchanged: a second search builds without running any job."""
+    from .test_setup_jobs import _jobs
+
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
         F.concat(F.lit("d"), F.col("vec_id")).alias("text"),
         "embedding",
     )
     client.create_collection("vecs", emb)
-    client.vector_search("vecs", "probe once", limit=3, backend="lsh")
-    assert client._dim_cache[("vecs", "embedding")] == 64
 
-    # second search must read the cache, never the probe path: replace
-    # _dim with a cache-only lookup that raises on a miss
-    def cache_only(collection, vector_col, corpus):
-        key = (collection, vector_col)
-        assert key in client._dim_cache, "dim re-probed despite cache"
-        return client._dim_cache[key]
+    def search(q):
+        return client.vector_search("vecs", q, limit=3, backend="lsh")
 
-    monkeypatch.setattr(client, "_dim", cache_only)
-    hits = client.vector_search("vecs", "probe twice", limit=3, backend="lsh")
+    _, probed = _jobs(spark, lambda: search("probe once"))
+    hits, n_jobs = _jobs(spark, lambda: search("probe twice"))
+    assert probed >= 1 and n_jobs == 0
     assert hits.count() == 3
+    # the memoized value is the probed dim: a lookup under the same key
+    # and files returns it without building
+    path = os.path.join(client.root, "vecs")
+
+    def reprobe():
+        raise AssertionError("dim re-probed despite an unchanged collection")
+
+    files = frame_files(read_parquet(spark, path))
+    assert memo(spark, ("dim", path, "embedding"), reprobe, files) == 64
 
 
 def test_ann_search_on_empty_collection_raises_clear_error(client, spark):

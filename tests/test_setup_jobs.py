@@ -180,6 +180,32 @@ def test_read_parquet_keeps_partition_columns_in_place(spark, tmp_path):
     assert cached.filter("bucket = 1").count() == 4
 
 
+def test_read_parquet_schema_follows_nanos_as_long(spark, tmp_path):
+    """A schema inferred under one ``nanosAsLong`` value is never served
+    under the other: a TIMESTAMP(NANOS) column is BIGINT with the conf
+    on, and unreadable with it off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    path = str(tmp_path / "nanos")
+    os.makedirs(path)
+    pq.write_table(
+        pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}),
+        os.path.join(path, "part-0.parquet"),
+        version="2.6",
+    )
+    before = spark.conf.get(conf, "false")
+    try:
+        spark.conf.set(conf, "true")
+        assert read_parquet(spark, path).schema["ts"].dataType == LongType()
+        spark.conf.set(conf, "false")
+        with pytest.raises(Exception, match="NANOS"):
+            read_parquet(spark, path).collect()
+    finally:
+        spark.conf.set(conf, before)
+
+
 def test_read_parquet_missing_path_raises_as_before(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
@@ -273,3 +299,15 @@ def test_warmed_facade_call_job_count_is_pinned(spark, indexed_client, verb):
     rows, n_jobs = _jobs(spark, lambda: call("spark join order").collect())
     assert rows
     assert n_jobs == PINNED_JOBS[verb]
+
+
+def test_second_registry_build_runs_no_job(spark):
+    """Registry tables are read through read_parquet too
+    (sources.io.load_table): once a query has been built, building it
+    again in the session runs no footer job."""
+    from vectorsearch_applications_spark.queries import QUERIES
+
+    build = QUERIES["tpch_q8_market_share"]
+    build(spark, SF_SMOKE)
+    _, n_jobs = _jobs(spark, lambda: build(spark, SF_SMOKE))
+    assert n_jobs == 0

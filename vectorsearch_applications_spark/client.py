@@ -36,7 +36,7 @@ from .operators.hybrid import hybrid_search as _fuse
 from .operators.knn import knn_search
 from .sources import collections as _coll
 from .sources import index_catalog as _idx
-from .sources.io import one_slice_df, read_parquet
+from .sources.io import forget, frame_files, memo, one_slice_df, read_parquet
 
 _EMBED_DIM = 16
 
@@ -78,18 +78,6 @@ class SparkSearchClient:
         self.root = root
         self._embed_query_fn = embed_query_fn
         self._embed_dim = embed_dim
-        # (collection, vector_col) -> embedding dim. Array columns don't
-        # carry their length in the schema, so the first ANN search per
-        # collection probes one row; every later search reuses the cache
-        # (no repeated limit(1).collect() round-trips).
-        self._dim_cache: dict[tuple[str, str], int] = {}
-        # (collection, id_col, text_col) -> persisted hash-embedded
-        # corpus — the dense-arm twin of the BM25 session stats cache:
-        # a collection with no vector column would otherwise re-embed
-        # every doc on every vector/hybrid search (the r10 verdict's
-        # hot-path recompute). Mutating verbs drop entries via
-        # _invalidate_search_caches, same as the stats cache.
-        self._embed_cache: dict[tuple[str, str, str], DataFrame] = {}
 
     def _embed_query(self, col_name: str) -> Column:
         """Query-text embedding column for the named input column.
@@ -103,41 +91,17 @@ class SparkSearchClient:
             return self._embed_query_fn(F.col(col_name))
         return hash_embed_col(col_name, self._embed_dim)
 
-    # -- lifecycle ---------------------------------------------------------
-
-    def _invalidate_search_caches(self, name: str) -> None:
-        """Drop session caches describing a just-mutated collection: the
-        persisted BM25 stats (keyed by '<root>/<name>…') and the probed
-        embedding dims. Every mutating verb calls this — a search after
-        a mutation must never score against pre-mutation postings (r10
-        review finding; the operator API's docstring warns the caller,
-        but the facade picks cache keys on the user's behalf, so the
-        facade owns the invalidation too)."""
-        from .operators.bm25 import bm25_cache_invalidate
-
-        bm25_cache_invalidate(os.path.join(self.root, name))
-        self._dim_cache = {
-            k: v for k, v in self._dim_cache.items() if k[0] != name
-        }
-        for k in [k for k in self._embed_cache if k[0] == name]:
-            try:
-                self._embed_cache.pop(k).unpersist()
-            except Exception:
-                pass
-
     # -- persisted-index staleness protocol ---------------------------------
     #
-    # Session caches invalidate in memory, but the ON-DISK indexes a
-    # mutated collection leaves behind stay authoritative to implicit
-    # reuse (the _fresh_index probes) — so an unfiltered search after a
-    # MERGE could return pre-mutation postings, including deleted docs
-    # (r10 advice, medium). Every mutating verb therefore flags every
-    # family's index directory (sources/index_catalog.FAMILIES) with a
-    # ``_stale.json`` marker; implicit reuse skips flagged indexes
-    # (falling back to in-plan scoring, which is always correct), and
-    # the marker clears only when the index is repaired (the documented
-    # batch_index_data → append_to_*_index flow) or rebuilt
-    # (build_*_index).
+    # Session caches follow the collection's files; the ON-DISK indexes
+    # it leaves behind do not, and implicit reuse (the _fresh_index
+    # probes) would return pre-mutation postings after a MERGE, deleted
+    # docs included (r10 advice, medium). Every mutating verb therefore
+    # flags every family's index directory (index_catalog.FAMILIES) with
+    # a ``_stale.json`` marker; implicit reuse skips flagged indexes
+    # (in-plan scoring is always correct), and the marker clears only
+    # when the index is repaired (batch_index_data → append_to_*_index)
+    # or rebuilt (build_*_index).
 
     def _index_dir(self, name: str, suffix: str) -> str:
         return _idx.index_dir(self.root, name, suffix)
@@ -210,13 +174,14 @@ class SparkSearchClient:
         for fam in _idx.FAMILIES:
             _idx.index_reset(self.root, name, fam)
 
+    # -- lifecycle ---------------------------------------------------------
+
     def create_collection(
         self,
         name: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
     ) -> str:
-        self._invalidate_search_caches(name)
         # recreate case: indexes of a previous same-name collection are
         # orphans describing the old corpus — only a rebuild repairs
         # them. Flag BEFORE the mutation commits: a crash in between
@@ -229,8 +194,10 @@ class SparkSearchClient:
         )
 
     def delete_collection(self, name: str) -> None:
-        self._invalidate_search_caches(name)
         _coll.drop_collection(self.root, name)
+        # a deleted path is never read again, so only this frees its
+        # session-cache entries
+        forget(os.path.join(self.root, name))
         # the collection's index directories are orphans now — removing
         # them stops a future same-name collection from inheriting them
         # (drop_collection itself only removes <root>/<name>; r10 advice)
@@ -246,7 +213,6 @@ class SparkSearchClient:
         not_null_cols: list[str],
         error_threshold: float = 0.01,
     ) -> dict[str, int]:
-        self._invalidate_search_caches(name)
         # persisted indexes will lag the new generation; searches fall
         # back to in-plan scoring until append_to_*_index with the new
         # batch (which clears this flag) or a full rebuild. Flagged
@@ -290,7 +256,6 @@ class SparkSearchClient:
     def merge(self, name: str, changes: DataFrame, **kw) -> dict[str, int]:
         """CDC MERGE (upsert+delete change set, last-writer-wins) — see
         sources/collections.py merge_collection."""
-        self._invalidate_search_caches(name)
         self._mark_indexes_stale(name, "merge")  # crash-window rule
         return _coll.merge_collection(self.spark, self.root, name, changes, **kw)
 
@@ -299,7 +264,6 @@ class SparkSearchClient:
         return _coll.snapshot_collection(self.root, name, tag)
 
     def rollback(self, name: str, tag: str) -> None:
-        self._invalidate_search_caches(name)
         self._mark_indexes_stale(name, "rollback")  # crash-window rule
         _coll.rollback_collection(self.root, name, tag)
 
@@ -314,7 +278,6 @@ class SparkSearchClient:
 
     def recover(self, name: str) -> str:
         """Resolve staged-swap crash leftovers; returns the action taken."""
-        self._invalidate_search_caches(name)
         # crash-window rule, with a twist: whether this recovery changes
         # the live generation is only known AFTER it runs, so flag
         # conservatively first and withdraw OUR flag (never a
@@ -927,13 +890,10 @@ class SparkSearchClient:
         filtered: bool,
     ) -> DataFrame:
         """Hash-embedded (vec_id, embedding) view of a collection with no
-        vector column. Unfiltered searches reuse a session-persisted
-        embedding per (collection, id_col, text_col) — embedding the
-        corpus is the dense arm's whole cost, so re-deriving it per call
-        made every vector/hybrid search pay an index build (r10 verdict,
-        What's wrong #2). A ``filters`` predicate changes the corpus
-        view, so filtered searches embed the filtered frame in-plan
-        (same rule as the BM25 stats cache)."""
+        vector column, the dense arm's whole cost (r10 verdict, What's
+        wrong #2): unfiltered searches share one memoized, persisted
+        embedding per (collection, id_col, text_col, dim) and its files;
+        filtered ones embed the filtered frame in-plan."""
 
         def emb(d: DataFrame) -> DataFrame:
             return hash_embed_ids(
@@ -942,24 +902,28 @@ class SparkSearchClient:
 
         if filtered:
             return emb(docs)
-        key = (collection, id_col, text_col)
-        if key not in self._embed_cache:
-            self._embed_cache[key] = emb(docs).persist()
-        return self._embed_cache[key]
+        path = os.path.join(self.root, collection)
+        key = ("hash_corpus", path, id_col, text_col, self._embed_dim)
+        return memo(
+            self.spark, key, lambda: emb(docs).persist(), frame_files(docs)
+        )
 
     def _dim(self, collection: str, vector_col: str, corpus: DataFrame) -> int:
-        """Embedding dimension, probed once per (collection, column) and
-        cached — array columns don't carry length in the Spark schema."""
-        key = (collection, vector_col)
-        if key not in self._dim_cache:
+        """Embedding dimension, probed (a limit(1).collect() job) once per
+        (collection, column) and its files — array columns don't carry
+        length in the Spark schema."""
+
+        def probe() -> int:
             head = corpus.select("embedding").limit(1).collect()
             if not head:
                 raise ValueError(
                     f"collection {collection!r} has no rows (after filters);"
                     " cannot infer embedding dimension for ANN search"
                 )
-            self._dim_cache[key] = len(head[0]["embedding"])
-        return self._dim_cache[key]
+            return len(head[0]["embedding"])
+
+        key = ("dim", os.path.join(self.root, collection), vector_col)
+        return memo(self.spark, key, probe, frame_files(corpus))
 
     def _ann_search(
         self,
@@ -1554,7 +1518,6 @@ class SparkSearchClient:
             ).localCheckpoint(eager=True)
             if fresh.isEmpty():
                 return
-            self._invalidate_search_caches(collection)
             self._mark_indexes_stale(collection, "batch_index_data")
             _coll.batch_append(
                 self.spark, self.root, collection, fresh, not_null_cols,

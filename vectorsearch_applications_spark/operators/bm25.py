@@ -38,14 +38,7 @@ from ..sources.index_catalog import (
     index_live,
     index_reset,
 )
-from ..sources.io import read_parquet
-
-
-# Session-scoped index cache: (session id, corpus key) → built stats.
-# The reference's Weaviate collection owns a persistent inverted index; the
-# analog here is "build the postings tables once, reuse across queries".
-# Entries are persisted DataFrames; harmless if the session is torn down.
-_INDEX_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
+from ..sources.io import forget, frame_files, memo, memo_replace, read_parquet
 
 
 def bm25_cached_stats(
@@ -54,75 +47,30 @@ def bm25_cached_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """bm25_build_stats with a session-scoped persist()ed cache.
+    """bm25_build_stats with a session-scoped persist()ed cache
+    (sources/io.memo) keyed on ``cache_key`` plus (id_col, text_col).
 
-    ``cache_key`` MUST uniquely identify the corpus *view* (rows + text
-    column) — e.g. the collection path. Passing the same key for a
-    filtered/different frame serves the wrong index. The key additionally
-    carries (id_col, text_col) so column changes never alias. At 100 TB the
-    equivalent is a parquet-persisted postings table maintained on append —
-    recompute-on-write first, incremental later (SURVEY §7 hard part 3).
-    Call ``bm25_cache_clear()`` to release the persisted frames.
+    The entry is rebuilt, its old frames unpersisted, when the files
+    ``docs`` reads change, so an append or overwrite is never served
+    stale. ``cache_key`` must still tell apart corpus *views* of the
+    same files: a filtered or transformed frame over a collection needs
+    its own key, or it is served the unfiltered index. At 100 TB the
+    equivalent is a parquet-persisted postings table maintained on
+    append (SURVEY §7 hard part 3). ``bm25_cache_clear()`` releases it.
     """
-    # applicationId is stable for the life of the underlying SparkContext
-    # and changes when it is torn down — unlike id(session), which Python
-    # can reuse for a new session, leaving dead DataFrames in the cache
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        cache_key,
-        id_col,
-        text_col,
-    )
-    if key not in _INDEX_CACHE:
-        postings, term_stats, corpus_stats = bm25_build_stats(
-            docs, id_col, text_col
-        )
-        _INDEX_CACHE[key] = (
-            postings.persist(),
-            term_stats.persist(),
-            corpus_stats.persist(),
-        )
-    return _INDEX_CACHE[key]
+
+    def build():
+        stats = bm25_build_stats(docs, id_col, text_col)
+        return tuple(df.persist() for df in stats)
+
+    key = ("bm25", cache_key, id_col, text_col)
+    return memo(docs.sparkSession, key, build, frame_files(docs))
 
 
 def bm25_cache_clear() -> None:
-    """Unpersist and drop every cached index (frees executor memory)."""
-    for postings, term_stats, corpus_stats in _INDEX_CACHE.values():
-        for df in (postings, term_stats, corpus_stats):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _INDEX_CACHE.clear()
-
-
-def bm25_cache_invalidate(prefix: str) -> int:
-    """Unpersist and drop every cached index whose corpus key starts
-    with ``prefix`` — the mutation hook: anything that rewrites a
-    corpus the cache may describe (collection overwrite, batch index,
-    MERGE, rollback) must call this or later searches silently score
-    against the pre-mutation postings (r10 review finding). Returns the
-    number of entries dropped.
-
-    Matching is exact-key or prefix + delimiter (path separator / the
-    '#' column-view suffix) — a bare startswith would also evict
-    sibling collections sharing the prefix ('docs' dropping 'docs2',
-    'docs_v2'): safe but silently discards their warm builds (r10
-    advice)."""
-    victims = [
-        k
-        for k in _INDEX_CACHE
-        if str(k[1]) == prefix
-        or str(k[1]).startswith(prefix + os.sep)
-        or str(k[1]).startswith(prefix + "#")
-    ]
-    for k in victims:
-        for df in _INDEX_CACHE.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    return len(victims)
+    """Unpersist and drop every session-cache entry (sources/io.memo):
+    the cached indexes, and with them the facade's embedded corpora."""
+    forget()
 
 
 def bm25_build_stats(
@@ -254,31 +202,19 @@ def bm25_index_append(
     postings union — never the standing corpus. Requires the key to
     already be cached (there is nothing to append into otherwise).
     """
-    key = (
-        new_docs.sparkSession.sparkContext.applicationId,
-        cache_key,
-        id_col,
-        text_col,
+
+    def merge(old):
+        new = bm25_build_stats(new_docs, id_col, text_col)
+        # materialize the merged lineage before the memo drops the old
+        # persisted frames it reads from
+        merged = tuple(df.persist() for df in bm25_merge_stats(old, new))
+        for df in merged:
+            df.count()
+        return merged
+
+    return memo_replace(
+        new_docs.sparkSession, ("bm25", cache_key, id_col, text_col), merge
     )
-    if key not in _INDEX_CACHE:
-        raise KeyError(
-            f"no cached index for {cache_key!r}; build via bm25_cached_stats first"
-        )
-    old = _INDEX_CACHE[key]
-    new = bm25_build_stats(new_docs, id_col, text_col)
-    merged = bm25_merge_stats(old, new)
-    # materialize the merged lineage before dropping the old persisted
-    # frames it reads from
-    persisted = tuple(df.persist() for df in merged)
-    for df in persisted:
-        df.count()
-    for df in old:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _INDEX_CACHE[key] = persisted  # type: ignore[assignment]
-    return _INDEX_CACHE[key]
 
 
 def bm25_scores(

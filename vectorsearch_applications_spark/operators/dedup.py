@@ -35,6 +35,7 @@ from ..sources.index_catalog import (
     index_live,
     index_reset,
 )
+from ..sources.io import read_parquet
 
 
 def exact_duplicates(
@@ -1395,8 +1396,8 @@ def semantic_load_centroids(spark, root: str, name: str) -> DataFrame:
     append==rebuild contract)."""
     import os
 
-    return spark.read.parquet(
-        os.path.join(index_dir(root, name, "semantic"), "centroids")
+    return read_parquet(
+        spark, os.path.join(index_dir(root, name, "semantic"), "centroids")
     )
 
 

@@ -21,6 +21,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .client import SparkSearchClient
 from .sources.io import load_table, one_slice_df
 from .functions.text import BPE_PATTERN, bpe_token_count, token_count, tokenize
 from .functions.text import tokenize_sql
@@ -521,7 +522,7 @@ def q_client_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-stage Σ-maxsim SQL as late_interaction_two_stage restricted to
     that query — the two registrations share one oracle builder, so the
     facade cannot silently diverge from the module entry it wraps."""
-    client = _client_for(spark, sf_dir)
+    client = SparkSearchClient(spark, sf_dir)
     hits = client.late_interaction_search(
         "documents.parquet",
         SEARCH_QUERIES[0][1],
@@ -815,24 +816,6 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CLIENT_HYBRID_LIMIT = 30
-_CLIENT_CACHE: dict = {}
-
-
-def _client_for(spark: SparkSession, sf_dir: str):
-    """One facade instance per (Spark app, sf_dir) — the graded client
-    rows are invoked repeatedly by bench's interleaved sweeps and the
-    driver's grading pass, and a fresh client per call would re-derive
-    (and leak, via persist() with no unpersist) the session-scoped
-    caches the facade exists to reuse: the hash-embedded corpus
-    (_embed_cache), the BM25 stats cache keys, and the dim probe (r11
-    review). Keyed by applicationId so a new Spark app never sees
-    another app's cached DataFrames."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLIENT_CACHE:
-        from .client import SparkSearchClient
-
-        _CLIENT_CACHE[key] = SparkSearchClient(spark, sf_dir)
-    return _CLIENT_CACHE[key]
 
 
 @register(
@@ -859,7 +842,7 @@ def q_client_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     registrations share every CTE except the declared dense arm
     (hash-embedded text here — the collection has no vector column —
     restated by the semantic_text_search embedding SQL)."""
-    client = _client_for(spark, sf_dir)
+    client = SparkSearchClient(spark, sf_dir)
     hits = client.hybrid_search(
         "documents.parquet",
         SEARCH_QUERIES[0][1],
@@ -2191,7 +2174,7 @@ def q_client_routed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     facade's plumbing — collection loading, view registration, the
     collection-keyed BM25 stats cache — must not change a single value
     of the module entry's answer."""
-    client = _client_for(spark, sf_dir)
+    client = SparkSearchClient(spark, sf_dir)
     routes = _routes_df(spark)
     queries = _route_queries_df(spark)
     return client.routed_query(

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .io import read_parquet
+
 
 class IndexingError(RuntimeError):
     pass
@@ -78,7 +80,7 @@ def list_collections(root: str) -> list[str]:
 
 
 def describe_collection(spark: SparkSession, root: str, name: str) -> list[tuple[str, str]]:
-    df = spark.read.parquet(os.path.join(root, name))
+    df = read_parquet(spark, os.path.join(root, name))
     return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
 

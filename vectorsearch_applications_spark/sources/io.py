@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,8 +36,9 @@ TABLE_NAMES = [
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one parquet table. Plain ``spark.read.parquet`` so filters and
-    projections written on top of it reach the scan (PushedFilters/ReadSchema).
+    """Scan one parquet table through :func:`read_parquet`, so filters
+    and projections written on top of it reach the scan
+    (PushedFilters/ReadSchema) and a repeat read runs no footer job.
 
     The events table carries TIMESTAMP(NANOS) which Spark rejects by default;
     the legacy conf reads it as BIGINT nanoseconds (exact — downstream
@@ -44,7 +46,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def one_slice_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -82,62 +84,173 @@ def one_slice_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-# path -> (data-file listing, inferred schema); see read_parquet
-_SCHEMAS: dict[str, tuple[tuple, object]] = {}
-_SCHEMAS_LOCK = threading.Lock()
-
-
-def _data_files(path: str) -> tuple | None:
-    """(relative name, size, mtime_ns) of every file Spark would read
-    under ``path``, sorted; None when ``path`` is not a directory.
-    Entries starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``, an
-    in-flight ``_temporary``) are skipped, as Spark's file index skips
-    them."""
-    if not os.path.isdir(path):
-        return None
+def _stats(paths) -> tuple:
+    """(path, size, mtime_ns) of each path, sorted; a path gone since
+    it was listed (an overwrite, a writer) gets -1 for both."""
     out = []
-    for dp, dirs, fs in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in fs:
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(dp, f)
-            try:
-                st = os.stat(p)
-            except FileNotFoundError:  # removed mid-walk by a writer
-                continue
-            out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    for p in paths:
+        try:
+            st = os.stat(p)
+            out.append((p, st.st_size, st.st_mtime_ns))
+        except OSError:
+            out.append((p, -1, -1))
     return tuple(sorted(out))
 
 
+def _data_files(path: str) -> tuple | None:
+    """:func:`_stats` of every file Spark would read under ``path`` (a
+    file lists itself); None when ``path`` does not exist. Entries
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``, an in-flight
+    ``_temporary``) are skipped, as Spark's file index skips them."""
+    if os.path.isfile(path):
+        return _stats([path])
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for dp, dirs, fs in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [os.path.join(dp, f) for f in fs if not f.startswith(("_", "."))]
+    return _stats(files)
+
+
+def frame_files(df: DataFrame) -> tuple:
+    """:func:`_stats` of the files ``df`` reads: empty for literal rows,
+    an RDD or a checkpoint. ``df.inputFiles()`` is the listing Spark
+    took when the frame was built (no job), so a frame built before an
+    append keeps its pre-append listing. Local/shared FS assumed, as
+    for the index-layout probes: a remote file keeps its URI only."""
+    from urllib.parse import unquote, urlparse
+
+    # df.inputFiles() takes a py4j answer per file, and an answer over
+    # ~8 KB waits on a delayed ACK: 400 files cost ~40 ms either way
+    files = df.sparkSession._jvm.scala.Predef.genericWrapArray(
+        df._jdf.inputFiles()
+    )
+    uris = []
+    for i in range(0, files.length(), 64):
+        uris += files.slice(i, i + 64).mkString("\n").split("\n")
+    return _stats(
+        unquote(u.path) if u.scheme in ("", "file") else u.geturl()
+        for u in map(urlparse, uris)
+    )
+
+
+class _Entry:
+    __slots__ = ("lock", "token", "value")
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()  # held while the value builds
+        self.token: tuple | None = None  # None: empty
+        self.value = None
+
+
+# (applicationId, key) -> _Entry; see memo
+_MEMO: dict[tuple, _Entry] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def _entry(spark: SparkSession, key) -> _Entry:
+    with _MEMO_LOCK:
+        return _MEMO.setdefault(
+            (spark.sparkContext.applicationId, key), _Entry()
+        )
+
+
+def _release(entry: _Entry) -> None:
+    """Empty ``entry``, unpersisting the frame(s) its value holds."""
+    value, entry.token, entry.value = entry.value, None, None
+    for df in value if isinstance(value, tuple) else (value,):
+        if isinstance(df, DataFrame):
+            try:
+                df.unpersist()
+            except Py4JError:  # its session is already gone
+                pass
+
+
+def memo(spark: SparkSession, key, build, files: tuple = (), extra=()):
+    """The session cache: ``build()``'s value for the tuple ``key``,
+    built once per (applicationId, key) and rebuilt when its token
+    changes: ``files`` (the input's listing, :func:`frame_files` or
+    :func:`_data_files`) plus ``extra`` (anything else the value
+    depends on, such as a conf). A rebuild first unpersists the
+    superseded value, so a change to the files is seen at the next
+    call whoever made it; with no files, the key alone identifies the
+    value. Builds are single-flight per key."""
+    token = (files, extra)
+    entry = _entry(spark, key)
+    with entry.lock:
+        if entry.token != token:
+            # release first: Spark's cache matches plans by root path,
+            # not by listing, so a rebuild persisted beside the
+            # superseded frames would serve their data
+            _release(entry)
+            entry.value = build()
+            entry.token = token
+        return entry.value
+
+
+def memo_replace(spark: SparkSession, key, update):
+    """Swap a built entry's value for ``update(value)``, keeping its
+    token, and release the old value (``update`` first materializes
+    what the new value reads of it). KeyError if ``key`` is not built."""
+    entry = _entry(spark, key)
+    with entry.lock:
+        if entry.token is None:
+            raise KeyError(f"nothing memoized under {key!r}")
+        token, new = entry.token, update(entry.value)
+        _release(entry)
+        entry.token, entry.value = token, new
+        return new
+
+
+def forget(path: str | None = None) -> None:
+    """Empty the entries, in every application, built from files under
+    ``path``, or all of them. :func:`read_parquet` calls it when a
+    path's listing changes; ``delete_collection`` calls it to free
+    memory, since a deleted path is never read again."""
+    under = os.path.abspath(path) if path is not None else None
+
+    def goes(e: _Entry) -> bool:
+        files = e.token[0] if e.token else ()
+        return under is None or any(
+            f[0] == under or f[0].startswith(under + os.sep) for f in files
+        )
+
+    with _MEMO_LOCK:
+        victims = [e for e in _MEMO.values() if goes(e)]
+    for e in victims:
+        with e.lock:
+            _release(e)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` for a library-written table, minus
-    the schema-inference job on repeat reads.
-
-    A schema-less parquet read runs a footer-read job (~0.1 s) before
-    any query does. The inferred schema is remembered per directory,
-    keyed on its data-file listing: while the listing is unchanged the
-    table is read with that schema (no job; Spark still lists the files
-    itself, so the frame reads the same files a plain read would), and
-    any change — an append, an overwrite, a compaction — re-infers. A
-    missing path or a directory with no data files goes to the plain
-    read, so its errors (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA) are
-    unchanged.
-
-    Not for external inputs (:func:`load_table`): their inferred types
-    can depend on session confs such as ``nanosAsLong``."""
+    """``spark.read.parquet(path)``, minus the footer-read job (~0.1 s)
+    a schema-less read runs on every call. The inferred schema is
+    memoized per path, keyed on its data-file listing and on
+    ``nanosAsLong`` (it changes what a TIMESTAMP(NANOS) column infers
+    to), so an append, overwrite or compaction re-infers, and first
+    releases every memo entry built from files under the path. Spark
+    still lists the files itself: the frame reads what a plain read
+    would. A missing path or a directory with no data files goes to the
+    plain read, so its errors (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA)
+    are unchanged."""
     key = os.path.abspath(path)
     listing = _data_files(key)
-    if listing:
-        with _SCHEMAS_LOCK:
-            hit = _SCHEMAS.get(key)
-        if hit is not None and hit[0] == listing:
-            return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    if listing:
-        with _SCHEMAS_LOCK:
-            _SCHEMAS[key] = (listing, df.schema)
-    return df
+    if not listing:
+        return spark.read.parquet(path)
+    seen = _entry(spark, ("schema", key)).token
+    if seen is not None and seen[0] != listing:
+        # Spark's cache matches file scans by root path, not by listing:
+        # a plan equal to one persisted from the old files would be
+        # served their data, so release them all before anything rebuilds
+        forget(key)
+
+    def infer():
+        return spark.read.parquet(path).schema
+
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    schema = memo(spark, ("schema", key), infer, listing, nanos)
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_meta_row(path: str) -> dict | None:
