@@ -143,3 +143,24 @@ def test_never_graded_queries_are_in_window():
     assert not missing, (
         f"never-driver-graded queries outside the upcoming window: {missing}"
     )
+
+
+def test_grade_order_rejects_bad_rotation_lists(monkeypatch):
+    # a typo in a hand-edited rotation list must not silently drop a
+    # row from (or double-count it in) the window
+    import pytest
+
+    from vectorsearch_applications_spark import queries as q
+
+    registered = list(q.get_queries())
+    first = registered[0]
+    bad = [
+        ([*q._GRADE_FIRST, "no_such_query"], q._GRADE_LAST, "no_such_query"),
+        ([*q._GRADE_FIRST, first], q._GRADE_LAST, first),
+        (q._GRADE_FIRST, [*q._GRADE_LAST, first], first),
+    ]
+    for grade_first, grade_last, offender in bad:
+        monkeypatch.setattr(q, "_GRADE_FIRST", grade_first)
+        monkeypatch.setattr(q, "_GRADE_LAST", grade_last)
+        with pytest.raises(ValueError, match=offender):
+            q.get_queries()
