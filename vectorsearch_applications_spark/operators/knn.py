@@ -5,7 +5,11 @@ returns ``distance`` = 1 − cosine). Exact brute-force kNN is the semantic
 definition here (the oracle); the ANN path (IVF buckets, operators/ann.py)
 is an opt-in physical strategy that must agree with this on recall checks.
 
-Two physical strategies, identical results:
+Two physical strategies that return the same ids in the same order. Their
+distances can differ in the last ulp (up to 2.2e-16 measured): the numpy
+float64 matmul sums a dot product in a different order than the SQL
+fold. ``tests/test_operators.py:test_knn_partial_equals_crossjoin``
+therefore compares ids only.
 
 - ``knn_search`` (default, the scale path): broadcast the query matrix,
   compute per-partition partial top-k with one numpy (float64) matmul per

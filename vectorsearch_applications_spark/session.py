@@ -37,6 +37,29 @@ def get_spark(
     CPUs default to the process's CPU affinity and driver memory to half
     of physical RAM (at most 24g); ``SPARK_GRAFT_CPUS`` and
     ``SPARK_DRIVER_MEMORY`` override them.
+
+    Two codegen confs make a warm pass compile nothing:
+
+    - ``spark.sql.codegen.cache.maxEntries`` = 1000. Spark's cache of
+      compiled classes is a 100-entry LRU, and one warm ``batch_eval``
+      pass uses more than 100 classes, so a cyclic reuse pattern evicted
+      every class before its next use: each warm pass recompiled 125-138
+      classes and each interactive H K H V R A pattern 157-180 (about
+      7.6 ms each, competing with tasks for the cores). With both confs
+      the third and later warm passes, and every interactive pattern
+      after the first, compile 0. Both workloads together, set-up
+      included, used 249 distinct classes in one JVM (4-core host), so
+      1000 leaves about 4x headroom.
+    - ``spark.sql.codegen.useIdInClassName`` = false. Whole-stage
+      classes no longer embed the per-plan stage id in their name, so
+      identical code from different plans or stage positions shares one
+      cached class.
+
+    ``maxEntries`` is a static conf: it only takes effect when the JVM's
+    first session is built. A caller who brings their own session must
+    set it on that session's builder. The parity gates (``preflight.py``
+    and the driver contract) run on a vanilla session, so neither conf
+    affects them.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
@@ -57,6 +80,8 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
