@@ -43,13 +43,12 @@ def get_spark(
     - ``spark.sql.codegen.cache.maxEntries`` = 1000. Spark's cache of
       compiled classes is a 100-entry LRU, and one warm ``batch_eval``
       pass uses more than 100 classes, so a cyclic reuse pattern evicted
-      every class before its next use: each warm pass recompiled 125-138
-      classes and each interactive H K H V R A pattern 157-180 (about
-      7.6 ms each, competing with tasks for the cores). With both confs
-      the third and later warm passes, and every interactive pattern
-      after the first, compile 0. Both workloads together, set-up
-      included, used 249 distinct classes in one JVM (4-core host), so
-      1000 leaves about 4x headroom.
+      every class before its next use: each warm pass recompiled 132-141
+      classes and each interactive H K H V R A pattern 139-163, on the
+      cores the tasks use. With both confs the second and later warm
+      passes, and every interactive pattern after the first, compile 0.
+      Both perfbench workloads together, set-up included, compile 249
+      distinct classes in one JVM, so 1000 leaves about 4x headroom.
     - ``spark.sql.codegen.useIdInClassName`` = false. Whole-stage
       classes no longer embed the per-plan stage id in their name, so
       identical code from different plans or stage positions shares one
