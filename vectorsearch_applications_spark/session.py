@@ -57,7 +57,7 @@ def get_spark(
     ``maxEntries`` is a static conf: it only takes effect when the JVM's
     first session is built. A caller who brings their own session must
     set it on that session's builder. The parity gates (``preflight.py``
-    and the driver contract) run on a vanilla session, so neither conf
+    and ``__spark_entry__.py``) run on a vanilla session, so neither conf
     affects them.
     """
     if cpus is None:
