@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vectorsearch_applications_spark.client import SparkSearchClient
+from vectorsearch_applications_spark.sources.index_catalog import stale_meta
 from vectorsearch_applications_spark.sources.io import (
     frame_files,
     load_table,
@@ -1135,7 +1136,7 @@ def test_merge_stale_flag_not_downgraded_by_batch_index(spark, tmp_path):
         .withColumn("seq", F.lit(1).cast("long")),
     )
     c.batch_index_data("docs", docs, not_null_cols=["doc_id", "text"])
-    assert c._stale_meta("docs", "bm25")["verb"] == "merge"
+    assert stale_meta(c.root, "docs", "bm25")["verb"] == "merge"
     with pytest.raises(ValueError, match="stale after merge"):
         c.append_to_text_index("docs", docs.limit(1))
 

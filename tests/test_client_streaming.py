@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vectorsearch_applications_spark.client import SparkSearchClient
+from vectorsearch_applications_spark.sources.index_catalog import stale_meta
 from vectorsearch_applications_spark.sources.io import load_table
 from vectorsearch_applications_spark.streaming.rag import rag_answer_batch
 
@@ -147,7 +148,7 @@ def test_client_stream_ingest_effectively_once_and_keeps_index_fresh(
 
     # the keep-fresh append repaired the stale flag: the persisted index
     # serves searches (builder poisoned) and covers the streamed docs
-    assert c._stale_meta("docs", "bm25") is None
+    assert stale_meta(c.root, "docs", "bm25") is None
     monkey = pytest.MonkeyPatch()
     try:
         monkey.setattr(
@@ -168,3 +169,62 @@ def test_client_stream_ingest_effectively_once_and_keeps_index_fresh(
         .collect()
     }
     assert hit_ids & streamed_only, "streamed docs never became searchable"
+
+
+def test_client_stream_ingest_crash_replay_keeps_index_honest(spark, tmp_path):
+    """A crash between the collection append and the text-index repair:
+    the replayed batch screens out as redelivered, so its docs never
+    reach the index. A later batch must not clear the flag by repairing
+    only its own docs — keyword search has to keep returning the
+    in-plan BM25 truth, which includes the crashed batch's docs."""
+    import vectorsearch_applications_spark.operators.bm25 as bm25_mod
+
+    c = SparkSearchClient(spark, str(tmp_path))
+    docs = load_table(spark, SF_SMOKE, "documents")
+    c.create_collection("docs", docs.filter(F.col("doc_id") < 300))
+    c.build_text_index("docs")
+
+    def new_docs(first_id: int, marker: str):
+        return docs.filter(F.col("doc_id") < 5).select(
+            (F.col("doc_id") + first_id).alias("doc_id"),
+            F.concat(F.lit(marker + " "), "text").alias("text"),
+            "lang",
+            "source",
+            "n_chars",
+        )
+
+    src = str(tmp_path / "docs_in")
+    ckpt = str(tmp_path / "ingest_ckpt")
+    new_docs(500_000, "alphamarker").write.mode("append").parquet(src)
+
+    def ingest():
+        return c.stream_ingest("docs", src, ckpt, not_null_cols=["doc_id", "text"])
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the text-index repair")
+
+    c.append_to_text_index = crash
+    with pytest.raises(Exception):
+        ingest().awaitTermination(300)
+    del c.append_to_text_index
+    assert c.get_doc_count("docs") == 305  # appended before the crash
+
+    # the restart replays batch 0 (screened out) and runs batch 1
+    new_docs(600_000, "betamarker").write.mode("append").parquet(src)
+    assert ingest().awaitTermination(300)
+    assert c.get_doc_count("docs") == 310
+    for query in ("alphamarker", "betamarker"):
+        got = sorted(
+            (r["doc_id"], r["rank"])
+            for r in c.keyword_search("docs", query, limit=20).collect()
+        )
+        truth = sorted(
+            (r["doc_id"], r["rank"])
+            for r in bm25_mod.bm25_search(
+                c._load("docs"),
+                spark.createDataFrame([(0, query)], SCHEMA),
+                limit=20,
+            ).collect()
+        )
+        assert len(truth) == 5 and got == truth, query
+    assert stale_meta(c.root, "docs", "bm25") == {"verb": "batch_index_data"}

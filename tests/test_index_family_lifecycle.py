@@ -16,6 +16,7 @@ from vectorsearch_applications_spark.client import SparkSearchClient
 from vectorsearch_applications_spark.sources.index_catalog import (
     FAMILIES,
     index_dir,
+    stale_meta,
 )
 from vectorsearch_applications_spark.sources.io import load_table
 
@@ -96,10 +97,10 @@ def test_build_append_delete_compact(spark, tmp_path, suffix):
         "doc_id", "text", F.lit("delete").alias("op"), F.lit(1).alias("seq")
     )
     c.merge("docs", change)
-    assert c._stale_meta("docs", suffix) == {"verb": "merge"}
+    assert stale_meta(c.root, "docs", suffix) == {"verb": "merge"}
     with pytest.raises(ValueError, match="an append cannot repair it"):
         _verb(c, fam, "append", "docs", probe)
     _verb(c, fam, "compact", "docs")
-    assert c._stale_meta("docs", suffix) is not None
+    assert stale_meta(c.root, "docs", suffix) is not None
     _verb(c, fam, "build", "docs")
-    assert c._stale_meta("docs", suffix) is None
+    assert stale_meta(c.root, "docs", suffix) is None

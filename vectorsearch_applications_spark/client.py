@@ -36,7 +36,7 @@ from .operators.hybrid import hybrid_search as _fuse
 from .operators.knn import knn_search
 from .sources import collections as _coll
 from .sources import index_catalog as _idx
-from .sources.io import forget, frame_files, memo, one_slice_df, read_parquet
+from .sources.io import _data_files, frame_files, memo, one_slice_df, read_parquet
 
 _EMBED_DIM = 16
 
@@ -91,54 +91,17 @@ class SparkSearchClient:
             return self._embed_query_fn(F.col(col_name))
         return hash_embed_col(col_name, self._embed_dim)
 
-    # -- persisted-index staleness protocol ---------------------------------
+    # -- persisted-index staleness ----------------------------------------
     #
     # Session caches follow the collection's files; the ON-DISK indexes
-    # it leaves behind do not, and implicit reuse (the _fresh_index
-    # probes) would return pre-mutation postings after a MERGE, deleted
-    # docs included (r10 advice, medium). Every mutating verb therefore
-    # flags every family's index directory (index_catalog.FAMILIES) with
-    # a ``_stale.json`` marker; implicit reuse skips flagged indexes
-    # (in-plan scoring is always correct), and the marker clears only
-    # when the index is repaired (batch_index_data → append_to_*_index)
-    # or rebuilt (build_*_index).
+    # do not. Every collection write flags them (sources/collections.py
+    # commits, sources/index_catalog.py keeps the marker); the facade
+    # only reads the flag: implicit reuse skips a flagged index, the
+    # append verbs repair a batch_index_data flag, and the build verbs
+    # start from a clean slate.
 
     def _index_dir(self, name: str, suffix: str) -> str:
         return _idx.index_dir(self.root, name, suffix)
-
-    def _stale_path(self, name: str, suffix: str) -> str:
-        return os.path.join(self._index_dir(name, suffix), "_stale.json")
-
-    def _mark_indexes_stale(self, name: str, verb: str) -> None:
-        import json
-
-        for fam in _idx.FAMILIES:
-            if os.path.isdir(self._index_dir(name, fam)):
-                p = self._stale_path(name, fam)
-                # never DOWNGRADE an existing flag: if a merge/rollback/
-                # recreate already flagged this index (append cannot
-                # repair those), a later batch_index_data must not
-                # rewrite the marker to its repairable verb — the next
-                # append would then falsely "repair" an index whose
-                # standing rows changed underneath it (r11 review)
-                if verb == "batch_index_data" and os.path.isfile(p):
-                    continue
-                with open(p, "w") as f:
-                    json.dump({"verb": verb}, f)
-
-    def _stale_meta(self, name: str, suffix: str) -> dict | None:
-        import json
-
-        p = self._stale_path(name, suffix)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _clear_stale(self, name: str, suffix: str) -> None:
-        p = self._stale_path(name, suffix)
-        if os.path.isfile(p):
-            os.remove(p)
 
     def _fresh_index(self, name: str, kind: str) -> bool:
         """The one "fresh persisted index exists" rule every implicit
@@ -152,27 +115,24 @@ class SparkSearchClient:
                     self._index_dir(name, suffix), _PROBE_ENTRY.get(kind, "")
                 )
             )
-            and self._stale_meta(name, suffix) is None
+            and _idx.stale_meta(self.root, name, suffix) is None
         )
 
     def _check_append_repairs_stale(self, name: str, family: str) -> None:
         """Gate for the append verbs: an append REPAIRS an index flagged
         by batch_index_data (the documented keep-it-fresh flow — the
-        caller hands the same batch to both verbs), but cannot repair a
-        MERGE/rollback/recover/recreate, where standing rows changed or
-        vanished underneath the index. Raising beats silently appending
+        caller hands the same batch to both verbs), but cannot repair
+        any other verb's flag (merge, update, rollback, recover,
+        recreate, fold), where standing rows changed or vanished
+        underneath the index. Raising beats silently appending
         onto an index that will keep serving pre-mutation rows."""
-        meta = self._stale_meta(name, family)
+        meta = _idx.stale_meta(self.root, name, family)
         if meta is not None and meta.get("verb") != "batch_index_data":
             raise ValueError(
                 f"the persisted {family} index for {name!r} is stale "
                 f"after {meta.get('verb')} — an append cannot repair it; "
                 f"rebuild the index first"
             )
-
-    def _drop_index_dirs(self, name: str) -> None:
-        for fam in _idx.FAMILIES:
-            _idx.index_reset(self.root, name, fam)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -182,26 +142,12 @@ class SparkSearchClient:
         df: DataFrame,
         partition_by: list[str] | None = None,
     ) -> str:
-        # recreate case: indexes of a previous same-name collection are
-        # orphans describing the old corpus — only a rebuild repairs
-        # them. Flag BEFORE the mutation commits: a crash in between
-        # leaves a conservative flag (searches fall back in-plan,
-        # always correct), never an unflagged stale index (r11 review —
-        # the same ordering rule applies to every mutating verb below)
-        self._mark_indexes_stale(name, "create_collection")
         return _coll.create_collection(
             self.spark, self.root, name, df, partition_by
         )
 
     def delete_collection(self, name: str) -> None:
         _coll.drop_collection(self.root, name)
-        # a deleted path is never read again, so only this frees its
-        # session-cache entries
-        forget(os.path.join(self.root, name))
-        # the collection's index directories are orphans now — removing
-        # them stops a future same-name collection from inheriting them
-        # (drop_collection itself only removes <root>/<name>; r10 advice)
-        self._drop_index_dirs(name)
 
     def show_all_collections(self) -> list[str]:
         return _coll.list_collections(self.root)
@@ -213,12 +159,10 @@ class SparkSearchClient:
         not_null_cols: list[str],
         error_threshold: float = 0.01,
     ) -> dict[str, int]:
-        # persisted indexes will lag the new generation; searches fall
-        # back to in-plan scoring until append_to_*_index with the new
-        # batch (which clears this flag) or a full rebuild. Flagged
-        # BEFORE the write commits (crash-window rule, see
-        # create_collection).
-        self._mark_indexes_stale(name, "batch_index_data")
+        """Replace the collection with the validated rows of ``df``
+        (sources/collections.py batch_index). Its persisted indexes are
+        flagged ``batch_index_data``: searches score in-plan until
+        ``append_to_*_index`` with the same batch or a rebuild."""
         return _coll.batch_index(
             self.spark, self.root, name, df, not_null_cols, error_threshold
         )
@@ -237,26 +181,19 @@ class SparkSearchClient:
         weaviate_interface_v4.py:131): schema plus the physical facts a
         plain-parquet collection has instead of index config — row count,
         file count, bytes, and snapshot tags."""
-        path = os.path.join(self.root, name)
-        files = [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
+        files = _data_files(os.path.join(self.root, name)) or ()
         return {
             "name": name,
             "properties": self.show_collection_properties(name),
             "n_rows": self.get_doc_count(name),
             "n_files": len(files),
-            "n_bytes": sum(os.path.getsize(f) for f in files),
+            "n_bytes": sum(size for _, size, _ in files),
             "snapshots": self.snapshots(name),
         }
 
     def merge(self, name: str, changes: DataFrame, **kw) -> dict[str, int]:
         """CDC MERGE (upsert+delete change set, last-writer-wins) — see
         sources/collections.py merge_collection."""
-        self._mark_indexes_stale(name, "merge")  # crash-window rule
         return _coll.merge_collection(self.spark, self.root, name, changes, **kw)
 
     def snapshot(self, name: str, tag: str) -> str:
@@ -264,7 +201,6 @@ class SparkSearchClient:
         return _coll.snapshot_collection(self.root, name, tag)
 
     def rollback(self, name: str, tag: str) -> None:
-        self._mark_indexes_stale(name, "rollback")  # crash-window rule
         _coll.rollback_collection(self.root, name, tag)
 
     def snapshots(self, name: str) -> list[str]:
@@ -278,29 +214,7 @@ class SparkSearchClient:
 
     def recover(self, name: str) -> str:
         """Resolve staged-swap crash leftovers; returns the action taken."""
-        # crash-window rule, with a twist: whether this recovery changes
-        # the live generation is only known AFTER it runs, so flag
-        # conservatively first and withdraw OUR flag (never a
-        # pre-existing one) if the action turned out not to touch the
-        # live data
-        import json
-
-        pre = {fam: self._stale_meta(name, fam) for fam in _idx.FAMILIES}
-        self._mark_indexes_stale(name, "recover")
-        action = _coll.recover_collection(self.root, name)
-        if action not in ("promoted_staging", "restored_old"):
-            for fam, meta in pre.items():
-                if meta is None:
-                    self._clear_stale(name, fam)
-                elif meta.get("verb") != "recover":
-                    # put back the pre-existing marker verbatim — a
-                    # repairable batch_index_data flag must not be
-                    # upgraded by a recovery that touched nothing
-                    p = self._stale_path(name, fam)
-                    if os.path.isdir(os.path.dirname(p)):
-                        with open(p, "w") as f:
-                            json.dump(meta, f)
-        return action
+        return _coll.recover_collection(self.root, name)
 
     def diff(self, name: str, tag: str, key_col: str) -> DataFrame:
         """What changed between tag and the live generation, per key."""
@@ -430,7 +344,6 @@ class SparkSearchClient:
         )
         with open(os.path.join(path, _TEXT_META), "w") as f:
             json.dump({"id_col": id_col, "text_col": text_col}, f)
-        self._clear_stale(collection, "bm25")  # a rebuild is the repair
         return path
 
     def append_to_text_index(
@@ -455,7 +368,7 @@ class SparkSearchClient:
             self.spark, self.root, collection, new_rows,
             id_col=meta["id_col"], text_col=meta["text_col"],
         )
-        self._clear_stale(collection, "bm25")
+        _idx.clear_stale(self.root, collection, "bm25")
         return n
 
     def delete_from_text_index(
@@ -616,9 +529,7 @@ class SparkSearchClient:
                 corpus, self.root, collection, dim=dim
             ),
         }
-        path = save[fam.kind]()
-        self._clear_stale(collection, fam.suffix)
-        return path
+        return save[fam.kind]()
 
     def append_to_ann_index(
         self,
@@ -653,7 +564,7 @@ class SparkSearchClient:
             "lsh": lsh.lsh_index_append,
         }[fam.kind]
         n = append(self.spark, self.root, collection, corpus)
-        self._clear_stale(collection, fam.suffix)
+        _idx.clear_stale(self.root, collection, fam.suffix)
         return n
 
     def delete_from_ann_index(
@@ -699,14 +610,7 @@ class SparkSearchClient:
             return rows.select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
             )
-        if vector_col in rows.columns:
-            return rows.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vector_col).alias("embedding"),
-            )
-        return hash_embed_ids(
-            rows.select(id_col, text_col), id_col, text_col, self._embed_dim
-        ).select(F.col(id_col).alias("vec_id"), "embedding")
+        return self._vector_view(rows, id_col, vector_col, text_col)
 
     def build_dedup_index(
         self,
@@ -764,9 +668,7 @@ class SparkSearchClient:
                 collection,
             ),
         }
-        path = save[fam.kind]()
-        self._clear_stale(collection, fam.suffix)
-        return path
+        return save[fam.kind]()
 
     def append_to_dedup_index(
         self,
@@ -834,7 +736,7 @@ class SparkSearchClient:
             ),
         }
         out = append[fam.kind]()
-        self._clear_stale(collection, fam.suffix)
+        _idx.clear_stale(self.root, collection, fam.suffix)
         return out
 
     def delete_from_dedup_index(
@@ -869,43 +771,49 @@ class SparkSearchClient:
         text_col: str,
         filtered: bool,
     ) -> tuple[DataFrame, int]:
-        """(vec_id, embedding) view of collection rows and its dimension:
-        the stored ``vector_col`` when present, else the client's hash
-        embedding of ``text_col`` (session-cached unless ``filtered``)."""
+        """:meth:`_vector_view` of collection rows (session-cached
+        unless ``filtered``) and its dimension, probed only for a stored
+        ``vector_col``."""
+        corpus = self._vector_view(
+            rows, id_col, vector_col, text_col,
+            None if filtered else collection,
+        )
         if vector_col in rows.columns:
-            corpus = rows.select(
+            return corpus, self._dim(collection, vector_col, corpus)
+        return corpus, self._embed_dim
+
+    def _vector_view(
+        self,
+        rows: DataFrame,
+        id_col: str,
+        vector_col: str,
+        text_col: str,
+        collection: str | None = None,
+    ) -> DataFrame:
+        """(vec_id, embedding) view of ``rows``: the stored ``vector_col``
+        when present, else the client's hash embedding of ``text_col``.
+        The hash embedding is the dense arm's whole cost (r10 verdict,
+        What's wrong #2), so when ``rows`` is a whole ``collection`` it
+        is memoized, persisted, per (collection, id_col, text_col, dim)
+        and its files; otherwise it is embedded in-plan."""
+        if vector_col in rows.columns:
+            return rows.select(
                 F.col(id_col).alias("vec_id"),
                 F.col(vector_col).alias("embedding"),
             )
-            return corpus, self._dim(collection, vector_col, corpus)
-        corpus = self._hash_corpus(collection, rows, id_col, text_col, filtered)
-        return corpus, self._embed_dim
 
-    def _hash_corpus(
-        self,
-        collection: str,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        filtered: bool,
-    ) -> DataFrame:
-        """Hash-embedded (vec_id, embedding) view of a collection with no
-        vector column, the dense arm's whole cost (r10 verdict, What's
-        wrong #2): unfiltered searches share one memoized, persisted
-        embedding per (collection, id_col, text_col, dim) and its files;
-        filtered ones embed the filtered frame in-plan."""
-
-        def emb(d: DataFrame) -> DataFrame:
+        def emb() -> DataFrame:
             return hash_embed_ids(
-                d.select(id_col, text_col), id_col, text_col, self._embed_dim
+                rows.select(id_col, text_col), id_col, text_col,
+                self._embed_dim,
             ).select(F.col(id_col).alias("vec_id"), "embedding")
 
-        if filtered:
-            return emb(docs)
+        if collection is None:
+            return emb()
         path = os.path.join(self.root, collection)
         key = ("hash_corpus", path, id_col, text_col, self._embed_dim)
         return memo(
-            self.spark, key, lambda: emb(docs).persist(), frame_files(docs)
+            self.spark, key, lambda: emb().persist(), frame_files(rows)
         )
 
     def _dim(self, collection: str, vector_col: str, corpus: DataFrame) -> int:
@@ -1217,19 +1125,9 @@ class SparkSearchClient:
                 "vec_id", "embedding"
             )
         else:
-            rows = self._load(collection)
-            if vector_col in rows.columns:
-                emb = rows.select(
-                    F.col(id_col).alias("vec_id"),
-                    F.col(vector_col).alias("embedding"),
-                )
-            else:
-                emb = hash_embed_ids(
-                    rows.select(id_col, text_col),
-                    id_col,
-                    text_col,
-                    self._embed_dim,
-                ).select(F.col(id_col).alias("vec_id"), "embedding")
+            emb = self._vector_view(
+                self._load(collection), id_col, vector_col, text_col
+            )
         if query_vectors == "hash":
             # query vectors from the client's embedder — they must live
             # in the CORPUS vector space, so this mode pairs with a
@@ -1480,13 +1378,14 @@ class SparkSearchClient:
         review). Re-delivered ids screen against the collection AND the
         quarantine, so a checkpoint-loss replay of a batch with rejects
         is a no-op instead of a re-validation that trips the error
-        budget. Other index families follow the staleness protocol:
-        flagged BEFORE the append (crash-window rule), searches fall
-        back in-plan until their own append/rebuild; a crash between
-        the collection append and the index repair leaves the
-        conservative flag standing — correct-but-slower until the next
-        batch or a rebuild, never wrong. Returns the started
-        StreamingQuery."""
+        budget. ``batch_append`` flags every persisted index before it
+        appends; other families fall back in-plan until their own
+        append/rebuild. A micro-batch repairs the text index only if it
+        was fresh before that batch's append: after a crash between
+        the append and the repair, the replayed batch screens out as
+        redelivered and its docs never reach the index, so the flag
+        stands — correct-but-slower until a rebuild, never wrong.
+        Returns the started StreamingQuery."""
         schema = self._load(collection).schema
         qpath = os.path.join(self.root, f"{collection}__quarantine")
 
@@ -1518,12 +1417,15 @@ class SparkSearchClient:
             ).localCheckpoint(eager=True)
             if fresh.isEmpty():
                 return
-            self._mark_indexes_stale(collection, "batch_index_data")
+            repair = (
+                self._text_index_meta(collection) is not None
+                and _idx.stale_meta(self.root, collection, "bm25") is None
+            )
             _coll.batch_append(
                 self.spark, self.root, collection, fresh, not_null_cols,
                 error_threshold,
             )
-            if self._text_index_meta(collection) is not None:
+            if repair:
                 ok = F.lit(True)
                 for c in not_null_cols:
                     ok = ok & F.col(c).isNotNull()

@@ -8,20 +8,88 @@ is a validated write with a quarantine table instead of a driver-side error
 list; "point update" (the reference's per-uuid property backfill,
 ``notebooks/7-…ipynb`` cell 22) is a declarative column recompute +
 overwrite — no row-wise RPCs.
+
+Every writer that replaces a generation commits it the same way,
+through :func:`_commit_generation`: clear any leftover
+``<name>__staging``, write the new generation there, flag the
+collection's persisted indexes, move the live directory aside to
+``<name>__old``, promote the staging directory, delete the old one. A
+crash at any step leaves the old or the new generation readable, and
+:func:`recover_collection` finishes or undoes the swap. Indexes are
+flagged (sources/index_catalog.py ``mark_indexes_stale``) before the
+swap, so a crash can leave a conservative flag but never an unflagged
+stale index. The flag's verb is the writer's: ``create_collection``,
+``batch_index_data`` (``batch_index``, and ``batch_append``, which
+appends instead of swapping), ``update``, ``merge``, ``rollback``,
+``recover`` (only when recovery changes the live generation) and
+``fold`` (streaming/fenced.py). Rewrites that keep every row
+(``compact_collection``, ``cluster_collection``, ``zorder_collection``)
+flag nothing.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .io import read_parquet
+from .index_catalog import FAMILIES, index_reset, mark_indexes_stale
+from .io import _data_files, forget, read_parquet
 
 
 class IndexingError(RuntimeError):
     pass
+
+
+def _commit_generation(root: str, name: str, write, verb: str | None) -> str:
+    """Replace ``<root>/<name>`` with the generation ``write(tmp)``
+    writes to a staging directory; returns the collection path. ``verb``
+    names the write in the stale markers of the collection's indexes;
+    None for a rewrite that keeps every row."""
+    path = os.path.join(root, name)
+    tmp, old = path + "__staging", path + "__old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    if verb:
+        mark_indexes_stale(root, name, verb)
+    if os.path.isdir(path):
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Hard-link copy of the directory tree ``src`` to ``dst``."""
+    os.makedirs(dst)
+    for dirpath, dirs, files in os.walk(src):
+        rel = os.path.relpath(dirpath, src)
+        for d in dirs:
+            os.makedirs(os.path.join(dst, rel, d), exist_ok=True)
+        for f in files:
+            os.link(os.path.join(dirpath, f), os.path.join(dst, rel, f))
+
+
+def _check_name(name: str) -> None:
+    """Hyphens are rejected like the reference's name check
+    (``weaviate_interface_v4.py:392-393``). 'x@y' is the on-disk form of
+    snapshot y of collection x, and '__staging'/'__old' are the commit's
+    scratch generations: a collection literally named like any of them
+    would be indistinguishable from (and could be rmtree'd as) another
+    collection's artifact."""
+    if "-" in name:
+        raise ValueError("collection names may not contain hyphens")
+    if "@" in name:
+        raise ValueError(
+            "collection names may not contain '@' (snapshot-tag separator)"
+        )
+    if name.endswith("__staging") or name.endswith("__old"):
+        raise ValueError(
+            "collection names may not end with '__staging' or '__old'"
+        )
 
 
 def create_collection(
@@ -33,8 +101,8 @@ def create_collection(
     bloom_cols: list[str] | None = None,
     bloom_ndv: int = 1_000_000,
 ) -> str:
-    """Create (overwrite) a collection table. Hyphens rejected like the
-    reference's name check (``weaviate_interface_v4.py:392-393``).
+    """Create (or replace) a collection table; names are checked by
+    :func:`_check_name`.
 
     ``bloom_cols`` writes parquet bloom filters for the given columns —
     the point-lookup complement to min/max stats: footer ranges prune
@@ -43,23 +111,8 @@ def create_collection(
     checked per row group before any page is read). Size ``bloom_ndv``
     to the expected distinct count per row group.
     """
-    if "-" in name:
-        raise ValueError("collection names may not contain hyphens")
-    # keep the snapshot/staging namespaces collision-free: 'x@y' is the
-    # on-disk form of snapshot y of collection x, and '__staging'/'__old'
-    # are the atomic-swap scratch generations — a collection literally
-    # named like any of them would be indistinguishable from (and could
-    # be rmtree'd as) another collection's artifact.
-    if "@" in name:
-        raise ValueError(
-            "collection names may not contain '@' (snapshot-tag separator)"
-        )
-    if name.endswith("__staging") or name.endswith("__old"):
-        raise ValueError(
-            "collection names may not end with '__staging' or '__old'"
-        )
-    path = os.path.join(root, name)
-    writer = df.write.mode("overwrite")
+    _check_name(name)
+    writer = df.write
     for c in bloom_cols or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer = writer.option(
@@ -67,8 +120,7 @@ def create_collection(
         )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return path
+    return _commit_generation(root, name, writer.parquet, "create_collection")
 
 
 def list_collections(root: str) -> list[str]:
@@ -85,9 +137,14 @@ def describe_collection(spark: SparkSession, root: str, name: str) -> list[tuple
 
 
 def drop_collection(root: str, name: str) -> None:
-    import shutil
-
-    shutil.rmtree(os.path.join(root, name))
+    """Delete the collection, free its session-cache entries (a deleted
+    path is never read again) and remove its index directories, so a
+    future same-name collection cannot inherit them."""
+    path = os.path.join(root, name)
+    shutil.rmtree(path)
+    forget(path)
+    for suffix in FAMILIES:
+        index_reset(root, name, suffix)
 
 
 def batch_index(
@@ -105,6 +162,7 @@ def batch_index(
     reference aborts above 1% — ``weaviate_interface_v4.py:459,469-472``).
     Returns {"indexed": n_good, "quarantined": n_bad}.
     """
+    _check_name(name)
     ok = F.lit(True)
     for c in not_null_cols:
         ok = ok & F.col(c).isNotNull()
@@ -121,16 +179,14 @@ def batch_index(
             )
         good = flagged.filter(F.col("_ok")).drop("_ok")
         bad = flagged.filter(~F.col("_ok")).drop("_ok")
-        create_collection(spark, root, name, good)
-        qpath = os.path.join(root, f"{name}__quarantine")
+        _commit_generation(root, name, good.write.parquet, "batch_index_data")
+        qname = f"{name}__quarantine"
         if n_bad:
-            create_collection(spark, root, f"{name}__quarantine", bad)
-        elif os.path.isdir(qpath):
+            _commit_generation(root, qname, bad.write.parquet, None)
+        else:
             # a clean re-index must not leave a previous generation's
             # failures lying around
-            import shutil
-
-            shutil.rmtree(qpath)
+            shutil.rmtree(os.path.join(root, qname), ignore_errors=True)
         return {"indexed": n_total - n_bad, "quarantined": n_bad}
     finally:
         flagged.unpersist()
@@ -167,6 +223,7 @@ def batch_append(
             )
         good = flagged.filter(F.col("_ok")).drop("_ok")
         if n_total - n_bad:
+            mark_indexes_stale(root, name, "batch_index_data")
             good.write.mode("append").parquet(os.path.join(root, name))
         if n_bad:
             flagged.filter(~F.col("_ok")).drop("_ok").write.mode(
@@ -187,22 +244,8 @@ def update_collection(
     overwrite the collection (S8). ``transform(df) -> DataFrame`` — a
     window-derived column (like the expanded_content backfill) needs the
     whole frame, not just an expression."""
-    path = os.path.join(root, name)
-    df = spark.read.parquet(path)
-    updated = transform(df)
-    # parquet cannot overwrite in place while reading; stage, move the old
-    # generation aside, promote, then delete — a crash mid-swap leaves
-    # either the old or the new generation recoverable, never neither
-    tmp = path + "__staging"
-    old = path + "__old"
-    updated.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    updated = transform(spark.read.parquet(os.path.join(root, name)))
+    _commit_generation(root, name, updated.write.parquet, "update")
 
 
 def compact_collection(
@@ -222,42 +265,22 @@ def compact_collection(
     min/max skipping. Compaction restores scan efficiency without
     changing a single row.
 
-    Uses the same stage → swap promotion as update_collection, so a crash
-    mid-compaction leaves either the old or the new generation readable.
+    Commits like every other writer (:func:`_commit_generation`) and
+    flags no index: every row is kept.
     Returns {"files_before": ..., "files_after": ..., "rows": ...}.
     """
     path = os.path.join(root, name)
-
-    def _parquet_files(p: str) -> list[str]:
-        out = []
-        for dirpath, _dirs, files in os.walk(p):
-            out += [
-                os.path.join(dirpath, f)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-        return out
-
-    before = _parquet_files(path)
-    total_bytes = sum(os.path.getsize(f) for f in before)
+    before = _data_files(path) or ()
+    total_bytes = sum(size for _, size, _ in before)
     n_files = max(1, -(-total_bytes // target_bytes_per_file))
     df = spark.read.parquet(path)
     rows = df.count()
-
-    tmp, old = path + "__staging", path + "__old"
     # coalesce, not repartition: narrowing the file count must not buy a
     # full shuffle of the collection
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _commit_generation(root, name, df.coalesce(n_files).write.parquet, None)
     return {
         "files_before": len(before),
-        "files_after": len(_parquet_files(path)),
+        "files_after": len(_data_files(path)),
         "rows": rows,
     }
 
@@ -283,25 +306,15 @@ def cluster_collection(
     skip, clustering makes skipping POSSIBLE.
 
     One range shuffle, then a partition-local sort — the minimum work
-    that buys the layout. Stage-and-swap like update/compact.
+    that buys the layout. Committed like every writer; flags no index.
     """
-    path = os.path.join(root, name)
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(os.path.join(root, name))
     if n_files:
         clustered = df.repartitionByRange(n_files, *cluster_cols)
     else:
         clustered = df.repartitionByRange(*cluster_cols)
     clustered = clustered.sortWithinPartitions(*cluster_cols)
-
-    tmp, old = path + "__staging", path + "__old"
-    clustered.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _commit_generation(root, name, clustered.write.parquet, None)
 
 
 def zorder_value(x: str, y: str, bits: int = 16) -> Column:
@@ -345,12 +358,11 @@ def zorder_collection(
     percent_rank window would single-partition the whole collection —
     exactly the plan this module exists to avoid), and bucket assignment
     is a fold over the boundary literals in codegen. Then one range
-    shuffle on the z-value + partition-local sort, same stage-and-swap
-    promotion as cluster_collection. Default 8 bits/dim = 65k z-cells —
+    shuffle on the z-value + partition-local sort, committed like
+    cluster_collection. Default 8 bits/dim = 65k z-cells —
     file-granularity skipping needs no more.
     """
-    path = os.path.join(root, name)
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(os.path.join(root, name))
 
     def bucketize(col: str, alias: str):
         n_b = (1 << bits) - 1
@@ -376,16 +388,7 @@ def zorder_collection(
     else:
         clustered = z.repartitionByRange("_z")
     clustered = clustered.sortWithinPartitions("_z").drop("_zx", "_zy", "_z")
-
-    tmp, old = path + "__staging", path + "__old"
-    clustered.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _commit_generation(root, name, clustered.write.parquet, None)
 
 
 def merge_frame(
@@ -462,7 +465,7 @@ def merge_collection(
     exactly one anti-join keyed on the merge key; no per-row RPCs
     (the reference backfills properties per-uuid over HTTP,
     notebooks/7-…ipynb cell 22 — that loop is this one plan here).
-    Promotion uses the same staged atomic swap as update_collection.
+    Committed by :func:`_commit_generation`, flagging indexes ``merge``.
     Returns {"upserted": n, "deleted": n, "rows": final_count}.
     """
     path = os.path.join(root, name)
@@ -485,15 +488,7 @@ def merge_collection(
     # report 0 deletes): semi-join the delete-winner keys to the target.
     delete_keys = latest.filter(F.col(op_col) == "delete").select(key_col)
     n_del = target.join(delete_keys, key_col, "left_semi").count()
-    tmp, old = path + "__staging", path + "__old"
-    merged.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _commit_generation(root, name, merged.write.parquet, "merge")
     rows = spark.read.parquet(path).count()
     return {"upserted": n_up, "deleted": n_del, "rows": rows}
 
@@ -510,20 +505,10 @@ def snapshot_collection(root: str, name: str, tag: str) -> str:
     """
     if "@" in name:
         raise ValueError("collection names may not contain '@'")
-    src = os.path.join(root, name)
     dst = os.path.join(root, f"{name}@{tag}")
     if os.path.isdir(dst):
         raise ValueError(f"snapshot tag exists: {tag}")
-    os.makedirs(dst)
-    for dirpath, dirs, files in os.walk(src):
-        rel = os.path.relpath(dirpath, src)
-        for d in dirs:
-            os.makedirs(os.path.join(dst, rel, d), exist_ok=True)
-        for f in files:
-            os.link(
-                os.path.join(dirpath, f),
-                os.path.join(dst, rel if rel != "." else "", f),
-            )
+    _link_tree(os.path.join(root, name), dst)
     return dst
 
 
@@ -556,8 +541,6 @@ def expire_snapshots(
     """
     if keep_last < 0:
         raise ValueError("keep_last must be >= 0")
-    import shutil
-
     tags = list_snapshots(root, name)
     by_age = sorted(
         tags,
@@ -596,9 +579,10 @@ def recover_collection(root: str, name: str) -> str:
     The _SUCCESS marker is the completeness criterion: Spark commits it
     only after every task output is in place, so its presence means the
     staging directory is a fully written generation.
-    """
-    import shutil
 
+    The last two actions change the live generation, so they flag the
+    collection's indexes ``recover`` before renaming anything.
+    """
     path = os.path.join(root, name)
     tmp, old = path + "__staging", path + "__old"
     has_path, has_tmp, has_old = (
@@ -617,11 +601,13 @@ def recover_collection(root: str, name: str) -> str:
             action = "discarded_old" if action == "clean" else action
         return action
     if tmp_complete:
+        mark_indexes_stale(root, name, "recover")
         os.rename(tmp, path)
         if has_old:
             shutil.rmtree(old)
         return "promoted_staging"
     if has_old:
+        mark_indexes_stale(root, name, "recover")
         if has_tmp:
             shutil.rmtree(tmp)
         os.rename(old, path)
@@ -633,30 +619,10 @@ def recover_collection(root: str, name: str) -> str:
 
 
 def rollback_collection(root: str, name: str, tag: str) -> None:
-    """Restore the collection to a tagged snapshot (the snapshot remains).
-    Same staged promotion as every other writer: link the snapshot into a
-    staging dir, swap, delete the replaced generation."""
+    """Restore the collection to a tagged snapshot (the snapshot remains):
+    the snapshot is hard-linked into the staging directory and committed
+    like any other generation."""
     src = os.path.join(root, f"{name}@{tag}")
     if not os.path.isdir(src):
         raise ValueError(f"no such snapshot: {tag}")
-    path = os.path.join(root, name)
-    tmp, old = path + "__staging", path + "__old"
-    import shutil
-
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    for dirpath, dirs, files in os.walk(src):
-        rel = os.path.relpath(dirpath, src)
-        for d in dirs:
-            os.makedirs(os.path.join(tmp, rel, d), exist_ok=True)
-        for f in files:
-            os.link(
-                os.path.join(dirpath, f),
-                os.path.join(tmp, rel if rel != "." else "", f),
-            )
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _commit_generation(root, name, lambda tmp: _link_tree(src, tmp), "rollback")

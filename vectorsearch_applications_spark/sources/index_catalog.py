@@ -17,6 +17,21 @@ next to a collection root, how big is each, and how much tombstone
 debt has accumulated since the last compaction (the live view pays one
 broadcast anti-join per read until then — sources/tombstones.py).
 
+Staleness marker: an index follows the collection it was built from
+only through its own append/rebuild verbs, so a collection write that
+changes rows the index does not know about flags every existing index
+directory of the collection with ``_stale.json`` = ``{"verb": <verb>}``
+(:func:`mark_indexes_stale`, called by the generation commit in
+sources/collections.py before the new generation is promoted). Implicit
+reuse skips a flagged index (in-plan scoring is always correct). The
+verb decides the repair: ``batch_index_data`` (a ``batch_index`` or
+``batch_append``) leaves the standing rows alone, so the facade's
+``append_to_*_index`` with the same batch repairs it; every other verb
+(``create_collection``, ``update``, ``merge``, ``rollback``,
+``recover``, ``fold``) changed standing rows, so only a rebuild does
+(``*_save_index`` starts from :func:`index_reset`'s clean slate, which
+drops the marker). A flag is never downgraded to ``batch_index_data``.
+
 Reference analog: the collection introspection surface
 (src/database/weaviate_interface_v4.py show_all_collections /
 show_collection_config) — the reference's server exposes its schema
@@ -31,6 +46,7 @@ the test tables).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from dataclasses import dataclass
@@ -38,7 +54,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from . import tombstones as _tomb
-from .io import one_slice_df, read_parquet
+from .io import _data_files, one_slice_df, read_parquet
 
 
 @dataclass(frozen=True)
@@ -90,6 +106,40 @@ def index_dir(root: str, name: str, suffix: str) -> str:
     """``<root>/<name>__<suffix>`` — the only place index directory
     names are built."""
     return os.path.join(root, f"{name}__{suffix}")
+
+
+def _stale_path(root: str, name: str, suffix: str) -> str:
+    return os.path.join(index_dir(root, name, suffix), "_stale.json")
+
+
+def mark_indexes_stale(root: str, name: str, verb: str) -> None:
+    """Flag every existing index directory of the collection stale
+    after ``verb``. A ``batch_index_data`` flag never overwrites another
+    verb's: that index already lost standing rows, and the next append
+    must not pass it as repaired."""
+    for suffix in FAMILIES:
+        p = _stale_path(root, name, suffix)
+        if not os.path.isdir(os.path.dirname(p)):
+            continue
+        if verb == "batch_index_data" and os.path.isfile(p):
+            continue
+        with open(p, "w") as f:
+            json.dump({"verb": verb}, f)
+
+
+def stale_meta(root: str, name: str, suffix: str) -> dict | None:
+    """The index's staleness marker (``{"verb": ...}``), None if fresh."""
+    p = _stale_path(root, name, suffix)
+    if not os.path.isfile(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def clear_stale(root: str, name: str, suffix: str) -> None:
+    p = _stale_path(root, name, suffix)
+    if os.path.isfile(p):
+        os.remove(p)
 
 
 def index_reset(root: str, name: str, suffix: str) -> str:
@@ -187,12 +237,7 @@ def index_inventory(spark, root: str) -> DataFrame:
             continue
         table = spark.read.parquet(path)
         n = table.count()
-        n_files = sum(
-            1
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        n_files = len(_data_files(path))
         tombs = _tomb.load_tombstones(spark, base, fam.id_col)
         n_tombs = tombs.count() if tombs is not None else 0
         live = (

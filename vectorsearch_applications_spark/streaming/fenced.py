@@ -6,23 +6,24 @@ foreachBatch replays batches at-least-once; an idempotent apply (the LWW
 CDC merge) absorbs that for free, but a FOLD (x ⊕ batch) double-applies
 on replay. The fence: the applied batch_id is written as an
 underscore-prefixed sidecar (``_applied_batch``, invisible to parquet
-readers like ``_SUCCESS``) INSIDE the staging directory before the
-atomic rename, so the folded state and its fence promote together —
-there is no crash window where one is committed without the other, and
-a replayed batch (checkpoint says unprocessed, fence says applied) is
-skipped.
+readers like ``_SUCCESS``) INSIDE the staged generation, so the folded
+state and its fence promote together — there is no crash window where
+one is committed without the other, and a replayed batch (checkpoint
+says unprocessed, fence says applied) is skipped.
 
-The staged swap (stage → move-aside → rename → delete) is the same
-crash-recoverable promotion discipline as every collection writer in
-sources/collections.py.
+The generation is committed by sources/collections.py
+``_commit_generation``, the one crash-recoverable promotion every
+collection writer uses; a fold changes rows, so it flags the
+collection's persisted indexes ``fold``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.collections import _commit_generation
 
 _FENCE = "_applied_batch"
 
@@ -59,17 +60,13 @@ def fenced_fold_stream(
             return  # replayed batch already folded into this generation
         current = spark.read.parquet(path) if os.path.isdir(path) else None
         updated = fold(current, batch_df)
-        tmp, old = path + "__staging", path + "__old"
-        updated.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _FENCE), "w") as f:
-            f.write(str(batch_id))
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+
+        def write(tmp: str) -> None:
+            updated.write.parquet(tmp)
+            with open(os.path.join(tmp, _FENCE), "w") as f:
+                f.write(str(batch_id))
+
+        _commit_generation(root, name, write, "fold")
 
     return (
         stream.writeStream.foreachBatch(apply_batch)
